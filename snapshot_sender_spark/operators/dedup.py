@@ -166,9 +166,7 @@ def hashed_shingle_sets(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
             ).alias("shingles"),
         )
 
-    id_c, sh_c = session_exprs(
-        df.sparkSession, f"dedup_shingle_cols:{text_col}:{id_col}", build
-    )
+    id_c, sh_c = session_exprs(df.sparkSession, ("dedup_shingle_cols", text_col, id_col), build)
     return df.select(id_c, sh_c)
 
 

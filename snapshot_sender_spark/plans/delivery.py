@@ -13,7 +13,8 @@ Spark-first re-expression (one declarative DataFrame plan, §3.1 of SURVEY.md):
                                                              reference's memo cache
                                                              HttpKeyService.kt:48-50
       → AES-CTR decrypt (Arrow-vectorized pandas UDF)     -- CPU-only stage
-      → deliver: per-file .json.gz + .finished markers    -- foreachPartition sink
+      → deliver: gunzip check + record count, per-file    -- receipt sink, run once
+                 .json.gz + .finished markers                (mapInPandas → receipts)
       → parse: gunzip → explode lines → from_json          -- record-level view
 
 Everything before the decrypt UDF is JVM-side; the cheap filters run before the
@@ -29,9 +30,12 @@ chunk retry, JobConfiguration.kt:46-50).
 
 from __future__ import annotations
 
+import gzip
+import io
 import os
+import zlib
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -110,10 +114,9 @@ class RunConfig:
 
 @dataclass
 class DeliveryResult:
-    delivered: DataFrame  # one row per delivered file (the manifest)
+    delivered: DataFrame  # one decrypted row per file to deliver
     rejected: DataFrame  # filename-grammar rejects (HttpWriter.kt:121-127)
     blocked: DataFrame  # blocked-topic rows (FilterBlockedTopicsUtils.kt:24)
-    counters: dict = field(default_factory=dict)
 
 
 def key_lookup_local(ciphertext_pairs: list[tuple[str, str]]) -> list[tuple[str, str, str]]:
@@ -138,11 +141,26 @@ def build_decrypted(
     meta = read_encryption_meta(spark, input_dir)
     files = read_encrypted_files(spark, input_dir, meta=meta)
 
-    # 1. idempotent-restart filter (FinishedFilterProcessor.kt:17-27)
+    # 1. idempotent-restart filter (FinishedFilterProcessor.kt:17-27), on the
+    #    content side and on the key source alike
     if not cfg.reprocess_files:
-        finished = read_finished_markers(spark, status_dir)
-        files = files.join(F.broadcast(finished), "fileName", "left_anti")
+        finished = F.broadcast(read_finished_markers(spark, status_dir))
+        files = files.join(finished, "fileName", "left_anti")
+        meta = meta.join(finished, "fileName", "left_anti")
+    return route_and_decrypt(spark, files, meta, key_lookup, cfg.blocked_topics)
 
+
+def route_and_decrypt(
+    spark: SparkSession,
+    files: DataFrame,
+    meta: DataFrame,
+    key_lookup: Callable[[list[tuple[str, str]]], list[tuple[str, str, str]]],
+    blocked_topics: str = "",
+) -> DeliveryResult:
+    """Steps 2–6 of the plan, shared by the batch job and each streaming
+    micro-batch: ``files`` holds the encrypted objects joined with their
+    metadata (path, fileName, content, iv, dataKeyEncryptionKeyId,
+    cipherText), ``meta`` the metadata rows of the same files."""
     # 2. filename grammar split: valid → pipeline, invalid → rejects sink.
     #    The reference validates the *decrypted* name — DecryptionProcessor.kt:40
     #    strips .enc before HttpWriter.kt:121-127 parses it — so validate the
@@ -165,7 +183,7 @@ def build_decrypted(
     )
 
     # 4. blocked-topic routing (FilterBlockedTopicsUtils.kt:15-30)
-    blocked_list = text.parse_blocked_topics(cfg.blocked_topics)
+    blocked_list = text.parse_blocked_topics(blocked_topics)
     blocked = valid.filter(~text.topic_not_blocked(F.col("topic"), blocked_list)).select(
         "path", "fileName", "topic"
     )
@@ -174,19 +192,14 @@ def build_decrypted(
     # 5. data-key resolution: distinct keys → external lookup → broadcast join.
     #    distinct() is tiny (a handful of keys per run); collecting it to the
     #    driver IS the operator — one network call per distinct key. The key
-    #    set comes from the metadata side alone (minus finished files), never
-    #    touching the content scan: this mirrors the reference's processor
-    #    order (finishedFilter → dataKey, JobConfiguration.kt:61-64 — name
-    #    validation and topic blocking happen later, in the writer), and keeps
-    #    the driver job O(metadata), not O(objects).
-    key_source = meta
-    if not cfg.reprocess_files:
-        key_source = key_source.join(
-            F.broadcast(read_finished_markers(spark, status_dir)), "fileName", "left_anti"
-        )
+    #    set comes from the metadata side alone, never touching the content
+    #    scan: this mirrors the reference's processor order (finishedFilter →
+    #    dataKey, JobConfiguration.kt:61-64 — name validation and topic
+    #    blocking happen later, in the writer), and keeps the driver job
+    #    O(metadata), not O(objects).
     pairs = [
         (r["dataKeyEncryptionKeyId"], r["cipherText"])
-        for r in key_source.select("dataKeyEncryptionKeyId", "cipherText").distinct().collect()
+        for r in meta.select("dataKeyEncryptionKeyId", "cipherText").distinct().collect()
     ]
     resolved = key_lookup(pairs)
     # VALUES LocalRelation, not createDataFrame: the pickled-RDD scan the
@@ -208,24 +221,49 @@ def build_decrypted(
     return DeliveryResult(delivered=decrypted, rejected=rejected, blocked=blocked)
 
 
-def deliver(result: DeliveryResult, output_dir: str, status_dir: str) -> DataFrame:
-    """Materialize the sink: write each file's still-gzipped decrypted bytes to
-    ``output_dir/<name .txt.gz→.json.gz>`` and a ``<original>.finished`` marker
-    (HttpWriter.kt:58,95-96; S3StatusFileWriter.kt:19-52). Runs distributed via
-    foreachPartition — at-least-once, idempotent by marker anti-join on restart.
+RECEIPT_SCHEMA = (
+    "fileName string, outputFileName string, topic string, database string, "
+    "collection string, payload_bytes long, records long"
+)
 
-    Returns the manifest DataFrame (fileName, outputFileName, topic, database,
-    collection, byte counts) — the counts the reference keeps in DynamoDB are
-    *derived* from this manifest by aggregation (deterministic), instead of
-    incremental counter updates (DynamoDBExportStatusService.kt:38-44)."""
+
+def _count_records(file_name: str, payload: bytes | None) -> int:
+    """Records in one decrypted payload: the lines of the gunzipped bytes that
+    keep text after trimming spaces — what ``parse_records(...).count()``
+    counts. A NULL or non-gzip payload raises an error naming the file."""
+    if payload is None:
+        raise ValueError(f"{file_name}: decrypted payload is NULL")
+    try:
+        with gzip.GzipFile(fileobj=io.BytesIO(payload)) as gz:
+            return sum(1 for line in gz if line.strip(b" \n"))
+    except (OSError, EOFError, zlib.error) as e:
+        raise ValueError(f"{file_name}: decrypted payload is not valid gzip ({e})") from e
+
+
+def deliver(result: DeliveryResult, output_dir: str, status_dir: str) -> DataFrame:
+    """Materialize the sink and return its receipts. Per file: check that the
+    decrypted bytes gunzip and count their records, then write the still-gzipped
+    bytes to ``output_dir/<name .txt.gz→.json.gz>`` and a ``<original>.finished``
+    marker (HttpWriter.kt:58,95-96; S3StatusFileWriter.kt:19-52). A NULL or
+    non-gzip payload fails the job with the file's name before that file's
+    output or marker exists, so a rerun tries it again.
+
+    Same shape as ``http_sink.http_deliver``: a ``mapInPandas`` sink run exactly
+    once (eager ``localCheckpoint``), so later actions on the receipts read the
+    stored rows instead of re-running the writes. One receipt per file
+    (fileName, outputFileName, topic, database, collection, payload_bytes,
+    records) — the counts the reference keeps in DynamoDB are *derived* from
+    the receipts by aggregation (deterministic), instead of incremental
+    counter updates (DynamoDBExportStatusService.kt:38-44). At-least-once,
+    idempotent by marker anti-join on restart."""
     os.makedirs(output_dir, exist_ok=True)
     os.makedirs(status_dir, exist_ok=True)
 
-    to_write = result.delivered.select(
+    rows = result.delivered.select(
         "fileName", "outputFileName", "topic", "database", "collection", "decrypted"
     )
 
-    def write_partition(rows):
+    def write_batches(batches):
         # tmp names are per-attempt unique: under speculative execution two
         # attempts of the same partition run CONCURRENTLY, and a shared tmp
         # path would let one attempt truncate the other's half-written file
@@ -234,28 +272,25 @@ def deliver(result: DeliveryResult, output_dir: str, status_dir: str) -> DataFra
         import uuid
 
         nonce = uuid.uuid4().hex
-        for row in rows:
-            out_path = os.path.join(output_dir, row["outputFileName"])
-            tmp = f"{out_path}.{nonce}.tmp"
-            with open(tmp, "wb") as fh:
-                fh.write(bytes(row["decrypted"]))
-            os.replace(tmp, out_path)  # atomic → idempotent under retry
-            marker = os.path.join(status_dir, row["fileName"] + ".finished")
-            mtmp = f"{marker}.{nonce}.tmp"
-            with open(mtmp, "w") as fh:
-                fh.write(f"Finished {row['fileName']}")
-            os.replace(mtmp, marker)
+        for pdf in batches:
+            records = []
+            for row in pdf.itertuples(index=False):
+                records.append(_count_records(row.fileName, row.decrypted))
+                out_path = os.path.join(output_dir, row.outputFileName)
+                tmp = f"{out_path}.{nonce}.tmp"
+                with open(tmp, "wb") as fh:
+                    fh.write(row.decrypted)
+                os.replace(tmp, out_path)  # atomic → idempotent under retry
+                marker = os.path.join(status_dir, row.fileName + ".finished")
+                mtmp = f"{marker}.{nonce}.tmp"
+                with open(mtmp, "w") as fh:
+                    fh.write(f"Finished {row.fileName}")
+                os.replace(mtmp, marker)
+            yield pdf.drop(columns="decrypted").assign(
+                payload_bytes=pdf["decrypted"].map(len), records=records
+            )
 
-    to_write.foreachPartition(write_partition)
-
-    return result.delivered.select(
-        "fileName",
-        "outputFileName",
-        "topic",
-        "database",
-        "collection",
-        F.length("decrypted").alias("payload_bytes"),
-    )
+    return rows.mapInPandas(write_batches, schema=RECEIPT_SCHEMA).localCheckpoint(eager=True)
 
 
 def corrupt_payloads(decrypted: DataFrame) -> DataFrame:

@@ -15,7 +15,6 @@ first-class branch, not an error."""
 from __future__ import annotations
 
 import logging
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -71,12 +70,13 @@ def run_delivery_job(
     # live counters the scheduled pushes read: seeded at ZERO for the metric
     # families the job emits. NOTE a deliberate divergence from the
     # reference here: its Counter.inc() fires per chunk mid-run, so its
-    # scheduled pushes show real progress, whereas Observation results only
-    # materialize after the action completes — so OUR scheduled pushes carry
-    # zeros for the whole run BY CONSTRUCTION, and only push_final() carries
-    # the real totals. The zero-seeding still matters: an empty dict would
-    # make every scheduled push an empty-registry PUT, which REPLACES the
-    # grouping key's metrics at the gateway instead of publishing liveness.
+    # scheduled pushes show real progress, whereas our counters are
+    # aggregated from the sink's receipts after it completes — so OUR
+    # scheduled pushes carry zeros for the whole run BY CONSTRUCTION, and
+    # only push_final() carries the real totals. The zero-seeding still
+    # matters: an empty dict would make every scheduled push an
+    # empty-registry PUT, which REPLACES the grouping key's metrics at the
+    # gateway instead of publishing liveness.
     counters_box: dict = {name: 0 for name in mx.DELIVERY_COUNTER_FAMILIES}
     lifecycle = None
     if gateway is not None:
@@ -112,15 +112,20 @@ def _run_delivery_job_body(
     files_exported, key_lookup, counters_box, lifecycle,
 ) -> JobReport:
     result = dlv.build_decrypted(spark, input_dir, status_dir, cfg, key_lookup=key_lookup)
-    instrumented, obs = mx.observe_delivery(result.delivered)
-    manifest = dlv.deliver(
-        dlv.DeliveryResult(instrumented, result.rejected, result.blocked), output_dir, status_dir
-    )
-    n_delivered = manifest.count()
+    receipts = dlv.deliver(result, output_dir, status_dir)
+    # every count the job reports comes from the receipts of the one sink pass
+    files_f, bytes_f, topics_f = mx.DELIVERY_COUNTER_FAMILIES
+    totals = receipts.agg(
+        F.count(F.lit(1)).alias(files_f),
+        F.coalesce(F.sum("payload_bytes"), F.lit(0)).alias(bytes_f),
+        F.count_distinct("topic").alias(topics_f),
+        F.coalesce(F.sum("records"), F.lit(0)).alias("records"),
+    ).first()
+    counters = {name: totals[name] for name in mx.DELIVERY_COUNTER_FAMILIES}
+    n_delivered = totals[files_f]
+    n_records = totals["records"]
     n_rejected = result.rejected.count()
     n_blocked = result.blocked.count()
-    records = dlv.parse_records(result.delivered)
-    n_records = records.count() if n_delivered else 0
 
     if files_exported is None:
         files_exported = n_delivered + n_blocked
@@ -154,10 +159,6 @@ def _run_delivery_job_body(
             cfg.correlation_id, cfg.export_date, cfg.snapshot_type, completion
         )
 
-    try:
-        counters = dict(obs.get) if n_delivered else {}
-    except Exception:
-        counters = {}
     if lifecycle is not None:
         # afterJob pushFinalMetrics(): cancel schedule → final push of the
         # job's counters → delete-after-scrape of the grouping key. Delivery

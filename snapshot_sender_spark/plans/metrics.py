@@ -2,10 +2,11 @@
 families (MetricsConfiguration.kt:16-126 — 17 counters, 1 gauge, 10 timers),
 re-expressed Spark-first.
 
-Mechanism: ``pyspark.sql.Observation`` + ``df.observe(...)`` attaches named
-aggregates to a plan; they are computed *inside* the job that materializes the
-sink (no extra pass over data) — the Spark analog of the reference's
-@PrometheusTimeMethod + counter beans. Values surface as a plain dict and are
+Mechanism: ``pyspark.sql.Observation`` + ``df.observe(...)`` (``observe_counts``)
+attaches named aggregates to a plan; they are computed *inside* the job that
+materializes it (no extra pass over data) — the Spark analog of the reference's
+@PrometheusTimeMethod + counter beans. The delivery job's family is aggregated
+from the receipts its sink stores (plans/job.py). Values surface as a plain dict and are
 optionally pushed to a Prometheus pushgateway when ``prometheus_client`` is
 importable (gated — not present in this container).
 
@@ -27,8 +28,8 @@ from pyspark.sql import functions as F
 logger = logging.getLogger(__name__)
 
 # the delivery job's metric families — single source of truth for both the
-# in-flight observation aliases (observe_delivery) and the zero-seeded live
-# counter dict the pushgateway scheduler reads (plans/job.py)
+# receipt aggregation and the zero-seeded live counter dict the pushgateway
+# scheduler reads (plans/job.py)
 DELIVERY_COUNTER_FAMILIES = (
     "snapshot_sender_files_sent_success",
     "snapshot_sender_bytes_sent",
@@ -49,20 +50,6 @@ def observe_counts(
         for name, cond in named_conditions.items()
     ]
     return df.observe(obs, *aggs), obs
-
-
-def observe_delivery(decrypted: DataFrame) -> tuple[DataFrame, Observation]:
-    """The reference's delivery counter family, computed in-flight by the same
-    job that runs the sink."""
-    obs = Observation("delivery_metrics")
-    files_f, bytes_f, topics_f = DELIVERY_COUNTER_FAMILIES
-    instrumented = decrypted.observe(
-        obs,
-        F.count(F.lit(1)).alias(files_f),
-        F.sum(F.length("decrypted")).alias(bytes_f),
-        F.approx_count_distinct("topic").alias(topics_f),
-    )
-    return instrumented, obs
 
 
 def pushgateway_group_path(job: str, grouping: dict[str, str]) -> str:
@@ -178,8 +165,8 @@ class PushGatewayLifecycle:
     series behind.
 
     Spark-first shape: the scheduler is a single daemon thread on the DRIVER
-    reading ``counters_fn()`` (typically Observation results — computed by the
-    executors inside the delivering job, O(metrics) driver state); the
+    reading ``counters_fn()`` (typically totals aggregated from the delivery
+    sink's receipts, O(metrics) driver state); the
     gateway is injected (``PrometheusGateway`` in production, a recording stub
     in tests — prometheus_client isn't in this container)."""
 

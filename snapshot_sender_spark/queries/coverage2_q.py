@@ -365,7 +365,7 @@ def window_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_stats_arrow_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow-native scalar UDF (Spark 4.1 `arrow_udf`): the batch arrives as a
     pyarrow.Array and is processed entirely with pyarrow.compute kernels —
-    no pandas materialization, no per-row Python. Counts chars, \S+ tokens,
+    no pandas materialization, no per-row Python. Counts chars, \\S+ tokens,
     and 'e' occurrences per document; all integers, so the oracle is exact.
     This is the third vectorized-UDF tier the engine declares (pandas UDF →
     mapInArrow → arrow_udf), the one with zero conversion overhead."""

@@ -57,30 +57,19 @@ def get_spark(
         # maxBytesPerBatch is the direct memory-safety knob: a batch closes
         # when EITHER cap is hit, so wide binary rows are byte-bounded
         # (32 MB × workers in flight) while narrow rows fill 10k-row batches.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_MAX_RECORDS", "10000"),
-        )
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_MAX_BYTES", "32m"),
-        )
-        # Split sizing stays at the Spark defaults (128 MB / 4 MB), overridable
-        # via env for other deployments. Round 13 measurement: the previous
-        # local tuning (1 MB splits / 64 KB open cost) gave NO parallelism on
-        # the single-row-group testdata parquet (a task only reads row groups
-        # whose midpoint lands in its split → 1 real + ~30 empty tasks per
-        # scan) and it fragmented the binaryFile source into under-packed
-        # splits; at the defaults a lineitem scan-agg dropped 0.34s → 0.17s
-        # and the delivery binaryFile scan 0.42s → 0.22s (min-of-4, local[32]).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "128m"),
-        )
-        .config(
-            "spark.sql.files.openCostInBytes",
-            os.environ.get("SPARK_GRAFT_OPEN_COST_BYTES", "4m"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", "32m")
+        # Split sizing stays at the Spark defaults (128 MB / 4 MB); other
+        # deployments override it through ``extra_conf``. Round 13
+        # measurement: the previous local tuning (1 MB splits / 64 KB open
+        # cost) gave NO parallelism on the single-row-group testdata parquet
+        # (a task only reads row groups whose midpoint lands in its split →
+        # 1 real + ~30 empty tasks per scan) and it fragmented the binaryFile
+        # source into under-packed splits; at the defaults a lineitem
+        # scan-agg dropped 0.34s → 0.17s and the delivery binaryFile scan
+        # 0.42s → 0.22s (min-of-4, local[32]).
+        .config("spark.sql.files.maxPartitionBytes", "128m")
+        .config("spark.sql.files.openCostInBytes", "4m")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )

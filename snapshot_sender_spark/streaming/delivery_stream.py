@@ -24,7 +24,6 @@ import zlib
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions import crypto, text
 from ..plans import delivery
 from ..sources.listing import ENCRYPTION_META_SCHEMA
 from ..util import local_strings_df
@@ -85,7 +84,8 @@ def poll_arrivals(
 
 
 def read_batch_objects(spark: SparkSession, input_dir: str, names) -> DataFrame:
-    """Read EXACTLY one micro-batch's encrypted objects as (fileName, content).
+    """Read EXACTLY one micro-batch's encrypted objects as (path, fileName,
+    content).
 
     The batch's file names are already known driver-side (the tiny metadata
     rows ARE the arrival signal), so the binaryFile source is given the
@@ -126,6 +126,7 @@ def read_batch_objects(spark: SparkSession, input_dir: str, names) -> DataFrame:
                 .option("ignoreMissingFiles", "true")
                 .load(paths)
                 .select(
+                    F.col("path"),
                     F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"),
                     F.col("content"),
                 )
@@ -148,11 +149,12 @@ def run_streaming_delivery(
 
     foreachBatch body = the batch pipeline stages on the batch's file set:
     metadata rows → content join (read per batch) → grammar/topic → key
-    broadcast → decrypt → the batch ``deliver()`` foreachPartition sink
-    (per-file atomic rename + markers, fully distributed — decrypted bytes
-    never reach the driver). Epoch-id marker makes redelivery of a replayed
-    batch a no-op; the only driver-side collects are the metadata listing
-    delta and the distinct-key set (both O(files-per-batch), not O(bytes))."""
+    broadcast → decrypt (``delivery.route_and_decrypt``) → the batch
+    ``deliver()`` receipt sink (gunzip check, per-file atomic rename +
+    markers, fully distributed — decrypted bytes never reach the driver).
+    Epoch-id marker makes redelivery of a replayed batch a no-op; the only
+    driver-side collects are the metadata listing delta and the distinct-key
+    set (both O(files-per-batch), not O(bytes))."""
     os.makedirs(output_dir, exist_ok=True)
     os.makedirs(status_dir, exist_ok=True)
     epochs: list[int] = []
@@ -229,55 +231,14 @@ def run_streaming_delivery(
                 ],
                 [f.name for f in ENCRYPTION_META_SCHEMA.fields],
             )
-            files = objects.join(F.broadcast(meta), "fileName")
-            files = files.withColumn(
-                "decryptedFileName", text.strip_enc_suffix(F.col("fileName"))
+            # the batch plan's routing, key lookup and decrypt, on this batch's
+            # objects and metadata; the stream blocks no topics
+            result = delivery.route_and_decrypt(
+                spark, objects.join(F.broadcast(meta), "fileName"), meta, key_lookup
             )
-            rejected = files.filter(
-                ~text.filename_is_valid(F.col("decryptedFileName"))
-            ).select("fileName")
-            files = files.filter(text.filename_is_valid(F.col("decryptedFileName")))
-            files = (
-                files.withColumn("database", text.extract_database(F.col("decryptedFileName")))
-                .withColumn("collection", text.extract_collection(F.col("decryptedFileName")))
-                .withColumn(
-                    "topic",
-                    text.derive_topic(
-                        F.col("decryptedFileName"), F.col("database"), F.col("collection")
-                    ),
-                )
-            )
-            # distinct-key collect IS the operator: one external key-service
-            # call per distinct (keyId, cipherText) — O(keys), never O(bytes)
-            pairs = [
-                (r["dataKeyEncryptionKeyId"], r["cipherText"])
-                for r in files.select("dataKeyEncryptionKeyId", "cipherText").distinct().collect()
-            ]
-            resolved = key_lookup(pairs)
-            keys_df = local_strings_df(
-                spark,
-                [tuple(r) for r in resolved],
-                ["dataKeyEncryptionKeyId", "cipherText", "plaintextKey"],
-            )
-            decrypted = (
-                files.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"])
-                .withColumn(
-                    "decrypted",
-                    crypto.aes_ctr_decrypt(F.col("content"), F.col("plaintextKey"), F.col("iv")),
-                )
-                .withColumn("outputFileName", text.rename_output(F.col("decryptedFileName")))
-            )
-            # the batch sink: foreachPartition atomic write + markers — the
+            # the batch receipt sink: per-file atomic write + markers — the
             # micro-batch is delivered by the executors, not the driver
-            delivery.deliver(
-                delivery.DeliveryResult(
-                    delivered=decrypted,
-                    rejected=rejected,
-                    blocked=decrypted.select("fileName", "topic").limit(0),
-                ),
-                output_dir,
-                status_dir,
-            )
+            delivery.deliver(result, output_dir, status_dir)
         with open(epoch_marker, "w") as fh:
             fh.write(json.dumps(fp))
         epochs.append(epoch_id)

@@ -5,7 +5,7 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from collections.abc import Callable
+from collections.abc import Callable, Hashable
 
 
 def write_once(final_dir: str, write_fn: Callable[[str], None], probe: str | None = None) -> None:
@@ -90,8 +90,9 @@ def local_strings_df(spark, rows, colnames):
 _EXPR_CACHE: dict = {}
 
 
-def session_exprs(spark, key: str, build: Callable[[], tuple]):
-    """Return ``build()``'s tuple of Columns, memoized per (JVM gateway, key)."""
+def session_exprs(spark, key: Hashable, build: Callable[[], tuple]):
+    """Return ``build()``'s tuple of Columns, memoized per (JVM gateway, key).
+    Keys that carry column names are tuples, so no two name lists collide."""
     gw = spark.sparkContext._gateway
     hit = _EXPR_CACHE.get(key)
     if hit is not None and hit[0] is gw:

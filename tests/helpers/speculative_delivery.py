@@ -1,6 +1,6 @@
 """Subprocess harness for the speculative-execution idempotence test.
 
-Runs the delivery foreachPartition sink in its OWN SparkSession with
+Runs the delivery receipt sink in its OWN SparkSession with
 ``spark.speculation=true`` (a core conf — it cannot be enabled on the shared
 test session) and one induced straggler task. NOTE: Spark's TaskSchedulerImpl
 only starts the speculation thread on cluster backends, so local mode never
@@ -15,6 +15,7 @@ Prints one JSON line with what happened; the pytest side asserts on it.
 Usage: python speculative_delivery.py <tmpdir>
 """
 
+import gzip
 import json
 import os
 import sys
@@ -55,7 +56,7 @@ def main() -> None:
             "db.core.claimant",
             "db",
             "core.claimant",
-            bytearray(f"payload-{i}".encode() * 50),
+            bytearray(gzip.compress(f"payload-{i}".encode() * 50, mtime=0)),
         )
         for i in range(8)
     ]

@@ -361,6 +361,19 @@ def test_parse_records_kernel_blank_and_null_semantics(spark, tmp_path):
     assert files == {"f1"}  # the NULL-content row produced nothing
     assert lines == ["a", "\tx", "\rb", "bad��line"]
 
+    # the delivery sink's receipt counts the same lines as records
+    delivered = spark.createDataFrame(
+        [("f1.txt.gz.enc", "f1.json.gz", "t", "db", "coll", bytearray(gz.compress(body)))],
+        "fileName string, outputFileName string, topic string, database string, "
+        "collection string, decrypted binary",
+    )
+    receipt = delivery.deliver(
+        delivery.DeliveryResult(delivered, delivered.limit(0), delivered.limit(0)),
+        str(tmp_path / "out"),
+        str(tmp_path / "status"),
+    ).first()
+    assert receipt["records"] == len(lines)
+
 
 def test_parse_records_kernel_group_flush_identical(monkeypatch):
     """The 2 GiB-cliff guard (r14): when the decompressed-payload group hits

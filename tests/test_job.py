@@ -5,7 +5,9 @@ components operator."""
 import gzip
 import json
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from snapshot_sender_spark.operators.graph import connected_components
@@ -72,6 +74,29 @@ def test_full_job_heartbeat_skips_monitoring(spark, tmp_path):
         spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "st"), cfg
     )
     assert report.monitoring_message is None  # JobCompletionNotificationListener.kt:60-75
+
+
+def test_corrupt_payload_fails_job_before_its_output_and_marker(spark, tmp_path):
+    """A file whose bytes don't decrypt to valid gzip fails the job with the
+    file's name before its output or .finished marker is written, so a rerun
+    tries it again instead of reporting success with 0 delivered."""
+    f = fx.generate(str(tmp_path), n_files=4, records_per_file=5, seed=13)
+    victim = f.files[1]
+    path = os.path.join(f.input_dir, victim)
+    data = bytearray(open(path, "rb").read())
+    data[:16] = b"\x00" * 16  # wrong ciphertext → bad gzip
+    with open(path, "wb") as fh:
+        fh.write(bytes(data))
+    cfg = delivery.RunConfig(correlation_id="corrupt", topic_name=f.topic)
+
+    for _ in range(2):  # the first run, then the rerun
+        with pytest.raises(Exception, match=re.escape(victim)):
+            job.run_delivery_job(
+                spark, f.input_dir, f.status_dir, f.output_dir,
+                str(tmp_path / "status_table"), cfg,
+            )
+        assert victim.replace(".txt.gz.enc", ".json.gz") not in os.listdir(f.output_dir)
+        assert victim + ".finished" not in os.listdir(f.status_dir)
 
 
 def test_connected_components_basic(spark):

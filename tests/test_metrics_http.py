@@ -4,13 +4,14 @@ against an in-process HTTP receiver."""
 import gzip
 import http.server
 import json
+import os
 import threading
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from snapshot_sender_spark.plans import delivery, http_sink, metrics
+from snapshot_sender_spark.plans import delivery, http_sink, job, metrics
 from snapshot_sender_spark.sources import fixtures as fx
 
 
@@ -32,14 +33,20 @@ def test_observe_counts(spark, sf_dir):
 
 
 def test_observe_delivery_counters(spark, tmp_path):
+    """The job report's counter family, aggregated from the sink's receipts."""
     f = fx.generate(str(tmp_path), n_files=4, records_per_file=10, seed=3)
     cfg = delivery.RunConfig(correlation_id="m1", topic_name=f.topic)
-    result = delivery.build_decrypted(spark, f.input_dir, f.status_dir, cfg)
-    instrumented, obs = metrics.observe_delivery(result.delivered)
-    instrumented.count()
-    got = obs.get
+    got = job.run_delivery_job(
+        spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "st"), cfg
+    ).counters
+    payload_bytes = sum(
+        os.path.getsize(os.path.join(f.output_dir, n))
+        for n in os.listdir(f.output_dir)
+        if n.endswith(".json.gz")
+    )
     assert got["snapshot_sender_files_sent_success"] == 4
     assert got["snapshot_sender_bytes_sent"] > 0
+    assert got["snapshot_sender_bytes_sent"] == payload_bytes
     assert got["snapshot_sender_topics_seen"] == 1
 
 

@@ -426,7 +426,7 @@ def test_streaming_delivery_no_driver_content_collect():
     """The streaming delivery path must never funnel payload bytes through the
     driver: every driver-side collect in the module is metadata- or key-scoped
     (O(files) / O(distinct keys)), and the sink is the distributed batch
-    ``deliver()`` foreachPartition writer. Guards the round-2 judge finding
+    ``deliver()`` receipt sink. Guards the round-2 judge finding
     (driver-side collect of the decrypted column) against regression."""
     import inspect
 

@@ -203,7 +203,7 @@ def test_duplicate_attempts_race_is_idempotent(spark, tmp_path):
             "db.core.claimant",
             "db",
             "core.claimant",
-            bytearray(f"payload-{i}|".encode() * 64),
+            bytearray(gzip.compress(f"payload-{i}|".encode() * 64, mtime=0)),
             copy,
         )
         for i in range(8)
@@ -234,7 +234,7 @@ def test_duplicate_attempts_race_is_idempotent(spark, tmp_path):
         data = open(
             os.path.join(out_dir, f"db.core.claimant-000-001-{i:06d}.json.gz"), "rb"
         ).read()
-        assert data == f"payload-{i}|".encode() * 64
+        assert data == gzip.compress(f"payload-{i}|".encode() * 64, mtime=0)
     markers = sorted(os.listdir(status_dir))
     assert markers == sorted(f[0] + ".finished" for f in files[::2])
 

@@ -394,3 +394,20 @@ def test_shingle_expr_memo_plan_identity(spark):
     wo = warm._jdf.queryExecution().optimizedPlan()
     assert co.sameResult(wo) and wo.sameResult(co)
     assert cold.schema == warm.schema
+
+
+def test_shingle_expr_memo_keys_do_not_collide(spark):
+    """The memo key holds the column names as a tuple: ('a:b', 'c') and
+    ('a', 'b:c') joined with ':' would be the same string, and the second
+    build would reuse the first one's Columns."""
+    from snapshot_sender_spark import util
+    from snapshot_sender_spark.operators import dedup
+
+    df = spark.createDataFrame(
+        [("red fox jumps", 1, "blue whale sings", 2)], "`a:b` string, c long, a string, `b:c` long"
+    )
+    util._EXPR_CACHE.clear()
+    first = dedup.hashed_shingle_sets(df, "a:b", "c").first()
+    second = dedup.hashed_shingle_sets(df, "a", "b:c").first()
+    assert (first["id"], second["id"]) == (1, 2)
+    assert first["shingles"] != second["shingles"]

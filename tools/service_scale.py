@@ -9,7 +9,7 @@ Usage:
 ``delivery``: generates (once, cached under /tmp) an encrypted fixture of
 n_files x records_per_file, lands every file + one arrival sidecar, then runs
 the full streaming delivery service (arrival signal -> scoped binaryFile
-reads -> key broadcast -> AES-CTR decrypt -> foreachPartition sink + markers
+reads -> key broadcast -> AES-CTR decrypt -> receipt sink + markers
 + epoch commit) over fresh output/status/checkpoint dirs per lap: one cold
 lap, then ``warm_laps`` (default 2) more; prints cold + min-warm seconds.
 
