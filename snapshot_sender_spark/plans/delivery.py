@@ -212,7 +212,10 @@ def route_and_decrypt(
         [tuple(r) for r in (resolved or [])],
         ["dataKeyEncryptionKeyId", "cipherText", "plaintextKey"],
     )
-    valid = valid.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"], "inner")
+    # left join: a file whose key the lookup did not resolve keeps a NULL
+    # plaintextKey, so it decrypts to NULL and the sink fails the job naming
+    # it (a DKS failure fails the job) instead of dropping it silently
+    valid = valid.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"], "left")
 
     # 6. AES-CTR decrypt (vectorized) + rename (DecryptionProcessor.kt:26-41)
     decrypted = valid.withColumn(
@@ -232,7 +235,7 @@ def _count_records(file_name: str, payload: bytes | None) -> int:
     keep text after trimming spaces — what ``parse_records(...).count()``
     counts. A NULL or non-gzip payload raises an error naming the file."""
     if payload is None:
-        raise ValueError(f"{file_name}: decrypted payload is NULL")
+        raise ValueError(f"{file_name}: decrypted payload is NULL (no data key, content or IV)")
     try:
         with gzip.GzipFile(fileobj=io.BytesIO(payload)) as gz:
             return sum(1 for line in gz if line.strip(b" \n"))

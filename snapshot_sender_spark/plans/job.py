@@ -1,8 +1,8 @@
 """Full delivery-job orchestration — the reference's job lifecycle (§3.1/§3.2
 of SURVEY.md) as one function:
 
-    beforeJob → pipeline (source→decrypt→deliver) → afterJob:
-      status upsert (Sent / Received / In_Progress)
+    beforeJob → pipeline (source→decrypt→deliver) → afterJob, on the driver:
+      status upsert (Sent / Received / In_Progress) in the status store
       success indicators (explicit topic, or implicitly on NO_FILES_EXPORTED)
       monitoring message (skipped on NIFI_HEARTBEAT)
       final metrics
@@ -131,21 +131,18 @@ def _run_delivery_job_body(
         files_exported = n_delivered + n_blocked
 
     # ---- afterJob: status upsert (derived counts, not increments) ----------
-    updates = spark.createDataFrame(
-        [(cfg.correlation_id, cfg.topic_name, "Exported", files_exported, n_delivered)],
-        st.STATUS_SCHEMA,
-    )
-    decided = st.collection_status(updates)
-    st.upsert_status(spark, status_table_path, decided)
-    table = st.load_status(spark, status_table_path)
-    row = table.filter(
-        (F.col("CorrelationId") == cfg.correlation_id)
-        & (F.col("CollectionName") == cfg.topic_name)
-    ).first()
-    coll_status = row["CollectionStatus"]
-    completion = {
-        r["CorrelationId"]: r["completion_status"] for r in st.completion_status(table).collect()
-    }[cfg.correlation_id]
+    # driver-side point operations on the small status table, as the
+    # reference's DynamoDB calls are: no Spark job from here on
+    [decided] = st.collection_status([{
+        "CorrelationId": cfg.correlation_id,
+        "CollectionName": cfg.topic_name,
+        "CollectionStatus": "Exported",
+        "FilesExported": files_exported,
+        "FilesSent": n_delivered,
+    }])
+    table = st.upsert_status(status_table_path, [decided])
+    coll_status = decided["CollectionStatus"]
+    completion = st.completion_status(table)[cfg.correlation_id]
 
     # ---- success indicator: explicit on Sent, implicit on Received/empty ---
     indicator = None

@@ -30,10 +30,11 @@ from . import query
     category="cdc",
 )
 def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MERGE INTO emulated with anti-join + union — the engine's status-table
-    upsert (plans/status.py upsert_status; DynamoDB updateItem in the
-    reference, DynamoDBExportStatusService.kt:143-177). Delta MERGE is the
-    cluster-scale form; the anti-join+union plan is dependency-free."""
+    """MERGE INTO emulated with anti-join + union — the relational form of
+    the keyed upsert that plans/status.py upsert_status runs on the driver
+    over the small status table (DynamoDB updateItem in the reference,
+    DynamoDBExportStatusService.kt:143-177). Delta MERGE is the cluster-scale
+    form; the anti-join+union plan is dependency-free."""
     c = load(spark, sf_dir, "customer")
     updates = c.filter(F.col("c_mktsegment") == "BUILDING").withColumn(
         "c_acctbal",

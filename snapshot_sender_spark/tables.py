@@ -47,9 +47,11 @@ _LOAD_CACHE: dict[tuple[str, str], tuple[SparkSession, tuple, DataFrame]] = {}
 
 
 def _table_fingerprint(path: str) -> tuple | None:
-    """(mtime_ns, size) for a parquet file, or the sorted (name, mtime_ns,
-    size) set of its entries for a parquet directory; None when unstatable
-    (never matches, so the reader is rebuilt and raises its own error)."""
+    """(mtime_ns, size) for a parquet file, or the sorted entries of a parquet
+    directory — (name, mtime_ns, size) per file, (name, <its entries>) per
+    subdirectory, so a nested partition file changed in place is seen too;
+    None when unstatable (never matches, so the reader is rebuilt and raises
+    its own error)."""
     try:
         st = os.stat(path)
     except OSError:
@@ -57,12 +59,23 @@ def _table_fingerprint(path: str) -> tuple | None:
     if not os.path.isdir(path):
         return (st.st_mtime_ns, st.st_size)
     try:
-        with os.scandir(path) as it:
-            return tuple(
-                sorted((e.name, e.stat().st_mtime_ns, e.stat().st_size) for e in it)
-            )
+        return _dir_fingerprint(path)
     except OSError:
         return None
+
+
+def _dir_fingerprint(path: str) -> tuple:
+    # DirEntry.is_dir() answers from the directory listing on Linux, so a
+    # flat directory costs one scandir and one stat per file, as before
+    with os.scandir(path) as it:
+        return tuple(
+            sorted(
+                (e.name, _dir_fingerprint(e.path))
+                if e.is_dir()
+                else (e.name, e.stat().st_mtime_ns, e.stat().st_size)
+                for e in it
+            )
+        )
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

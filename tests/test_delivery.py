@@ -5,6 +5,7 @@ on locally generated encrypted fixtures."""
 import gzip
 import json
 import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +15,10 @@ from snapshot_sender_spark.sources import fixtures as fx
 
 N_FILES = 6
 RECORDS = 40
+
+
+def _status_rows(tuples):
+    return [dict(zip(status.STATUS_COLUMNS, t)) for t in tuples]
 
 
 @pytest.fixture(scope="module")
@@ -71,44 +76,36 @@ def test_reprocess_flag_overrides_markers(spark, fixture, run):
     assert result.delivered.count() == N_FILES
 
 
-def test_status_transitions(spark, fixture, run):
+def test_status_transitions(fixture, run):
     # golden assertion 4 (:66-76): Sent n/n for delivered, Received 0/0 for empty
     cfg, _, manifest_rows = run
-    manifest = spark.createDataFrame(manifest_rows)
-    seed = spark.createDataFrame(
+    seed = _status_rows(
         [
             ("123", fixture.topic, "Exported", N_FILES, 0),
             ("321", "db.database.empty", "Exported", 0, 0),
             ("111", "db.database.sent", "Sent", 10, 10),
-        ],
-        status.STATUS_SCHEMA,
+        ]
     )
-    sent = status.sent_counts(manifest, "123")
-    updated = (
-        seed.alias("s")
-        .join(sent.alias("u"), ["CorrelationId", "CollectionName"], "left")
-        .select(
-            "CorrelationId",
-            "CollectionName",
-            "CollectionStatus",
-            "FilesExported",
-            F.coalesce(F.col("u.FilesSent"), F.col("s.FilesSent")).alias("FilesSent"),
-        )
-    )
+    # FilesSent derived from the delivery receipts, per collection
+    sent = Counter(("123", r["topic"]) for r in manifest_rows)
+    updated = [
+        {**r, "FilesSent": sent.get((r["CorrelationId"], r["CollectionName"]), r["FilesSent"])}
+        for r in seed
+    ]
     final = {
         (r["CorrelationId"], r["CollectionName"]): (
             r["CollectionStatus"],
             r["FilesExported"],
             r["FilesSent"],
         )
-        for r in status.collection_status(updated).collect()
+        for r in status.collection_status(updated)
     }
     assert final[("123", fixture.topic)] == ("Sent", N_FILES, N_FILES)
     assert final[("321", "db.database.empty")] == ("Received", 0, 0)
     assert final[("111", "db.database.sent")] == ("Sent", 10, 10)
 
 
-def test_received_requires_exported_status(spark):
+def test_received_requires_exported_status():
     # DynamoDBExportStatusService.kt:121-131 — NO_FILES_EXPORTED flips to
     # Received ONLY when CollectionStatus=='Exported' and sent==0; a failed or
     # in-flight row with 0 files must pass through unchanged, or completion
@@ -119,10 +116,9 @@ def test_received_requires_exported_status(spark):
         ("c", "exporting.empty", "Exporting", 0, 0),
         ("c", "exported.sent.mismatch", "Exported", 0, 3),
     ]
-    df = spark.createDataFrame(rows, status.STATUS_SCHEMA)
     out = {
         r["CollectionName"]: r["CollectionStatus"]
-        for r in status.collection_status(df).collect()
+        for r in status.collection_status(_status_rows(rows))
     }
     assert out == {
         "exported.empty": "Received",
@@ -132,7 +128,7 @@ def test_received_requires_exported_status(spark):
     }
 
 
-def test_completion_aggregate(spark):
+def test_completion_aggregate():
     # DynamoDBExportStatusService.kt:79-102
     rows = [
         ("ok", "a", "Sent", 1, 1),
@@ -142,13 +138,106 @@ def test_completion_aggregate(spark):
         ("bad", "b", "Export_Failed", 1, 0),
         ("wip", "a", "Exported", 2, 1),
     ]
-    df = spark.createDataFrame(rows, status.STATUS_SCHEMA)
-    out = {r["CorrelationId"]: r["completion_status"] for r in status.completion_status(df).collect()}
+    out = status.completion_status(_status_rows(rows))
     assert out == {
         "ok": "COMPLETED_SUCCESSFULLY",
         "bad": "COMPLETED_UNSUCCESSFULLY",
         "wip": "NOT_COMPLETED",
     }
+
+
+def _data_files(path):
+    return sorted(n for n in os.listdir(path) if not n.startswith(("_", ".")))
+
+
+def test_status_store_upsert_over_spark_written_table(spark, tmp_path):
+    """A table written by Spark's coalesce(1) parquet writer (part file,
+    _SUCCESS and .crc sidecars) is upserted in place: its rows are kept, the
+    key that matches is replaced, one data file is left, and Spark reads the
+    result back with STATUS_SCHEMA's types."""
+    path = str(tmp_path / "status_table")
+    old = [("111", "db.a.sent", "Sent", 10, 10), ("222", "db.b.wip", "Exported", 3, 1)]
+    spark.createDataFrame(old, status.STATUS_SCHEMA).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(path)
+    assert os.path.exists(os.path.join(path, "_SUCCESS"))
+    assert [n.startswith("part-") and n.endswith(".parquet") for n in _data_files(path)] == [True]
+
+    new = [("222", "db.b.wip", "Sent", 3, 3), ("333", "db.c.new", "Received", 0, 0)]
+    merged = status.upsert_status(path, _status_rows(new))
+    want = {
+        ("111", "db.a.sent", "Sent", 10, 10),
+        ("222", "db.b.wip", "Sent", 3, 3),
+        ("333", "db.c.new", "Received", 0, 0),
+    }
+    assert {tuple(r.values()) for r in merged} == want
+    assert len(_data_files(path)) == 1
+    for df in (status.load_status(spark, path), spark.read.parquet(path)):
+        assert df.schema.simpleString() == (
+            "struct<CorrelationId:string,CollectionName:string,CollectionStatus:string,"
+            "FilesExported:int,FilesSent:int>"
+        )
+        assert {tuple(r) for r in df.collect()} == want
+
+
+def test_status_store_crash_before_replace_keeps_old_table(spark, tmp_path, monkeypatch):
+    """A crash between writing the new file and replacing the old one leaves
+    the old table whole: the tmp file is hidden from Spark and the reader."""
+    path = str(tmp_path / "status_table")
+    a, b = ("1", "a", "Sent", 1, 1), ("2", "b", "Sent", 1, 1)
+    status.upsert_status(path, _status_rows([a]))
+
+    def crash(src, dst):
+        raise OSError("crash")
+
+    monkeypatch.setattr(status.os, "replace", crash)
+    with pytest.raises(OSError, match="crash"):
+        status.upsert_status(path, _status_rows([("1", "a", "Exported", 1, 0), b]))
+    monkeypatch.undo()
+    assert [tuple(r) for r in status.load_status(spark, path).collect()] == [a]
+    merged = status.upsert_status(path, _status_rows([b]))
+    assert sorted(tuple(r.values()) for r in merged) == [a, b]
+
+
+_UPSERT_WORKER = """
+import os, sys, time
+sys.path.insert(0, sys.argv[1])
+from snapshot_sender_spark.plans import status
+path, tag, go = sys.argv[2:5]
+open(f"{go}.{tag}.ready", "w").close()
+while not os.path.exists(go):
+    time.sleep(0.001)
+for i in range(20):
+    row = dict(zip(status.STATUS_COLUMNS, (tag, f"c{i}", "Exported", 1, 0)))
+    status.upsert_status(path, [row])
+"""
+
+
+def test_status_store_concurrent_upserts_lose_no_row(tmp_path):
+    """Two processes upsert 20 distinct keys each, one key per call, at the
+    same time: the read-merge-write is serialized, so all 40 rows survive."""
+    import subprocess
+    import sys
+    import time
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path, go = str(tmp_path / "status_table"), str(tmp_path / "go")
+    procs = [
+        subprocess.Popen([sys.executable, "-c", _UPSERT_WORKER, repo, path, tag, go])
+        for tag in ("p1", "p2")
+    ]
+    deadline = time.monotonic() + 120
+    while not all(os.path.exists(f"{go}.{tag}.ready") for tag in ("p1", "p2")):
+        assert time.monotonic() < deadline and all(p.poll() is None for p in procs)
+        time.sleep(0.01)
+    open(go, "w").close()  # both imported: release them together
+    for p in procs:
+        assert p.wait(timeout=120) == 0
+    rows = status.upsert_status(path, [])
+    assert sorted((r["CorrelationId"], r["CollectionName"]) for r in rows) == sorted(
+        (tag, f"c{i}") for tag in ("p1", "p2") for i in range(20)
+    )
+    assert len(_data_files(path)) == 1
 
 
 def test_blocked_topic_routing(spark, fixture):
@@ -237,7 +326,7 @@ def test_success_indicator_and_monitoring(tmp_path):
     assert partial["title_text"] == "Incremental - All files sent - in progress"
 
 
-def test_collection_status_truth_table(spark):
+def test_collection_status_truth_table():
     """Exhaustive decision table for collection_status
     (DynamoDBExportStatusService.kt:113-141): ONLY 'Exported' rows transition —
     to 'Sent' when counts match and are positive, to 'Received' when both are
@@ -245,20 +334,13 @@ def test_collection_status_truth_table(spark):
     passes through unchanged, including failed and in-flight rows with zero
     counts (the r1 advisory's latent bug: a non-Exported zero-count row must
     NOT flip to Received)."""
-    from snapshot_sender_spark.plans import status as st
-
     cases = []
     for s in ["Exported", "Export_Failed", "Exporting", "Sent", "Received"]:
         for exported in [0, 2]:
             for sent in [0, 1, 2]:
                 cases.append((f"c-{s}-{exported}-{sent}", s, s, exported, sent))
-    df = spark.createDataFrame(
-        [(cid, "t", s, e, n) for cid, _, s, e, n in cases], st.STATUS_SCHEMA
-    )
-    got = {
-        r["CorrelationId"]: r["CollectionStatus"]
-        for r in st.collection_status(df).collect()
-    }
+    rows = _status_rows([(cid, "t", s, e, n) for cid, _, s, e, n in cases])
+    got = {r["CorrelationId"]: r["CollectionStatus"] for r in status.collection_status(rows)}
     for cid, orig, s, exported, sent in cases:
         if s == "Exported" and exported == sent and sent > 0:
             want = "Sent"

@@ -28,10 +28,8 @@ def world(spark, tmp_path_factory):
     table = str(root / "status_table")
 
     # seed rows (environment.sh:84-101)
-    seed = spark.createDataFrame(
-        [("111", "db.database.sent", "Sent", 10, 10)], status.STATUS_SCHEMA
-    )
-    status.upsert_status(spark, table, seed)
+    seed = dict(zip(status.STATUS_COLUMNS, ("111", "db.database.sent", "Sent", 10, 10)))
+    status.upsert_status(table, [seed])
 
     # scenario 123: real delivery
     f = fx.generate(str(root / "claimant"), n_files=N_FILES, records_per_file=RECORDS, seed=71)
@@ -100,10 +98,9 @@ def test_completion_and_monitoring(spark, world):
     _, table, r123, r321 = world
     # golden 6: every correlation id completed successfully; monitoring JSON
     # matches the reference payload field-for-field (SnsServiceImpl.kt:41-51)
-    comp = {
-        r["CorrelationId"]: r["completion_status"]
-        for r in status.completion_status(status.load_status(spark, table)).collect()
-    }
+    comp = status.completion_status(
+        [r.asDict() for r in status.load_status(spark, table).collect()]
+    )
     assert set(comp.values()) == {"COMPLETED_SUCCESSFULLY"}
     for rep in (r123, r321):
         msg = json.loads(rep.monitoring_message)

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from snapshot_sender_spark.operators.graph import connected_components
 from snapshot_sender_spark.plans import delivery, job
+from snapshot_sender_spark.plans import status as st
 from snapshot_sender_spark.sources import fixtures as fx
 
 
@@ -97,6 +98,49 @@ def test_corrupt_payload_fails_job_before_its_output_and_marker(spark, tmp_path)
             )
         assert victim.replace(".txt.gz.enc", ".json.gz") not in os.listdir(f.output_dir)
         assert victim + ".finished" not in os.listdir(f.status_dir)
+
+
+def test_unresolved_data_key_fails_job_naming_a_file(spark, tmp_path):
+    """A key lookup that resolves no pair (a data-key service failure) fails
+    the job naming a file, before any output, marker, success indicator or
+    status row exists — the files are not dropped as delivered-nothing."""
+    f = fx.generate(str(tmp_path), n_files=4, records_per_file=5, seed=19)
+    table = str(tmp_path / "status_table")
+    cfg = delivery.RunConfig(correlation_id="nokey", topic_name=f.topic)
+    with pytest.raises(Exception, match="|".join(map(re.escape, f.files))):
+        job.run_delivery_job(
+            spark, f.input_dir, f.status_dir, f.output_dir, table, cfg,
+            key_lookup=lambda pairs: [],
+        )
+    assert not os.path.exists(f.output_dir) or os.listdir(f.output_dir) == []
+    assert not os.path.exists(f.status_dir) or os.listdir(f.status_dir) == []
+    assert not os.path.exists(table)
+
+
+def test_status_phase_starts_no_spark_job(spark, tmp_path, monkeypatch):
+    """Everything from the collection-status decision on (upsert, completion,
+    success indicator, monitoring message) runs on the driver: a job group set
+    when the phase starts sees zero Spark jobs."""
+    f = fx.generate(str(tmp_path), n_files=2, records_per_file=3, seed=37)
+    sc = spark.sparkContext
+    group = "status-phase-jobs"
+    decide = st.collection_status
+
+    def tagged(*args, **kwargs):
+        sc.setJobGroup(group, "status phase")
+        return decide(*args, **kwargs)
+
+    monkeypatch.setattr(st, "collection_status", tagged)
+    try:
+        report = job.run_delivery_job(
+            spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "status_table"),
+            delivery.RunConfig(correlation_id="no-jobs", topic_name=f.topic),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert report.collection_status == "Sent"
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_connected_components_basic(spark):

@@ -53,6 +53,29 @@ def test_load_memo_revalidates_on_file_change(spark, tmp_path):
     assert d2.count() == 3
 
 
+def test_load_memo_revalidates_on_nested_partition_change(spark, tmp_path):
+    """A file inside a partition subdirectory changed in place leaves the
+    table directory's own entries as they were; the fingerprint must still
+    change."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sf = str(tmp_path / "sfnested")
+    part = os.path.join(sf, "region.parquet", "k=0", "part-0.parquet")
+    os.makedirs(os.path.dirname(part))
+    pq.write_table(pa.table({"id": list(range(4))}), part)
+
+    d1 = tables.load(spark, sf, "region")
+    assert tables.load(spark, sf, "region") is d1
+    assert d1.count() == 4
+
+    pq.write_table(pa.table({"id": list(range(9))}), part)  # same name, new bytes
+    _bump_mtime(part)
+    d2 = tables.load(spark, sf, "region")
+    assert d2 is not d1
+    assert d2.count() == 9
+
+
 def test_load_memo_still_hits_readonly_fixtures(spark):
     """The bench-relevant property: over the immutable testdata the memo
     must HIT (the revalidation stat may not defeat it)."""
