@@ -41,6 +41,14 @@ def _ctr_transform(data: bytes, key: bytes, iv: bytes) -> bytes:
     return enc.update(data) + enc.finalize()
 
 
+def decrypt_payload(content, key_b64: str | None, iv_b64: str | None) -> bytes | None:
+    """One payload's AES-CTR plaintext, NULL if any input is; key and IV are
+    base64 strings (reference metadata encoding: S3DirectoryReader.kt:86-98)."""
+    if content is None or key_b64 is None or iv_b64 is None:
+        return None
+    return _ctr_transform(bytes(content), base64.b64decode(key_b64), base64.b64decode(iv_b64))
+
+
 def ctr_at_offset(data: bytes, key: bytes, iv: bytes, byte_offset: int) -> bytes:
     """Decrypt ``data`` as if it started ``byte_offset`` bytes into the stream.
 
@@ -59,31 +67,16 @@ def ctr_at_offset(data: bytes, key: bytes, iv: bytes, byte_offset: int) -> bytes
 
 @F.pandas_udf(T.BinaryType())
 def aes_ctr_decrypt(content: pd.Series, key_b64: pd.Series, iv_b64: pd.Series) -> pd.Series:
-    """AES-CTR decrypt a binary column; key and IV are base64 strings
-    (reference metadata encoding: S3DirectoryReader.kt:86-98)."""
-    out = []
-    for data, k, iv in zip(content, key_b64, iv_b64):
-        if data is None or k is None or iv is None:
-            out.append(None)
-        else:
-            out.append(_ctr_transform(bytes(data), base64.b64decode(k), base64.b64decode(iv)))
-    return pd.Series(out)
+    """AES-CTR decrypt a binary column (``decrypt_payload`` per row)."""
+    return pd.Series(list(map(decrypt_payload, content, key_b64, iv_b64)))
 
 
-# encrypt is the same transform — exposed under its own name for fixture writers
-aes_ctr_encrypt = aes_ctr_decrypt
-
-# The payload codecs below are marked non-deterministic AFTER definition (they
-# are pure functions of their inputs — the flag is purely an optimizer fence):
-# when a filter references a column computed by one of these UDFs (the
-# `payload IS NOT NULL` guards in plans/delivery.parse_records and
-# corrupt_payloads), Catalyst pushes the filter down and re-evaluates the UDF
-# on both sides — the round-13 delivery count plan carried TWO ArrowEvalPython
-# nodes running aes_ctr_decrypt_gunzip_text on every file (measured ~2× the
-# decrypt stage cost). Non-determinism forbids the duplication, yielding one
-# evaluation (spark_optimization_guide §4.4). These UDFs are only ever used in
-# Project/Filter contexts (never join keys or aggregate args), where
-# non-deterministic expressions are legal.
+# The payload codecs are marked non-deterministic AFTER definition (they are
+# pure; the flag is an optimizer fence): when a filter references a UDF's
+# column (the `payload IS NOT NULL` guards in plans/delivery.parse_records and
+# corrupt_payloads), Catalyst would push the filter down and evaluate the UDF
+# on both sides, twice per file. Non-determinism forbids the duplication
+# (spark_optimization_guide §4.4). They are used only in Project/Filter.
 
 
 @F.pandas_udf(T.BinaryType())
@@ -91,23 +84,6 @@ def gunzip(content: pd.Series) -> pd.Series:
     return pd.Series(
         [None if b is None else gzip.decompress(bytes(b)) for b in content]
     )
-
-
-@F.pandas_udf(T.StringType())
-def aes_ctr_decrypt_gunzip_text(
-    content: pd.Series, key_b64: pd.Series, iv_b64: pd.Series
-) -> pd.Series:
-    """Fused decrypt → gunzip → utf-8 decode in ONE Arrow crossing (the parse
-    path never needs the intermediate gzipped form, and each pandas-UDF stage
-    round-trips the full payload through Arrow — fusing halves that traffic)."""
-    out = []
-    for data, k, iv in zip(content, key_b64, iv_b64):
-        if data is None or k is None or iv is None:
-            out.append(None)
-        else:
-            plain = _ctr_transform(bytes(data), base64.b64decode(k), base64.b64decode(iv))
-            out.append(gzip.decompress(plain).decode("utf-8", errors="replace"))
-    return pd.Series(out)
 
 
 @F.pandas_udf(T.BinaryType())
@@ -129,9 +105,7 @@ def gunzip_or_null(content: pd.Series) -> pd.Series:
 
 
 aes_ctr_decrypt = aes_ctr_decrypt.asNondeterministic()
-aes_ctr_encrypt = aes_ctr_decrypt
 gunzip = gunzip.asNondeterministic()
-aes_ctr_decrypt_gunzip_text = aes_ctr_decrypt_gunzip_text.asNondeterministic()
 
 # decrypt_explode_lines_kernel flushes its decompressed-payload group at this
 # many bytes so no per-array total approaches pa.string()'s 2 GiB int32-offset
@@ -150,7 +124,7 @@ def decrypt_explode_lines_kernel(batches):
     (spark_optimization_guide §4.2: hand whole batches to vectorized native
     kernels instead of building per-row Python objects).
 
-    Semantics are EXACTLY the fused-UDF + JVM explode path it replaces
+    Semantics are EXACTLY the decrypt UDF + gunzip + JVM explode path
     (pinned by tests/test_delivery.py::test_parse_records_kernel_matches_expr):
 
     * rows with a NULL content/key/iv produce no lines (the old
@@ -209,15 +183,12 @@ def decrypt_explode_lines_kernel(batches):
         rows: list = []
         pending = 0
         for i in range(n):
-            c, k, v = content[i], key[i], iv[i]
-            if not (c.is_valid and k.is_valid and v.is_valid):
-                continue
             # cryptography's rust binding accepts only `bytes` (a memoryview
             # over the Arrow buffer is rejected) — one copy per payload, noise
             # next to the AES work itself
-            plain = _ctr_transform(
-                c.as_py(), base64.b64decode(k.as_py()), base64.b64decode(v.as_py())
-            )
+            plain = decrypt_payload(content[i].as_py(), key[i].as_py(), iv[i].as_py())
+            if plain is None:
+                continue
             t = gzip.decompress(plain)
             texts.append(t)
             rows.append(i)

@@ -6,21 +6,20 @@ Reference physical plan (JobConfiguration.kt:41-64):
 Spark-first re-expression (one declarative DataFrame plan, §3.1 of SURVEY.md):
     binaryFile ⋈ broadcast(metadata)                      -- source
       → left_anti(finished markers)                       -- idempotent restart
-      → filename grammar validate (rejects routed out)    -- regexp predicate
-      → topic derivation + blocked-topic predicate        -- projection + isin
+      → route: bad filename → rejected, blocked topic     -- one CASE column,
+               → blocked, else delivered                     one row per file
       → ⋈ broadcast(distinct-key plaintext lookup)        -- one DKS call per
                                                              distinct key, ≡ the
                                                              reference's memo cache
                                                              HttpKeyService.kt:48-50
-      → AES-CTR decrypt (Arrow-vectorized pandas UDF)     -- CPU-only stage
-      → deliver: gunzip check + record count, per-file    -- receipt sink, run once
-                 .json.gz + .finished markers                (mapInPandas → receipts)
-      → parse: gunzip → explode lines → from_json          -- record-level view
+      → deliver: decrypt, gunzip check, record count,     -- mapInArrow receipt
+                 .json.gz + .finished marker per file        sink, run once
+      → parse: decrypt → gunzip → explode lines → from_json  -- record-level view
 
-Everything before the decrypt UDF is JVM-side; the cheap filters run before the
-expensive decrypt exactly like the reference orders its processors
-(JobConfiguration.kt:61-64) — but here it's a property of the declared plan, so
-Catalyst keeps it true under composition.
+Everything before the sink is JVM-side: the payload crosses into Python once,
+encrypted, and only delivered rows keep their ``content``. The ``decrypted``
+column the record-level views read is never selected by the sink, so Catalyst
+prunes that UDF from the sink's plan.
 
 Scale: content bytes never shuffle (all joins broadcast the small side); decrypt
 parallelism = file-partition parallelism (`spark.sql.files.maxPartitionBytes`);
@@ -33,10 +32,13 @@ from __future__ import annotations
 import gzip
 import io
 import os
+import uuid
 import zlib
 from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -112,11 +114,24 @@ class RunConfig:
     reprocess_files: bool = False
 
 
+DELIVERED, REJECTED, BLOCKED = "delivered", "rejected", "blocked"
+
+
 @dataclass
 class DeliveryResult:
-    delivered: DataFrame  # one decrypted row per file to deliver
-    rejected: DataFrame  # filename-grammar rejects (HttpWriter.kt:121-127)
-    blocked: DataFrame  # blocked-topic rows (FilterBlockedTopicsUtils.kt:24)
+    routed: DataFrame  # one row per file; ``route`` is one of the three views
+
+    @property
+    def delivered(self) -> DataFrame:  # one decrypted row per file to deliver
+        return self.routed.filter(F.col("route") == DELIVERED)
+
+    @property
+    def rejected(self) -> DataFrame:  # filename-grammar rejects (HttpWriter.kt:121-127)
+        return self.routed.filter(F.col("route") == REJECTED).select("path", "fileName")
+
+    @property
+    def blocked(self) -> DataFrame:  # blocked-topic rows (FilterBlockedTopicsUtils.kt:24)
+        return self.routed.filter(F.col("route") == BLOCKED).select("path", "fileName", "topic")
 
 
 def key_lookup_local(ciphertext_pairs: list[tuple[str, str]]) -> list[tuple[str, str, str]]:
@@ -161,33 +176,28 @@ def route_and_decrypt(
     micro-batch: ``files`` holds the encrypted objects joined with their
     metadata (path, fileName, content, iv, dataKeyEncryptionKeyId,
     cipherText), ``meta`` the metadata rows of the same files."""
-    # 2. filename grammar split: valid → pipeline, invalid → rejects sink.
-    #    The reference validates the *decrypted* name — DecryptionProcessor.kt:40
-    #    strips .enc before HttpWriter.kt:121-127 parses it — so validate the
-    #    enc-stripped form here; markers keep the original key (S3Utils.kt:25-32).
-    files = files.withColumn("decryptedFileName", text.strip_enc_suffix(F.col("fileName")))
-    files = files.withColumn(
-        "fileNameValid", text.filename_is_valid(F.col("decryptedFileName"))
-    )
-    rejected = files.filter(~F.col("fileNameValid")).select("path", "fileName")
-    valid = files.filter(F.col("fileNameValid")).drop("fileNameValid")
-
-    # 3. database/collection/topic projection (TextParsingUtility.kt:7-11, HttpWriter.kt:47-49)
-    valid = (
-        valid.withColumn("database", text.extract_database(F.col("decryptedFileName")))
-        .withColumn("collection", text.extract_collection(F.col("decryptedFileName")))
-        .withColumn(
-            "topic",
-            text.derive_topic(F.col("decryptedFileName"), F.col("database"), F.col("collection")),
-        )
+    # 2. database/collection/topic of the enc-stripped name, which is what
+    #    the reference parses (DecryptionProcessor.kt:40, HttpWriter.kt:47-49,
+    #    121-127); markers keep the original key (S3Utils.kt:25-32)
+    name = F.col("decryptedFileName")
+    files = (
+        files.withColumn("decryptedFileName", text.strip_enc_suffix(F.col("fileName")))
+        .withColumn("database", text.extract_database(name))
+        .withColumn("collection", text.extract_collection(name))
+        .withColumn("topic", text.derive_topic(name, F.col("database"), F.col("collection")))
     )
 
-    # 4. blocked-topic routing (FilterBlockedTopicsUtils.kt:15-30)
+    # 3.-4. grammar rejects, then blocked topics (FilterBlockedTopicsUtils.kt:
+    #    15-30); only delivered rows keep content, so nothing else decrypts
     blocked_list = text.parse_blocked_topics(blocked_topics)
-    blocked = valid.filter(~text.topic_not_blocked(F.col("topic"), blocked_list)).select(
-        "path", "fileName", "topic"
+    route = (
+        F.when(~text.filename_is_valid(name), F.lit(REJECTED))
+        .when(~text.topic_not_blocked(F.col("topic"), blocked_list), F.lit(BLOCKED))
+        .otherwise(F.lit(DELIVERED))
     )
-    valid = valid.filter(text.topic_not_blocked(F.col("topic"), blocked_list))
+    routed = files.withColumn("route", route).withColumn(
+        "content", F.when(F.col("route") == DELIVERED, F.col("content"))
+    )
 
     # 5. data-key resolution: distinct keys → external lookup → broadcast join.
     #    distinct() is tiny (a handful of keys per run); collecting it to the
@@ -213,29 +223,31 @@ def route_and_decrypt(
         ["dataKeyEncryptionKeyId", "cipherText", "plaintextKey"],
     )
     # left join: a file whose key the lookup did not resolve keeps a NULL
-    # plaintextKey, so it decrypts to NULL and the sink fails the job naming
-    # it (a DKS failure fails the job) instead of dropping it silently
-    valid = valid.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"], "left")
+    # plaintextKey, and the sink fails the job naming it (a DKS failure fails
+    # the job) instead of dropping it silently
+    routed = routed.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"], "left")
 
-    # 6. AES-CTR decrypt (vectorized) + rename (DecryptionProcessor.kt:26-41)
-    decrypted = valid.withColumn(
-        "decrypted", crypto.aes_ctr_decrypt(F.col("content"), F.col("plaintextKey"), F.col("iv"))
-    ).withColumn("outputFileName", text.rename_output(F.col("decryptedFileName")))
-    return DeliveryResult(delivered=decrypted, rejected=rejected, blocked=blocked)
+    # 6. rename (HttpWriter.kt:58) + the lazy decrypt (DecryptionProcessor.kt:26-41)
+    decrypted = crypto.aes_ctr_decrypt(F.col("content"), F.col("plaintextKey"), F.col("iv"))
+    return DeliveryResult(
+        routed.withColumn("outputFileName", text.rename_output(F.col("decryptedFileName")))
+        .withColumn("decrypted", decrypted)
+    )
 
 
+_ROW_COLUMNS = ["fileName", "outputFileName", "topic", "database", "collection", "route"]
+SINK_COLUMNS = _ROW_COLUMNS + ["content", "plaintextKey", "iv"]
 RECEIPT_SCHEMA = (
-    "fileName string, outputFileName string, topic string, database string, "
-    "collection string, payload_bytes long, records long"
+    ", ".join(f"{c} string" for c in _ROW_COLUMNS) + ", payload_bytes long, records long"
 )
 
 
 def _count_records(file_name: str, payload: bytes | None) -> int:
-    """Records in one decrypted payload: the lines of the gunzipped bytes that
-    keep text after trimming spaces — what ``parse_records(...).count()``
-    counts. A NULL or non-gzip payload raises an error naming the file."""
-    if payload is None:
-        raise ValueError(f"{file_name}: decrypted payload is NULL (no data key, content or IV)")
+    """Records in one decrypted payload: the gunzipped lines that keep text
+    after trimming spaces — what ``parse_records(...).count()`` counts. A
+    NULL, empty or non-gzip payload raises an error naming the file."""
+    if not payload:
+        raise ValueError(f"{file_name}: decrypted payload is empty or NULL (no key, content or IV)")
     try:
         with gzip.GzipFile(fileobj=io.BytesIO(payload)) as gz:
             return sum(1 for line in gz if line.strip(b" \n"))
@@ -243,57 +255,80 @@ def _count_records(file_name: str, payload: bytes | None) -> int:
         raise ValueError(f"{file_name}: decrypted payload is not valid gzip ({e})") from e
 
 
+def checked_files(batch):
+    """(row, payload, records) per row of one ``SINK_COLUMNS`` batch, with
+    payload None off the delivered route. A delivered file that is NULL or
+    does not decrypt and gunzip raises a ValueError naming it."""
+    rows = batch.select(_ROW_COLUMNS).to_pylist()
+    content, key, iv = (batch.column(c) for c in ("content", "plaintextKey", "iv"))
+    for i, row in enumerate(rows):
+        if row["route"] != DELIVERED:
+            yield row, None, 0
+            continue
+        name = row["fileName"]
+        try:
+            payload = crypto.decrypt_payload(content[i].as_py(), key[i].as_py(), iv[i].as_py())
+        except ValueError as e:  # a malformed key or IV (binascii.Error is one)
+            raise ValueError(f"{name}: payload does not decrypt ({e})") from e
+        yield row, payload, _count_records(name, payload)
+
+
+def write_atomic(path: str, data: bytes, nonce: str) -> None:
+    """Per-attempt tmp file + ``os.replace``: duplicate (speculative) attempts
+    of a partition run concurrently, and a shared tmp path would let one
+    truncate the other's file mid-rename; this way the last writer wins over
+    identical content."""
+    tmp = f"{path}.{nonce}.tmp"
+    with open(tmp, "wb") as fh:
+        fh.write(data)
+    os.replace(tmp, path)
+
+
+def mark_finished(status_dir: str, file_name: str, nonce: str) -> None:
+    """The ``.finished`` marker (HttpWriter.kt:95-96) the restart anti-join reads."""
+    marker = os.path.join(status_dir, file_name + ".finished")
+    write_atomic(marker, f"Finished {file_name}".encode(), nonce)
+
+
+def deliver_batches(output_dir: str, status_dir: str, batches):
+    """The sink's mapInArrow function: a receipt per row, output + marker per delivered file."""
+    nonce = uuid.uuid4().hex  # per task attempt: see write_atomic
+    for batch in batches:
+        sizes, counts = [], []
+        for row, payload, records in checked_files(batch):
+            if payload is not None:
+                write_atomic(os.path.join(output_dir, row["outputFileName"]), payload, nonce)
+                mark_finished(status_dir, row["fileName"], nonce)
+            sizes.append(0 if payload is None else len(payload))
+            counts.append(records)
+        yield pa.RecordBatch.from_arrays(
+            [batch.column(c).cast(pa.string()) for c in _ROW_COLUMNS]
+            + [pa.array(sizes, pa.int64()), pa.array(counts, pa.int64())],
+            names=_ROW_COLUMNS + ["payload_bytes", "records"],
+        )
+
+
 def deliver(result: DeliveryResult, output_dir: str, status_dir: str) -> DataFrame:
-    """Materialize the sink and return its receipts. Per file: check that the
-    decrypted bytes gunzip and count their records, then write the still-gzipped
-    bytes to ``output_dir/<name .txt.gz→.json.gz>`` and a ``<original>.finished``
+    """Materialize the sink and return one receipt per routed file. Per
+    delivered file: decrypt, check that the bytes gunzip and count their
+    records, then write the still-gzipped bytes to
+    ``output_dir/<name .txt.gz→.json.gz>`` and a ``<original>.finished``
     marker (HttpWriter.kt:58,95-96; S3StatusFileWriter.kt:19-52). A NULL or
     non-gzip payload fails the job with the file's name before that file's
-    output or marker exists, so a rerun tries it again.
+    output or marker exists, so a rerun tries it again. Rejected and blocked
+    rows write nothing.
 
-    Same shape as ``http_sink.http_deliver``: a ``mapInPandas`` sink run exactly
-    once (eager ``localCheckpoint``), so later actions on the receipts read the
-    stored rows instead of re-running the writes. One receipt per file
-    (fileName, outputFileName, topic, database, collection, payload_bytes,
-    records) — the counts the reference keeps in DynamoDB are *derived* from
-    the receipts by aggregation (deterministic), instead of incremental
-    counter updates (DynamoDBExportStatusService.kt:38-44). At-least-once,
+    One ``mapInArrow`` pass, run exactly once (eager ``localCheckpoint``).
+    The job *derives* its counts from the receipts instead of incrementing
+    counters (DynamoDBExportStatusService.kt:38-44). At-least-once,
     idempotent by marker anti-join on restart."""
     os.makedirs(output_dir, exist_ok=True)
     os.makedirs(status_dir, exist_ok=True)
-
-    rows = result.delivered.select(
-        "fileName", "outputFileName", "topic", "database", "collection", "decrypted"
+    return (
+        result.routed.select(SINK_COLUMNS)
+        .mapInArrow(partial(deliver_batches, output_dir, status_dir), RECEIPT_SCHEMA)
+        .localCheckpoint(eager=True)
     )
-
-    def write_batches(batches):
-        # tmp names are per-attempt unique: under speculative execution two
-        # attempts of the same partition run CONCURRENTLY, and a shared tmp
-        # path would let one attempt truncate the other's half-written file
-        # mid-rename. Unique tmp + atomic replace makes duplicate attempts
-        # last-writer-wins over identical content — byte-stable output.
-        import uuid
-
-        nonce = uuid.uuid4().hex
-        for pdf in batches:
-            records = []
-            for row in pdf.itertuples(index=False):
-                records.append(_count_records(row.fileName, row.decrypted))
-                out_path = os.path.join(output_dir, row.outputFileName)
-                tmp = f"{out_path}.{nonce}.tmp"
-                with open(tmp, "wb") as fh:
-                    fh.write(row.decrypted)
-                os.replace(tmp, out_path)  # atomic → idempotent under retry
-                marker = os.path.join(status_dir, row.fileName + ".finished")
-                mtmp = f"{marker}.{nonce}.tmp"
-                with open(mtmp, "w") as fh:
-                    fh.write(f"Finished {row.fileName}")
-                os.replace(mtmp, marker)
-            yield pdf.drop(columns="decrypted").assign(
-                payload_bytes=pdf["decrypted"].map(len), records=records
-            )
-
-    return rows.mapInPandas(write_batches, schema=RECEIPT_SCHEMA).localCheckpoint(eager=True)
 
 
 def corrupt_payloads(decrypted: DataFrame) -> DataFrame:
@@ -315,8 +350,7 @@ def parse_records(decrypted: DataFrame, tolerant: bool = False) -> DataFrame:
     (see ``corrupt_payloads`` for the reject stream) and leaves malformed JSON
     lines as a NULL ``record`` with the raw line preserved — the PERMISSIVE /
     _corrupt_record policy."""
-    cols = set(decrypted.columns)
-    if not tolerant and {"content", "plaintextKey", "iv"} <= cols:
+    if not tolerant:
         # fused kernel path (r13): decrypt → gunzip → line-split → blank-drop
         # in ONE mapInArrow crossing with the per-line work in pyarrow C
         # kernels (guide §4.2). Replaces the pandas-UDF payload + JVM regex
@@ -331,8 +365,7 @@ def parse_records(decrypted: DataFrame, tolerant: bool = False) -> DataFrame:
             "fileName string, topic string, line string",
         )
     else:
-        gunzip_fn = crypto.gunzip_or_null if tolerant else crypto.gunzip
-        payload = gunzip_fn(F.col("decrypted")).cast("string")
+        payload = crypto.gunzip_or_null(F.col("decrypted")).cast("string")
         lines = (
             decrypted.select(
                 "fileName",

@@ -1,6 +1,6 @@
 """Per-file HTTP delivery sink — the reference's NiFi POST path
-(HttpWriter.kt:39-119, headers NiFiUtility.kt:12-25) as a distributed
-``foreachPartition`` sink.
+(HttpWriter.kt:39-119, headers NiFiUtility.kt:12-25) as a second writer of
+the delivery sink: its input columns, per-file check and marker writer.
 
 Semantics preserved:
   * 12 routing headers per POST, including filename (renamed .txt.gz→.json.gz),
@@ -21,14 +21,16 @@ involvement, no collect. Connection reuse per partition (one opener per task,
 
 from __future__ import annotations
 
-import os
 import time
-import urllib.error
 import urllib.request
+import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions.text import normalize_snapshot_type
+from .delivery import SINK_COLUMNS, checked_files, mark_finished
 
 
 def nifi_headers(
@@ -66,7 +68,15 @@ class DeliveryError(Exception):
     """Non-2xx after exhausting retries (≡ WriterException, HttpWriter.kt:84-88)."""
 
 
-RECEIPT_SCHEMA = "fileName string, topic string, status_code int, attempts int, bytes_sent long"
+RECEIPT_SCHEMA = pa.schema(
+    [
+        ("fileName", pa.string()),
+        ("topic", pa.string()),
+        ("status_code", pa.int32()),
+        ("attempts", pa.int32()),
+        ("bytes_sent", pa.int64()),
+    ]
+)
 
 
 def _ssl_context(tls: dict | None):
@@ -98,86 +108,69 @@ def http_deliver(
     backoff_s: float = 0.1,
     tls: dict | None = None,
 ) -> DataFrame:
-    """POST each file's payload with routing headers; at-least-once with
-    idempotent markers. Retries per file: ``max_retries`` attempts with ×2
-    exponential backoff (HttpKeyService.kt:37-40's policy applied to delivery).
+    """POST each delivered file's payload with routing headers; at-least-once
+    with idempotent markers. ``decrypted`` is a routed delivery frame such as
+    ``DeliveryResult.delivered``; rows off the ``delivered`` route are not
+    posted. Each file is decrypted and gzip-checked before its POST, and a bad
+    one raises naming the file. Retries per file: ``max_retries`` attempts
+    with ×2 exponential backoff (HttpKeyService.kt:37-40's policy applied to
+    delivery).
 
-    Implemented as ``mapInPandas`` (not foreachPartition) so the sink stays in
-    the SQL engine: it returns a *receipt* DataFrame (one row per delivered
-    file) that composes with ``df.observe`` counters — RDD-level foreach
-    actions never fire SQL observation metrics — and doubles as the delivery
-    manifest for the status aggregation.
-
-    The receipts are materialized exactly once here (eager ``localCheckpoint``)
-    before being returned: a side-effecting transformation must not re-run on
+    Returns one receipt per posted file, materialized exactly once (eager
+    ``localCheckpoint``): a side-effecting transformation must not re-run on
     every downstream action (count-then-write, AQE stage retry, speculation),
-    or every materialization would re-POST the partition. Downstream actions
-    read the checkpointed partitions instead."""
-    rows = decrypted.select(
-        "fileName", "outputFileName", "database", "collection", "topic", "decrypted"
-    )
+    or every materialization would re-POST the partition."""
 
     def post_batches(batches):
-        import pandas as pd
-
         ctx = _ssl_context(tls)
-        for pdf in batches:
+        nonce = uuid.uuid4().hex
+        for batch in batches:
             out = []
-            for row in pdf.itertuples(index=False):
+            for row, body, _ in checked_files(batch):
+                if body is None:
+                    continue
                 headers = nifi_headers(
-                    filename=row.outputFileName,
-                    database=row.database,
-                    collection=row.collection,
-                    topic=row.topic,
+                    filename=row["outputFileName"],
+                    database=row["database"],
+                    collection=row["collection"],
+                    topic=row["topic"],
                     export_date=export_date,
                     snapshot_type=snapshot_type,
                     correlation_id=correlation_id,
                 )
-                body = bytes(row.decrypted)
-                delay = backoff_s
-                status = None
-                attempts = 0
-                for attempt in range(max_retries):
-                    attempts = attempt + 1
-                    req = urllib.request.Request(url, data=body, method="POST")
-                    for k, v in headers.items():
-                        req.add_header(k, v)
-                    req.add_header("Content-Type", "application/octet-stream")
+                headers["Content-Type"] = "application/octet-stream"
+                req = urllib.request.Request(url, data=body, headers=headers, method="POST")
+                for attempts in range(1, max_retries + 1):
                     try:
                         with urllib.request.urlopen(req, timeout=30, context=ctx) as resp:
                             # Only 200 counts as delivered (HttpWriter.kt:82-115
                             # retries everything else, including other 2xx).
                             if resp.status == 200:
-                                status = resp.status
                                 break
-                            raise urllib.error.HTTPError(
-                                url, resp.status, "non-200", resp.headers, None
-                            )
-                    except Exception:
-                        if attempt == max_retries - 1:
-                            raise DeliveryError(
-                                f"delivery failed for {row.fileName} "
-                                f"after {max_retries} attempts"
-                            )
-                        time.sleep(delay)
-                        delay *= 2
+                    except Exception:  # a failed POST is retried like a non-200
+                        pass
+                    if attempts == max_retries:
+                        raise DeliveryError(
+                            f"delivery failed for {row['fileName']} after {max_retries} attempts"
+                        )
+                    time.sleep(backoff_s * 2 ** (attempts - 1))
                 if status_dir:
-                    marker = os.path.join(status_dir, row.fileName + ".finished")
-                    with open(marker, "w") as fh:
-                        fh.write(f"Finished {row.fileName}")
+                    mark_finished(status_dir, row["fileName"], nonce)
                 out.append(
                     {
-                        "fileName": row.fileName,
-                        "topic": row.topic,
-                        "status_code": status,
+                        "fileName": row["fileName"],
+                        "topic": row["topic"],
+                        "status_code": 200,
                         "attempts": attempts,
                         "bytes_sent": len(body),
                     }
                 )
-            yield pd.DataFrame(
-                out, columns=["fileName", "topic", "status_code", "attempts", "bytes_sent"]
-            )
+            yield pa.RecordBatch.from_pylist(out, schema=RECEIPT_SCHEMA)
 
     # Eager, replicated local checkpoint: runs the POSTs exactly once, now;
     # every later count/collect/write on the result reuses the stored rows.
-    return rows.mapInPandas(post_batches, schema=RECEIPT_SCHEMA).localCheckpoint(eager=True)
+    return (
+        decrypted.select(SINK_COLUMNS)
+        .mapInArrow(post_batches, from_arrow_schema(RECEIPT_SCHEMA))
+        .localCheckpoint(eager=True)
+    )

@@ -59,7 +59,8 @@ def run_delivery_job(
     """One topic, one correlation id (PropertyUtility.kt:5-11), end to end.
 
     ``files_exported`` is the upstream exporter's count (DynamoDB seed,
-    environment.sh:84-101); defaults to the number of input files found.
+    environment.sh:84-101); defaults to the files this run delivered plus
+    the files it blocked.
 
     ``gateway`` (optional — a ``metrics.HttpPushGateway`` or compatible
     push/delete object) activates the reference's full pushgateway lifecycle
@@ -113,19 +114,22 @@ def _run_delivery_job_body(
 ) -> JobReport:
     result = dlv.build_decrypted(spark, input_dir, status_dir, cfg, key_lookup=key_lookup)
     receipts = dlv.deliver(result, output_dir, status_dir)
-    # every count the job reports comes from the receipts of the one sink pass
+    # every count comes from the one sink pass's receipts; size(collect_set)
+    # of the few topics plans one Spark job fewer than count_distinct
     files_f, bytes_f, topics_f = mx.DELIVERY_COUNTER_FAMILIES
+    route = F.col("route")
     totals = receipts.agg(
-        F.count(F.lit(1)).alias(files_f),
+        F.count_if(route == dlv.DELIVERED).alias(files_f),
         F.coalesce(F.sum("payload_bytes"), F.lit(0)).alias(bytes_f),
-        F.count_distinct("topic").alias(topics_f),
+        F.size(F.collect_set(F.when(route == dlv.DELIVERED, F.col("topic")))).alias(topics_f),
         F.coalesce(F.sum("records"), F.lit(0)).alias("records"),
+        F.count_if(route == dlv.REJECTED).alias("rejected"),
+        F.count_if(route == dlv.BLOCKED).alias("blocked"),
     ).first()
     counters = {name: totals[name] for name in mx.DELIVERY_COUNTER_FAMILIES}
-    n_delivered = totals[files_f]
-    n_records = totals["records"]
-    n_rejected = result.rejected.count()
-    n_blocked = result.blocked.count()
+    n_delivered, n_records, n_rejected, n_blocked = (
+        totals[c] for c in (files_f, "records", "rejected", "blocked")
+    )
 
     if files_exported is None:
         files_exported = n_delivered + n_blocked

@@ -148,10 +148,10 @@ def run_streaming_delivery(
     input (Trigger.AvailableNow). Returns the list of processed epoch ids.
 
     foreachBatch body = the batch pipeline stages on the batch's file set:
-    metadata rows → content join (read per batch) → grammar/topic → key
-    broadcast → decrypt (``delivery.route_and_decrypt``) → the batch
-    ``deliver()`` receipt sink (gunzip check, per-file atomic rename +
-    markers, fully distributed — decrypted bytes never reach the driver).
+    metadata rows → content join (read per batch) → grammar/topic routing →
+    key broadcast (``delivery.route_and_decrypt``) → the batch ``deliver()``
+    sink (per file: decrypt, gunzip check, atomic rename + marker, fully
+    distributed — decrypted bytes never reach the driver).
     Epoch-id marker makes redelivery of a replayed batch a no-op; the only
     driver-side collects are the metadata listing delta and the distinct-key
     set (both O(files-per-batch), not O(bytes))."""
@@ -231,13 +231,12 @@ def run_streaming_delivery(
                 ],
                 [f.name for f in ENCRYPTION_META_SCHEMA.fields],
             )
-            # the batch plan's routing, key lookup and decrypt, on this batch's
-            # objects and metadata; the stream blocks no topics
+            # the batch plan's routing and key lookup, on this batch's objects
+            # and metadata; the stream blocks no topics
             result = delivery.route_and_decrypt(
                 spark, objects.join(F.broadcast(meta), "fileName"), meta, key_lookup
             )
-            # the batch receipt sink: per-file atomic write + markers — the
-            # micro-batch is delivered by the executors, not the driver
+            # the batch receipt sink: the executors deliver the micro-batch
             delivery.deliver(result, output_dir, status_dir)
         with open(epoch_marker, "w") as fh:
             fh.write(json.dumps(fp))

@@ -15,6 +15,7 @@ Prints one JSON line with what happened; the pytest side asserts on it.
 Usage: python speculative_delivery.py <tmpdir>
 """
 
+import base64
 import gzip
 import json
 import os
@@ -49,6 +50,11 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
+    from snapshot_sender_spark.functions import crypto
+    from snapshot_sender_spark.plans import delivery
+
+    key, iv = b"0" * 16, b"1" * 16
+    payloads = [gzip.compress(f"payload-{i}".encode() * 50, mtime=0) for i in range(8)]
     files = [
         (
             f"db.core.claimant-000-001-{i:06d}.txt.gz.enc",
@@ -56,13 +62,16 @@ def main() -> None:
             "db.core.claimant",
             "db",
             "core.claimant",
-            bytearray(gzip.compress(f"payload-{i}".encode() * 50, mtime=0)),
+            "delivered",
+            bytearray(crypto._ctr_transform(payload, key, iv)),
+            base64.b64encode(key).decode(),
+            base64.b64encode(iv).decode(),
         )
-        for i in range(8)
+        for i, payload in enumerate(payloads)
     ]
     schema = (
-        "fileName string, outputFileName string, topic string, "
-        "database string, collection string, decrypted binary"
+        "fileName string, outputFileName string, topic string, database string, "
+        "collection string, route string, content binary, plaintextKey string, iv string"
     )
     df = spark.createDataFrame(files, schema).repartition(8, "fileName")
 
@@ -77,22 +86,14 @@ def main() -> None:
             time.sleep(6)  # the straggler: everyone else finishes in ms
         return b
 
-    slow = df.withColumn("decrypted", slow_identity("decrypted", "fileName"))
-
-    from snapshot_sender_spark.plans import delivery
-
-    delivery.deliver(
-        delivery.DeliveryResult(
-            delivered=slow, rejected=slow.limit(0), blocked=slow.limit(0)
-        ),
-        out_dir,
-        status_dir,
-    )
+    slow = df.withColumn("content", slow_identity("content", "fileName"))
+    delivery.deliver(delivery.DeliveryResult(slow), out_dir, status_dir)
 
     outs = sorted(os.listdir(out_dir))
     markers = sorted(p for p in os.listdir(status_dir) if p.endswith(".finished"))
     ok_content = all(
-        open(os.path.join(out_dir, f[1]), "rb").read() == bytes(f[5]) for f in files
+        open(os.path.join(out_dir, f[1]), "rb").read() == payload
+        for f, payload in zip(files, payloads)
     )
     attempts = os.listdir(attempts_dir)
     per_partition: dict = {}

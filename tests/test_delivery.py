@@ -87,7 +87,9 @@ def test_status_transitions(fixture, run):
         ]
     )
     # FilesSent derived from the delivery receipts, per collection
-    sent = Counter(("123", r["topic"]) for r in manifest_rows)
+    sent = Counter(
+        ("123", r["topic"]) for r in manifest_rows if r["route"] == delivery.DELIVERED
+    )
     updated = [
         {**r, "FilesSent": sent.get((r["CorrelationId"], r["CollectionName"]), r["FilesSent"])}
         for r in seed
@@ -351,12 +353,37 @@ def test_collection_status_truth_table():
         assert got[cid] == want, (cid, got[cid], want)
 
 
+def test_deliver_plan_has_one_python_node(spark, tmp_path, monkeypatch):
+    """The sink is the payload's only Python crossing: the plan deliver
+    checkpoints has exactly one Python node, MapInArrow, with no decrypt UDF
+    (ArrowEvalPython) ahead of it and no pandas sink."""
+    import re
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    f = fx.generate(str(tmp_path), n_files=2, records_per_file=3, seed=44)
+    plans = []
+    checkpoint = DataFrame.localCheckpoint
+
+    def capture(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return checkpoint(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "localCheckpoint", capture)
+    cfg = delivery.RunConfig(correlation_id="plan", topic_name=f.topic)
+    result = delivery.build_decrypted(spark, f.input_dir, f.status_dir, cfg)
+    delivery.deliver(result, f.output_dir, f.status_dir)
+    [plan] = plans
+    nodes = [re.match(r"[\s:+|-]*(\w+)", line).group(1) for line in plan.splitlines()]
+    assert [n for n in nodes if re.search("Python|Pandas|Arrow", n)] == ["MapInArrow"]
+
+
 def test_parse_records_kernel_matches_expr(spark, fixture):
     """parse_records' fused path is a single mapInArrow kernel (r13:
     decrypt → gunzip → split → blank-drop in one crossing); pin EXACT result
     equality (sorted row multiset, record compared as canonical JSON) against
-    the retained fused-UDF + JVM explode expression path it replaced, so any
-    drift in split/trim/null semantics fails loudly."""
+    the decrypt UDF + gunzip UDF + JVM explode expression path, so any drift
+    in split/trim/null semantics fails loudly."""
     cfg = delivery.RunConfig(correlation_id="p", topic_name=fixture.topic,
                              reprocess_files=True)
     dec = delivery.build_decrypted(
@@ -364,9 +391,7 @@ def test_parse_records_kernel_matches_expr(spark, fixture):
     ).delivered
     from snapshot_sender_spark.functions import crypto
 
-    payload = crypto.aes_ctr_decrypt_gunzip_text(
-        F.col("content"), F.col("plaintextKey"), F.col("iv")
-    )
+    payload = crypto.gunzip(F.col("decrypted")).cast("string")
     reference = (
         dec.select("fileName", "topic", payload.alias("payload"))
         .filter(F.col("payload").isNotNull())
@@ -444,15 +469,14 @@ def test_parse_records_kernel_blank_and_null_semantics(spark, tmp_path):
     assert lines == ["a", "\tx", "\rb", "bad��line"]
 
     # the delivery sink's receipt counts the same lines as records
-    delivered = spark.createDataFrame(
-        [("f1.txt.gz.enc", "f1.json.gz", "t", "db", "coll", bytearray(gz.compress(body)))],
+    routed = spark.createDataFrame(
+        [("f1.txt.gz.enc", "f1.json.gz", "t", "db", "coll", "delivered",
+          bytearray(enc(body)), kb, ivb)],
         "fileName string, outputFileName string, topic string, database string, "
-        "collection string, decrypted binary",
+        "collection string, route string, content binary, plaintextKey string, iv string",
     )
     receipt = delivery.deliver(
-        delivery.DeliveryResult(delivered, delivered.limit(0), delivered.limit(0)),
-        str(tmp_path / "out"),
-        str(tmp_path / "status"),
+        delivery.DeliveryResult(routed), str(tmp_path / "out"), str(tmp_path / "status")
     ).first()
     assert receipt["records"] == len(lines)
 

@@ -6,6 +6,7 @@ import gzip
 import json
 import os
 import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -115,6 +116,56 @@ def test_unresolved_data_key_fails_job_naming_a_file(spark, tmp_path):
     assert not os.path.exists(f.output_dir) or os.listdir(f.output_dir) == []
     assert not os.path.exists(f.status_dir) or os.listdir(f.status_dir) == []
     assert not os.path.exists(table)
+
+
+def test_job_counts_every_route_from_the_receipts(spark, tmp_path, monkeypatch):
+    """One job over 3 deliverable files, 1 invalid name, 1 blocked topic and
+    1 pre-marked file reports exact counts, and takes all of them from the
+    one receipts aggregation: no DataFrame.count action runs."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    f = fx.generate(str(tmp_path / "a"), n_files=4, records_per_file=5, seed=51)
+    blocked = fx.generate(
+        str(tmp_path / "b"), topic="db.core.blocked", n_files=1, records_per_file=5, seed=52
+    )
+    sidecar = "metadata.sidecar.jsonl"
+    shutil.copy(os.path.join(blocked.input_dir, blocked.files[0]), f.input_dir)
+    with open(os.path.join(blocked.input_dir, sidecar)) as fh:
+        blocked_meta = fh.read()
+    with open(os.path.join(f.input_dir, sidecar)) as fh:
+        invalid_meta = {**json.loads(fh.readline()), "fileName": "not-a-valid-name.enc"}
+    shutil.copy(
+        os.path.join(f.input_dir, f.files[0]), os.path.join(f.input_dir, "not-a-valid-name.enc")
+    )
+    with open(os.path.join(f.input_dir, sidecar), "a") as fh:
+        fh.write(blocked_meta + json.dumps(invalid_meta) + "\n")
+    with open(os.path.join(f.status_dir, f.files[0] + ".finished"), "w") as fh:
+        fh.write(f"Finished {f.files[0]}")
+
+    def no_count(self):
+        raise AssertionError("run_delivery_job ran a DataFrame.count action")
+
+    monkeypatch.setattr(DataFrame, "count", no_count)
+    cfg = delivery.RunConfig(
+        correlation_id="routes", topic_name=f.topic, blocked_topics="db.core.blocked"
+    )
+    report = job.run_delivery_job(
+        spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "status_table"), cfg
+    )
+    deliverable = f.files[1:]
+    assert (report.files_delivered, report.rejected, report.blocked) == (3, 1, 1)
+    assert report.records_parsed == 3 * 5
+    assert report.counters == {
+        "snapshot_sender_files_sent_success": 3,
+        # AES-CTR keeps the length: the delivered gzip bytes are the inputs'
+        "snapshot_sender_bytes_sent": sum(
+            os.path.getsize(os.path.join(f.input_dir, n)) for n in deliverable
+        ),
+        "snapshot_sender_topics_seen": 1,
+    }
+    assert sorted(p for p in os.listdir(f.output_dir) if p.endswith(".json.gz")) == sorted(
+        n.replace(".txt.gz.enc", ".json.gz") for n in deliverable
+    )
 
 
 def test_status_phase_starts_no_spark_job(spark, tmp_path, monkeypatch):

@@ -1,10 +1,13 @@
 """Observability (df.observe counters) and the HTTP delivery sink, driven
 against an in-process HTTP receiver."""
 
+import base64
 import gzip
 import http.server
 import json
 import os
+import re
+import shutil
 import threading
 import time
 
@@ -122,6 +125,71 @@ def test_http_sink_delivers_with_headers(spark, tmp_path, receiver):
     lines = gzip.decompress(sample["body"]).decode().strip().split("\n")
     assert len(lines) == 5
     json.loads(lines[0])
+    # one marker per posted file, renamed into place (no tmp left behind)
+    assert sorted(os.listdir(f.status_dir)) == sorted(n + ".finished" for n in f.files)
+
+
+def _add_files(dst, src):
+    """Copy fixture ``src``'s encrypted files and sidecar rows into ``dst``."""
+    for name in src.files:
+        shutil.copy(os.path.join(src.input_dir, name), dst.input_dir)
+    sidecar = "metadata.sidecar.jsonl"
+    with open(os.path.join(src.input_dir, sidecar)) as fh:
+        rows = fh.read()
+    with open(os.path.join(dst.input_dir, sidecar), "a") as fh:
+        fh.write(rows)
+    return [json.loads(line) for line in rows.splitlines()]
+
+
+def test_http_sink_refuses_wrong_key_file_unposted(spark, tmp_path, receiver):
+    """A file whose data key resolves to the wrong key decrypts to non-gzip:
+    the sink fails naming it, and the receiver never gets its body and no
+    marker says it finished."""
+    srv, url = receiver
+    f = fx.generate(str(tmp_path / "a"), n_files=2, records_per_file=3, seed=41)
+    other = fx.generate(
+        str(tmp_path / "b"), topic="db.core.other", n_files=1, records_per_file=3, seed=42
+    )
+    [bad_meta] = _add_files(f, other)
+    victim = bad_meta["fileName"]
+    wrong = base64.b64encode(b"\x01" * 32).decode()
+
+    def key_lookup(pairs):
+        return [
+            (kid, ct, wrong if ct == bad_meta["cipherText"] else fx.decrypt_data_key(ct))
+            for kid, ct in pairs
+        ]
+
+    cfg = delivery.RunConfig(correlation_id="wk", topic_name=f.topic)
+    result = delivery.build_decrypted(
+        spark, f.input_dir, f.status_dir, cfg, key_lookup=key_lookup
+    )
+    with pytest.raises(Exception, match="ValueError: " + re.escape(victim)):
+        http_sink.http_deliver(
+            result.delivered, url, correlation_id="wk", export_date="d",
+            status_dir=f.status_dir,
+        )
+    posted = [{k.lower(): v for k, v in r["headers"].items()} for r in _Receiver.store]
+    assert victim.replace(".txt.gz.enc", ".json.gz") not in [h["filename"] for h in posted]
+    assert victim + ".finished" not in os.listdir(f.status_dir)
+
+
+def test_http_sink_unresolved_key_raises_naming_file(spark, tmp_path, receiver):
+    """A key lookup that resolves nothing fails the sink with a ValueError
+    naming the file, before any POST."""
+    srv, url = receiver
+    f = fx.generate(str(tmp_path), n_files=1, records_per_file=3, seed=43)
+    cfg = delivery.RunConfig(correlation_id="nk", topic_name=f.topic)
+    result = delivery.build_decrypted(
+        spark, f.input_dir, f.status_dir, cfg, key_lookup=lambda pairs: []
+    )
+    with pytest.raises(Exception, match="ValueError: " + re.escape(f.files[0])):
+        http_sink.http_deliver(
+            result.delivered, url, correlation_id="nk", export_date="d",
+            status_dir=f.status_dir,
+        )
+    assert _Receiver.store == []
+    assert os.listdir(f.status_dir) == []
 
 
 def test_http_sink_retries_then_succeeds(spark, tmp_path, receiver):

@@ -4,7 +4,13 @@
 import base64
 import gzip
 import os
+import re
+import tempfile
 import time
+import zlib
+
+import pyarrow as pa
+import pytest
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -33,13 +39,108 @@ def test_corrupt_payload_routed_not_fatal(spark, tmp_path):
     assert [r["fileName"] for r in bad.collect()] == [f.files[1]]
     assert good.count() == 3 * 5  # three intact files fully parsed
     # strict mode would raise on the same input
-    import pytest
-
     with pytest.raises(Exception):
         delivery.parse_records(result.delivered, tolerant=False).count()
 
 
 # ---- property-based (hypothesis) --------------------------------------------
+
+
+_KEY, _IV = bytes(range(32)), bytes(range(16))
+_SINK_ROW = dict(
+    fileName="db.core.claimant-045-050-000001.txt.gz.enc",
+    outputFileName="db.core.claimant-045-050-000001.json.gz",
+    topic="db.core.claimant",
+    database="core",
+    collection="claimant",
+    route="delivered",
+)
+_SINK_SCHEMA = pa.schema(
+    [(c, pa.string()) for c in _SINK_ROW]
+    + [("content", pa.binary()), ("plaintextKey", pa.string()), ("iv", pa.string())]
+)
+
+
+def _reference_sink(content, key_b64, iv_b64):
+    """Plain-Python model of one delivered file: (payload, records), or None
+    where the sink must refuse the file."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    if content is None or key_b64 is None or iv_b64 is None:
+        return None
+    key, iv = base64.b64decode(key_b64), base64.b64decode(iv_b64)
+    if len(key) not in (16, 24, 32) or len(iv) != 16:
+        return None
+    payload = Cipher(algorithms.AES(key), modes.CTR(iv)).decryptor().update(content)
+    try:
+        text = gzip.decompress(payload)
+    except (OSError, EOFError, zlib.error):
+        return None
+    if not payload:
+        return None
+    return payload, sum(1 for line in text.split(b"\n") if line.strip(b" "))
+
+
+_LINE = st.one_of(
+    st.sampled_from([b"", b" ", b"   ", b"\t", b"\r", b" \r ", b'{"a": 1}', b"bad\xff\xfeline"]),
+    st.binary(max_size=16).filter(lambda b: b"\n" not in b),
+)
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    lines=st.lists(_LINE, max_size=12),
+    trailing_newline=st.booleans(),
+    case=st.sampled_from(
+        ["valid", "empty_gzip", "blank_gzip", "truncated", "wrong_key", "wrong_iv",
+         "short_key", "null_content", "null_key", "null_iv"]
+    ),
+    cut=st.integers(0, 1 << 20),
+)
+def test_sink_matches_reference_on_hostile_payloads(lines, trailing_newline, case, cut):
+    """The sink's batch function, driven without Spark, against a plain-Python
+    reference: on success the output bytes and record count match and the
+    marker exists; on failure it raises a ValueError naming the file, with no
+    output and no marker. A blocked row ahead of it writes nothing."""
+    body = b"\n".join(lines) + (b"\n" if trailing_newline else b"")
+    body = {"empty_gzip": b"", "blank_gzip": b" \n\n   \n"}.get(case, body)
+    gz = gzip.compress(body, mtime=0)
+    if case == "truncated":
+        gz = gz[: cut % len(gz)]
+    key = {"wrong_key": bytes(reversed(_KEY)), "short_key": _KEY[:7]}.get(case, _KEY)
+    iv = bytes(reversed(_IV)) if case == "wrong_iv" else _IV
+    row = {
+        **_SINK_ROW,
+        "content": crypto._ctr_transform(gz, _KEY, _IV),
+        "plaintextKey": base64.b64encode(key).decode(),
+        "iv": base64.b64encode(iv).decode(),
+    }
+    null = {"null_content": "content", "null_key": "plaintextKey", "null_iv": "iv"}
+    if case in null:
+        row[null[case]] = None
+    want = _reference_sink(row["content"], row["plaintextKey"], row["iv"])
+    blocked = {**row, "fileName": "blocked.enc", "outputFileName": "blocked", "route": "blocked"}
+    batch = pa.RecordBatch.from_pylist([blocked, row], schema=_SINK_SCHEMA)
+
+    with tempfile.TemporaryDirectory() as d:
+        out_dir, status_dir = os.path.join(d, "out"), os.path.join(d, "status")
+        os.makedirs(out_dir)
+        os.makedirs(status_dir)
+        sink = delivery.deliver_batches(out_dir, status_dir, iter([batch]))
+        if want is None:
+            with pytest.raises(ValueError, match=re.escape(row["fileName"])):
+                list(sink)
+            assert os.listdir(out_dir) == [] and os.listdir(status_dir) == []
+            return
+        receipts = pa.Table.from_batches(list(sink)).to_pylist()
+        assert [(r["route"], r["payload_bytes"], r["records"]) for r in receipts] == [
+            ("blocked", 0, 0),
+            ("delivered", len(want[0]), want[1]),
+        ]
+        assert os.listdir(out_dir) == [row["outputFileName"]]
+        with open(os.path.join(out_dir, row["outputFileName"]), "rb") as fh:
+            assert fh.read() == want[0]
+        assert os.listdir(status_dir) == [row["fileName"] + ".finished"]
 
 
 @settings(max_examples=50, deadline=None)
@@ -196,6 +297,7 @@ def test_duplicate_attempts_race_is_idempotent(spark, tmp_path):
 
     out_dir = str(tmp_path / "out")
     status_dir = str(tmp_path / "status")
+    key, iv = b"0" * 16, b"1" * 16
     files = [
         (
             f"db.core.claimant-000-001-{i:06d}.txt.gz.enc",
@@ -203,7 +305,14 @@ def test_duplicate_attempts_race_is_idempotent(spark, tmp_path):
             "db.core.claimant",
             "db",
             "core.claimant",
-            bytearray(gzip.compress(f"payload-{i}|".encode() * 64, mtime=0)),
+            "delivered",
+            bytearray(
+                crypto._ctr_transform(
+                    gzip.compress(f"payload-{i}|".encode() * 64, mtime=0), key, iv
+                )
+            ),
+            base64.b64encode(key).decode(),
+            base64.b64encode(iv).decode(),
             copy,
         )
         for i in range(8)
@@ -211,7 +320,8 @@ def test_duplicate_attempts_race_is_idempotent(spark, tmp_path):
     ]
     schema = (
         "fileName string, outputFileName string, topic string, database string, "
-        "collection string, decrypted binary, copy int"
+        "collection string, route string, content binary, plaintextKey string, "
+        "iv string, copy int"
     )
     dup = spark.createDataFrame(files, schema).repartition(16, "fileName", "copy")
 
@@ -220,14 +330,8 @@ def test_duplicate_attempts_race_is_idempotent(spark, tmp_path):
         time.sleep(0.3)  # tasks run in waves; overlapping write windows
         return b
 
-    raced = dup.withColumn("decrypted", aligned("decrypted")).drop("copy")
-    delivery.deliver(
-        delivery.DeliveryResult(
-            delivered=raced, rejected=raced.limit(0), blocked=raced.limit(0)
-        ),
-        out_dir,
-        status_dir,
-    )
+    raced = dup.withColumn("content", aligned("content")).drop("copy")
+    delivery.deliver(delivery.DeliveryResult(raced), out_dir, status_dir)
     outs = sorted(os.listdir(out_dir))
     assert outs == sorted(f[1] for f in files[::2])  # one output per file, no tmp junk
     for i in range(8):
