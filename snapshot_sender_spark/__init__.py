@@ -19,12 +19,10 @@ Layout:
 
 __version__ = "0.1.0"
 
-# Worker-side fixed-cost guards (see pyboundary.py): importing the package —
+# Worker-side fixed-cost guard (see pyboundary.py): importing the package —
 # which every Spark Python worker does while unpickling the first task that
 # references one of our UDFs/kernels — caps the per-task
-# importlib.invalidate_caches() zip re-parse at one stat() per archive, and
-# (worker processes only; self-detecting no-op in the driver) freezes the
-# import graph out of the daemon's per-task gc.collect() working set.
-from .pyboundary import install_worker_boundary_guards as _install_guards
+# importlib.invalidate_caches() zip re-parse at one stat() per archive.
+from .pyboundary import install_zipimport_guard as _install_guard
 
-_install_guards()
+_install_guard()

@@ -19,6 +19,7 @@ from __future__ import annotations
 import base64
 import gzip
 import io
+import zlib
 
 import pandas as pd
 from pyspark.sql import functions as F
@@ -135,8 +136,9 @@ def decrypt_explode_lines_kernel(batches):
     * lines = split on '\\n' keeping trailing empties (split(payload,'\\n',-1)),
       then keep only lines where length(trim(line)) > 0 — Spark's ``trim``
       strips U+0020 only, which pc.utf8_trim(line, ' ') reproduces;
-    * undecodable gzip raises, failing the task (the non-tolerant contract —
-      the tolerant path routes through gunzip_or_null instead).
+    * a payload that does not decrypt or gunzip raises a ValueError naming
+      the file, failing the task (the non-tolerant contract — the tolerant
+      path routes through gunzip_or_null instead).
 
     Why not zero-copy offsets over the decompressed buffer: an Arrow string
     array's single offsets vector makes consecutive strings adjacent in the
@@ -149,9 +151,9 @@ def decrypt_explode_lines_kernel(batches):
     import pyarrow as pa
     import pyarrow.compute as pc
 
-    from ..pyboundary import install_worker_boundary_guards
+    from ..pyboundary import install_zipimport_guard
 
-    install_worker_boundary_guards()
+    install_zipimport_guard()
 
     def emit(fn, tp, texts, rows):
         bin_arr = pa.array(texts, type=pa.large_binary())
@@ -186,10 +188,17 @@ def decrypt_explode_lines_kernel(batches):
             # cryptography's rust binding accepts only `bytes` (a memoryview
             # over the Arrow buffer is rejected) — one copy per payload, noise
             # next to the AES work itself
-            plain = decrypt_payload(content[i].as_py(), key[i].as_py(), iv[i].as_py())
-            if plain is None:
-                continue
-            t = gzip.decompress(plain)
+            try:
+                plain = decrypt_payload(content[i].as_py(), key[i].as_py(), iv[i].as_py())
+                if plain is None:
+                    continue
+                t = gzip.decompress(plain)
+            except ValueError as e:  # a malformed key or IV (binascii.Error is one)
+                raise ValueError(f"{fn[i].as_py()}: payload does not decrypt ({e})") from e
+            except (OSError, EOFError, zlib.error) as e:  # wrong key, truncation
+                raise ValueError(
+                    f"{fn[i].as_py()}: decrypted payload is not valid gzip ({e})"
+                ) from e
             texts.append(t)
             rows.append(i)
             pending += len(t)

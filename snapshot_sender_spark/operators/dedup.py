@@ -385,9 +385,9 @@ def _jaccard_gemm_broadcast(
         # (idempotent, soft: never fail the kernel for an optimization;
         # see pyboundary.py)
         try:
-            from snapshot_sender_spark.pyboundary import install_worker_boundary_guards
+            from snapshot_sender_spark.pyboundary import install_zipimport_guard
 
-            install_worker_boundary_guards()
+            install_zipimport_guard()
         except Exception:
             pass
         d = bc.value

@@ -24,11 +24,18 @@ unchanged — exactly the semantics newer CPython adopted for this method (the
 that *does* change (e.g. an updated ``--py-files`` artifact) still triggers
 the original full re-read, so import correctness is preserved.
 
-Installation: imported from ``snapshot_sender_spark/__init__.py``, so the
-guard lands in any interpreter that imports this package — including every
-reused Spark Python worker, which imports the package while unpickling the
-first task whose UDF/kernel references it.  The first task of a fresh worker
-pays the legacy cost once; every later task on that worker skips it.
+Installation: ``_workerboot/sitecustomize.py`` installs it at interpreter
+start in every Python process the Spark JVM launches (``session.get_spark``
+puts that directory on PYTHONPATH).  ``snapshot_sender_spark/__init__.py``,
+the delivery parse kernel and the dedup/similarity closures (which never
+import the package) install it again, idempotently, so any interpreter that
+runs our code has it.
+
+Measured at 4 cores (``perfbench/run.py --seconds 10``, seven alternating
+pairs): without the guard ``delivery_mixed`` ``job_s_p50`` rose from
+0.95-1.15 to 1.29-1.47 reference-seconds, so it stays.  The worker hook that froze the
+import graph out of the daemon's per-task garbage collection measured flat at
+4 cores and was removed.
 """
 
 from __future__ import annotations
@@ -39,11 +46,14 @@ import zipimport
 
 def install_zipimport_guard() -> bool:
     """Idempotently install the mtime/size guard; returns True if installed
-    by this call, False if it was already present."""
+    by this call, False if it was already present or this Python cannot
+    take it (a missed optimization must not fail a task)."""
     zi = zipimport.zipimporter
     if getattr(zi, "_ssp_mtime_guard", False):
         return False
-    orig = zi.invalidate_caches
+    orig = getattr(zi, "invalidate_caches", None)
+    if orig is None:  # zipimporter has the method from Python 3.10 on
+        return False
 
     def invalidate_caches(self):  # noqa: ANN001 - zipimporter instance
         try:
@@ -60,85 +70,9 @@ def install_zipimport_guard() -> bool:
         if sig is not None and getattr(self, "_files", None):
             self._ssp_archive_sig = sig
 
-    zi.invalidate_caches = invalidate_caches
-    zi._ssp_mtime_guard = True
-    return True
-
-
-def install_worker_gc_freeze() -> bool:
-    """In Spark Python WORKER processes, freeze the long-lived import graph
-    out of the cyclic-GC working set after the first post-task collect.
-
-    Measured pathology (round 13, CPython 3.11 + Spark 4.1): the daemon's
-    worker-reuse loop runs a FULL ``gc.collect()`` after EVERY task
-    (pyspark/daemon.py:244) — 19-28 ms per call once the worker has imported
-    pyspark.worker + numpy/pandas/pyarrow (~70k tracked objects). A reused
-    worker cannot accept its next task until that collect finishes, so any
-    stage that runs several tasks per worker (the 136-task GEMM pair stages
-    = 4-5 sequential tasks per worker on local[32]) serializes ~20 ms of
-    pure GC scan between consecutive tasks.
-
-    Fix: wrap ``gc.collect`` so the FIRST wrapped call runs the original
-    collect (real cyclic garbage from task 1 is still freed) and then
-    ``gc.freeze()``s the survivors — the import graph and session-lived
-    state move to the permanent generation, exactly the server pattern
-    ``gc.freeze`` is documented for. Later per-task collects scan only
-    post-freeze allocations (measured ~0 ms) while still collecting each
-    task's own cyclic garbage. Only objects ALIVE at the single freeze
-    point become uncollectable-if-later-cyclic; that set is the module
-    graph, which lives for the worker's lifetime anyway.
-
-    Scope guard: installed ONLY when the process is a Spark Python worker
-    or daemon (``pyspark.daemon``/``pyspark.worker`` already imported —
-    true during task unpickling, never in the driver). The driver's
-    automatic generational GC is untouched (CPython's auto-collections do
-    not call the Python-level ``gc.collect`` wrapper).
-
-    Trigger guard: the freeze fires only when the wrapped collect is
-    invoked FROM the daemon's worker-reuse loop (caller frame in
-    ``pyspark/daemon.py``) — i.e. strictly between tasks. A mid-task
-    ``gc.collect()`` from user code or a library under memory pressure
-    runs the plain collect and must NOT freeze, or the task's in-flight
-    data would be pinned in the permanent generation for the worker's
-    lifetime.
-    """
-    import sys
-
-    if not ("pyspark.daemon" in sys.modules or "pyspark.worker" in sys.modules):
-        return False
-    import gc
-
-    if getattr(gc, "_ssp_freeze_wrapper", False):
-        return False
-    orig = gc.collect
-    state = {"frozen": False}
-    daemon_py = os.path.join("pyspark", "daemon.py")
-
-    def collect(generation: int = 2) -> int:
-        n = orig(generation)
-        if not state["frozen"]:
-            try:
-                caller = sys._getframe(1).f_code.co_filename
-            except ValueError:
-                caller = ""
-            if caller.endswith(daemon_py):
-                gc.freeze()
-                state["frozen"] = True
-        return n
-
-    gc.collect = collect
-    gc._ssp_freeze_wrapper = True
-    return True
-
-
-def install_worker_boundary_guards() -> None:
-    """Soft-install every worker-side fixed-cost guard (zipimport + GC
-    freeze); never raises — a failed optimization must not fail a task."""
     try:
-        install_zipimport_guard()
-    except Exception:
-        pass
-    try:
-        install_worker_gc_freeze()
-    except Exception:
-        pass
+        zi.invalidate_caches = invalidate_caches
+        zi._ssp_mtime_guard = True
+    except (AttributeError, TypeError):  # a built-in type refuses new attributes
+        return False
+    return True

@@ -81,65 +81,27 @@ def test_line_carries_self_adjudicating_load():
     assert keys[-3:] == ["load1_start", "load1_end", "load1_lap_max"]
 
 
-def test_load_gate_waits_are_bounded_and_reported(monkeypatch):
-    """wait_for_quiet: sleeps only while load1 is above the threshold, spends
-    at most the shared budget, and the printed line reports total waited_s."""
-    med = {"q": 1.0}
-    # the line surfaces the wait total
-    load = {"start": [9.0, 1, 1], "end": [0.5, 1, 1],
-            "laps": [[0.5, 1, 1]], "waits": [["cold", 30.0, 0.7], ["warm0", 15.0, 0.6]]}
-    line = bench.format_line(med, med, med, 0.1, load=load)
-    assert json.loads(line)["waited_s"] == 45.0
-
-    # bounded: a never-quiet box stops at the budget, never spins forever
-    slept = []
-    monkeypatch.setattr(bench.time, "sleep", lambda s: slept.append(s))
-    monkeypatch.setattr(bench, "loadavg", lambda: [99.0, 9, 9])
-    bench._wait_budget[0] = 45.0
-    samples = {}
-    bench.wait_for_quiet("t", samples)
-    assert sum(slept) == 45.0 and bench._wait_budget[0] == 0
-    assert samples["waits"][0][0] == "t"
-    # a quiet box never sleeps
-    slept.clear()
-    bench._wait_budget[0] = 100.0
-    monkeypatch.setattr(bench, "loadavg", lambda: [0.3, 1, 1])
-    bench.wait_for_quiet("t2", samples)
-    assert not slept
-    bench._wait_budget[0] = bench.MAX_WAIT_S
-
-
 def test_stat_marker_reports_actual_lap_count():
-    """Bonus laps change min-of-N: the stat marker must say so."""
+    """The stat marker names the lap count behind the min: min-of-N."""
     t = {"q": 1.0}
     assert json.loads(bench.format_line(t, t, t, 0.1))["stat"] == "min5"
     assert json.loads(bench.format_line(t, t, t, 0.1, laps_max=7))["stat"] == "min7"
 
 
-def test_load_gate_is_self_load_aware(monkeypatch):
-    """Round-12 gate: the bench's OWN just-finished burst must not trigger
-    waits (its exponential decay is subtracted), while the same absolute
-    load WITHOUT a self-anchor (= co-tenant) does."""
-    slept = []
-    monkeypatch.setattr(bench.time, "sleep", lambda s: slept.append(s))
-    # co-tenant load 3.0, no self anchor: above 1.5 -> waits until budget out
-    bench._self_anchor[0] = None
-    monkeypatch.setattr(bench, "loadavg", lambda: [3.0, 3, 3])
-    bench._wait_budget[0] = 30.0
-    bench.wait_for_quiet("noisy", s1 := {})
-    assert sum(slept) == 30.0 and s1["waits"]
-    # same load 3.0 but OUR burst just ended at 3.2: fully explained -> no wait
-    slept.clear()
-    bench._wait_budget[0] = 100.0
-    bench.mark_self_load()
-    monkeypatch.setattr(bench, "loadavg", lambda: [3.0, 3, 3])
-    bench._self_anchor[0] = (bench.time.monotonic(), 3.2)
-    bench.wait_for_quiet("self", s2 := {})
-    assert not slept and "waits" not in s2
-    # an OLD anchor (decayed away) no longer excuses the load
-    bench._self_anchor[0] = (bench.time.monotonic() - 600.0, 3.2)
-    bench._wait_budget[0] = 15.0
-    bench.wait_for_quiet("stale", s3 := {})
-    assert sum(slept) == 15.0
-    bench._self_anchor[0] = None
-    bench._wait_budget[0] = bench.MAX_WAIT_S
+def test_per_run_record_is_never_overwritten(tmp_path, capsys):
+    """Two runs that start in the same second share a ``run_id``: the second
+    must leave the first run's record byte-for-byte intact, say so on stderr,
+    and still reach the printed line (a write failure never raises)."""
+    t = {"q": 1.0}
+    detail = {"cpus": 4, "sf": 0.1, "run_id": "20260101T000000Z", "queries_best": t}
+    bench.write_detail(detail, str(tmp_path))
+    record = tmp_path / "bench_runs" / "BENCH_DETAIL_c4_sf0.1_20260101T000000Z.json"
+    first = record.read_bytes()
+    assert json.loads(first) == detail
+
+    bench.write_detail({**detail, "queries_best": {"q": 2.0}}, str(tmp_path))
+    assert record.read_bytes() == first
+    assert str(record) in capsys.readouterr().err
+    # the canonical pointer follows the latest run
+    assert json.loads((tmp_path / "BENCH_DETAIL.json").read_text())["queries_best"] == {"q": 2.0}
+    assert json.loads(bench.format_line(t, t, t, 0.1, cpus=4))["cpus"] == 4

@@ -529,6 +529,36 @@ def test_parse_records_kernel_group_flush_identical(monkeypatch):
         assert b.schema.types == [pa.string(), pa.string(), pa.string()]
 
 
+def test_parse_records_names_the_file_it_fails_on(spark, tmp_path):
+    """A delivered file whose data key resolves to the wrong key decrypts to
+    non-gzip: the strict parse fails with a ValueError naming that file. A
+    key that is not base64 fails the same way."""
+    import base64 as b64
+    import re
+
+    import pyarrow as pa
+
+    from snapshot_sender_spark.functions import crypto
+
+    f = fx.generate(str(tmp_path), n_files=1, records_per_file=3, seed=29)
+    wrong = b64.b64encode(b"\x01" * 32).decode()
+    cfg = delivery.RunConfig(correlation_id="wk", topic_name=f.topic)
+    result = delivery.build_decrypted(
+        spark, f.input_dir, f.status_dir, cfg,
+        key_lookup=lambda pairs: [(kid, ct, wrong) for kid, ct in pairs],
+    )
+    with pytest.raises(Exception, match="ValueError: " + re.escape(f.files[0])):
+        delivery.parse_records(result.delivered).count()
+
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["f.enc"]), pa.array(["t"]), pa.array([b"x"], type=pa.binary()),
+         pa.array(["not base64!"]), pa.array([b64.b64encode(b"1" * 16).decode()])],
+        names=["fileName", "topic", "content", "plaintextKey", "iv"],
+    )
+    with pytest.raises(ValueError, match="^f.enc: payload does not decrypt"):
+        list(crypto.decrypt_explode_lines_kernel(iter([batch])))
+
+
 def test_local_strings_df_roundtrip(spark):
     """The VALUES LocalRelation builder (util.local_strings_df, r13: replaces
     createDataFrame's pickled-RDD scan in the key-join build) must round-trip

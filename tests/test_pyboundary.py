@@ -63,79 +63,3 @@ def test_missing_archive_degrades_to_original(tmp_path):
     os.unlink(zp)
     zi.invalidate_caches()  # stat fails -> falls through to the original path
     assert zi._files == {}
-
-
-def _collect_as_daemon():
-    """Call gc.collect() from a frame whose co_filename looks like pyspark's
-    daemon module — the wrapper gates the freeze on that caller."""
-    code = compile("import gc\n_n = gc.collect()\n", "/x/pyspark/daemon.py", "exec")
-    ns: dict = {}
-    exec(code, ns)
-    return ns["_n"]
-
-
-def test_gc_freeze_guard_worker_scope_and_semantics():
-    """install_worker_gc_freeze: refuses outside worker processes, installs
-    once when pyspark.worker is in sys.modules, the daemon's between-task
-    collect freezes the survivors exactly once, later collects still collect.
-
-    Freeze-once is asserted by COUNTING gc.freeze invocations, not by exact
-    equality on gc.get_freeze_count(): frozen objects freed via refcounting
-    legitimately drop that count between reads, which made the old exact-
-    equality pin flaky (it failed off-by-one in the round-13 driver run)."""
-    import gc
-
-    from snapshot_sender_spark.pyboundary import install_worker_gc_freeze
-
-    # this test process is not a worker (pyspark.daemon/worker not imported
-    # unless another test pulled them in) — simulate both sides explicitly
-    had_worker = "pyspark.worker" in sys.modules or "pyspark.daemon" in sys.modules
-    if not had_worker:
-        assert install_worker_gc_freeze() is False  # driver scope: refused
-        sys.modules["pyspark.worker"] = sys  # sentinel module object
-    orig_collect = gc.collect
-    orig_freeze = gc.freeze
-    freeze_calls = []
-
-    def counting_freeze():
-        freeze_calls.append(1)
-        orig_freeze()
-
-    try:
-        assert install_worker_gc_freeze() is True
-        assert install_worker_gc_freeze() is False  # idempotent
-        gc.freeze = counting_freeze
-
-        class _Cycle:
-            pass
-
-        a, b = _Cycle(), _Cycle()
-        a.other, b.other = b, a
-        del a, b
-        # a mid-task collect (caller is NOT the daemon loop) collects the
-        # cycle but must not freeze in-flight task data
-        n0 = gc.collect()
-        assert isinstance(n0, int) and n0 >= 2
-        assert freeze_calls == []
-
-        a, b = _Cycle(), _Cycle()
-        a.other, b.other = b, a
-        del a, b
-        n = _collect_as_daemon()  # daemon's between-task collect: collects...
-        assert isinstance(n, int) and n >= 2  # ...the fresh cycle
-        assert freeze_calls == [1]  # ...then freezes survivors, exactly once
-
-        c, d = _Cycle(), _Cycle()
-        c.other, d.other = d, c
-        del c, d
-        n2 = _collect_as_daemon()  # later calls: still collect NEW garbage
-        assert n2 >= 2
-        assert freeze_calls == [1]  # no second freeze
-    finally:
-        gc.freeze = orig_freeze
-        gc.collect = orig_collect
-        if getattr(gc, "_ssp_freeze_wrapper", False):
-            del gc._ssp_freeze_wrapper
-        gc.unfreeze()
-        if not had_worker and sys.modules.get("pyspark.worker") is sys:
-            del sys.modules["pyspark.worker"]

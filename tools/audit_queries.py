@@ -1,9 +1,10 @@
 """Round-13 optimization audit: time EVERY declared query (construction +
 noop-sink execution) at a given SF, one cold lap then N warm laps, and print
-the slowest ones. This is the coverage companion to tools/profile_bench.py
-(which covers only the headline set): the driver benches the headline
-queries, but the optimization mandate is every operator path — this sweep is
-how non-headline regressions/outliers get FOUND.
+the slowest ones. This is the whole-surface companion to
+``perfbench/run.py --workload analytics_headline --trace 1``, which splits
+only the headline queries into build and exec time: the bench times the
+headline queries, but the optimization mandate is every operator path — this
+sweep is how non-headline regressions/outliers get FOUND.
 
 Usage: python tools/audit_queries.py [sf_dir] [--laps 2] [--json OUT]
 """
