@@ -44,8 +44,12 @@ with ``perfbench.stats``: the share of the CPU ticks the lap wanted that were
 stolen (``*_steal_pct``), so a polluted lap is provably polluted. A ``perfbench.stats.host_probes`` speed
 probe is recorded before and after the laps (``probes_before_s``,
 ``probes_after_s``); it does not touch the engine, so only the host's state
-moves it. Warm-lap query order rotates by a coprime stride per lap, so a
-noise burst cannot tax the same query every lap.
+moves it. ``ref_total_sec`` (line and detail file) is ``best_total_sec`` in
+perfbench's reference-host seconds: scaled by ``stats.REFERENCE_PROBE_S``
+over the median of those probes, so runs taken at different host speeds
+compare; ``value`` stays raw wall seconds. Warm-lap query order rotates by
+a coprime stride per lap, so a noise burst cannot tax the same query every
+lap.
 
 LAP ORDER (revised round 6): headline COLD laps first (unchanged from
 rounds 1-5, so the cold column stays cross-round comparable — it must keep
@@ -98,6 +102,15 @@ HEADLINE = [
 ]
 
 WARM_LAPS = 5
+
+
+def ref_total_sec(best_total: float, load: dict) -> float | None:
+    """``best_total`` in reference-host seconds (wall × REFERENCE_PROBE_S /
+    the median speed probe of the run), or None for a run without probes."""
+    probes = load.get("probes_before_s", []) + load.get("probes_after_s", [])
+    if not probes:
+        return None
+    return round(best_total * stats.REFERENCE_PROBE_S / stats.median(probes), 3)
 
 
 def format_line(
@@ -153,6 +166,9 @@ def format_line(
         steals = load.get("lap_steal_pct")
         if steals:
             payload["steal_warm_max_pct"] = max(steals)
+        ref = ref_total_sec(sum(best.values()), load)
+        if ref is not None:
+            payload["ref_total_sec"] = ref
     if cpus is not None:  # run provenance on the line itself (r14, addition)
         payload["cpus"] = cpus
     line = json.dumps(payload, separators=(",", ":"))
@@ -303,6 +319,7 @@ def main():
             "queries_raw": raw,
             "queries_cold": cold,
             "load": load_samples,
+            "ref_total_sec": ref_total_sec(sum(best.values()), load_samples),
             "warm_laps": WARM_LAPS,
             "sf": sf,
             "sf_dir": sf_dir,

@@ -136,9 +136,10 @@ def decrypt_explode_lines_kernel(batches):
     * lines = split on '\\n' keeping trailing empties (split(payload,'\\n',-1)),
       then keep only lines where length(trim(line)) > 0 — Spark's ``trim``
       strips U+0020 only, which pc.utf8_trim(line, ' ') reproduces;
-    * a payload that does not decrypt or gunzip raises a ValueError naming
-      the file, failing the task (the non-tolerant contract — the tolerant
-      path routes through gunzip_or_null instead).
+    * a payload that does not decrypt or gunzip, or decrypts to no bytes at
+      all, raises a ValueError naming the file, failing the task (the
+      non-tolerant contract — the tolerant path routes through
+      gunzip_or_null instead).
 
     Why not zero-copy offsets over the decompressed buffer: an Arrow string
     array's single offsets vector makes consecutive strings adjacent in the
@@ -192,6 +193,8 @@ def decrypt_explode_lines_kernel(batches):
                 plain = decrypt_payload(content[i].as_py(), key[i].as_py(), iv[i].as_py())
                 if plain is None:
                     continue
+                if not plain:  # gzip.decompress(b"") == b"": would read as no lines
+                    raise EOFError("empty payload")
                 t = gzip.decompress(plain)
             except ValueError as e:  # a malformed key or IV (binascii.Error is one)
                 raise ValueError(f"{fn[i].as_py()}: payload does not decrypt ({e})") from e

@@ -22,6 +22,10 @@ per-family functions in operators/dedup.py and operators/similarity.py are
 now thin wrappers over this module; their signatures, table layouts, and
 plan shapes are unchanged (pinned by the existing index/service tests and
 oracle queries).
+
+Which epochs are committed is not recorded here: the services' replay
+markers, and the input fingerprint each one carries, live in
+streaming/epochs.py (``EpochLog``, ``fingerprint``).
 """
 
 from __future__ import annotations
@@ -44,7 +48,6 @@ __all__ = [
     "drop_stale_table_location",
     "append_epoch_partition",
     "fold_epoch_partitions",
-    "batch_fingerprint",
     "remove_ids_from_epoch_table",
     "remove_ids_from_partitioned_dir",
 ]
@@ -275,26 +278,6 @@ def _drop_partition(spark, table: str, epoch: int) -> None:
     write and the source drops (the window where folded rows exist in both
     places and only the key-dedup on re-run makes recovery curative)."""
     spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION (epoch={int(epoch)})")
-
-
-def batch_fingerprint(batch: DataFrame, *cols: str) -> dict:
-    """Order-insensitive fingerprint of a micro-batch over the given
-    columns: row count + XOR of per-row hashes — one cheap aggregate.
-    Stored inside an epoch marker so a replayed epoch can prove it carries
-    the SAME input: epoch ids restart at 0 under a fresh checkpoint, so a
-    marker from a previous checkpoint generation may collide with a batch
-    of entirely different content — silently fast-skipping would DROP the
-    new files, silently reprocessing would overwrite the committed epoch.
-    A fingerprint mismatch turns both into a loud, actionable error. Shared
-    by the text service (doc_id, text) and both media service modes
-    (media_id, content)."""
-    row = batch.agg(
-        F.count("*").alias("n"),
-        F.coalesce(
-            F.expr(f"bit_xor(hash({', '.join(cols)}))").cast("long"), F.lit(0)
-        ).alias("x"),
-    ).first()
-    return {"n": row["n"], "x": int(row["x"])}
 
 
 def remove_ids_from_epoch_table(spark, table: str, ids: DataFrame) -> int:

@@ -45,7 +45,7 @@ from pyspark.sql import types as T
 
 from ..functions import crypto, text
 from ..sources import fixtures as fx
-from ..util import local_strings_df
+from ..util import local_strings_df, write_atomic
 from ..sources.listing import (
     read_encrypted_files,
     read_encryption_meta,
@@ -271,17 +271,6 @@ def checked_files(batch):
         except ValueError as e:  # a malformed key or IV (binascii.Error is one)
             raise ValueError(f"{name}: payload does not decrypt ({e})") from e
         yield row, payload, _count_records(name, payload)
-
-
-def write_atomic(path: str, data: bytes, nonce: str) -> None:
-    """Per-attempt tmp file + ``os.replace``: duplicate (speculative) attempts
-    of a partition run concurrently, and a shared tmp path would let one
-    truncate the other's file mid-rename; this way the last writer wins over
-    identical content."""
-    tmp = f"{path}.{nonce}.tmp"
-    with open(tmp, "wb") as fh:
-        fh.write(data)
-    os.replace(tmp, path)
 
 
 def mark_finished(status_dir: str, file_name: str, nonce: str) -> None:

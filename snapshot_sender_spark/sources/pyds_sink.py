@@ -102,11 +102,12 @@ def _publish(path: str, messages, manifest_name: str) -> None:
 
 
 def _write_markers(status: str, entries) -> None:
+    from ..plans.delivery import mark_finished  # driver-side only: keeps worker imports light
+
+    nonce = uuid.uuid4().hex
     for e in entries:
         for fn in e["delivered"]:
-            marker = os.path.join(status, f"{fn}.finished")
-            with open(marker, "w") as fh:
-                fh.write(f"Finished {fn}")  # S3StatusFileWriter.kt:36 body shape
+            mark_finished(status, fn, nonce)
 
 
 def replay_markers(path: str) -> int:

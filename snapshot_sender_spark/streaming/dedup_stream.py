@@ -8,9 +8,10 @@ This is the streaming form of the training-data pipeline's daily-crawl dedup.
 Scale shape (mirrors the batch incremental operator): the corpus posting
 list is never re-shuffled — each batch sort-merge joins against pre-sorted
 index buckets in place; only the batch's own shingles shuffle. Within-batch
-near-dup uses the exact pair operator on the (small) batch. Epoch-id markers
-make replayed batches no-ops, the same idempotence contract as the streaming
-delivery service (streaming/delivery_stream.py).
+near-dup uses the exact pair operator on the (small) batch. Epoch markers
+(``<accepted>/_epochs/epoch_N.committed``, kept by the services' shared
+ledger streaming/epochs.py) make replayed batches no-ops and refuse a batch
+whose input fingerprint differs from its epoch's marker.
 
 Generalization beyond the reference: the reference never dedups payloads
 (src/main/kotlin has no near-dup stage); this implements the north-star
@@ -19,26 +20,20 @@ LLM-data requirement as a first-class streaming service.
 
 from __future__ import annotations
 
-import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, index_lifecycle
+from .epochs import EpochLog, fingerprint
 
 DOC_SCHEMA = "doc_id long, text string"
 
-# ONE source of truth for the epoch-marker filename: the writer
-# (_marker_path) and the parser (committed_epochs) both derive from it, so
-# a scheme change cannot silently break the fold-committed-epochs path.
-_MARKER_TEMPLATE = "epoch_{}.committed"
-_MARKER_RE = re.compile(_MARKER_TEMPLATE.format(r"(\d+)").replace(".", r"\."))
 
-
-def _marker_path(epochs_dir: str, epoch_id: int) -> str:
-    return os.path.join(epochs_dir, _MARKER_TEMPLATE.format(int(epoch_id)))
+def epoch_log(accepted_dir: str) -> EpochLog:
+    """The epoch markers of a dedup service (text, image or video)."""
+    return EpochLog(os.path.join(accepted_dir, "_epochs"), "epoch_{}.committed")
 
 
 def committed_epochs(accepted_dir: str) -> list[int]:
@@ -46,21 +41,7 @@ def committed_epochs(accepted_dir: str) -> list[int]:
     ``dedup.compact_dedup_index`` may fold (a compacted epoch's partition
     disappears, so crash-replay of an UNcommitted epoch would duplicate its
     postings; see the compaction docstring's durability contract)."""
-    epochs_dir = os.path.join(accepted_dir, "_epochs")
-    if not os.path.isdir(epochs_dir):
-        return []
-    out = []
-    for name in os.listdir(epochs_dir):
-        m = _MARKER_RE.fullmatch(name)
-        if m:
-            out.append(int(m.group(1)))
-    return sorted(out)
-
-
-def _batch_fingerprint(batch: DataFrame) -> dict:
-    """Epoch-collision guard over (doc_id, text) — the shared scheme lives
-    in operators/index_lifecycle.py:batch_fingerprint (rationale there)."""
-    return index_lifecycle.batch_fingerprint(batch, "doc_id", "text")
+    return list(epoch_log(accepted_dir).records())
 
 
 def run_streaming_ingestion_dedup(
@@ -92,28 +73,13 @@ def run_streaming_ingestion_dedup(
     every folded epoch has its marker committed (the fold reads the marker
     dir), and no epoch is in flight."""
     os.makedirs(accepted_dir, exist_ok=True)
-    epochs_dir = os.path.join(accepted_dir, "_epochs")
-    os.makedirs(epochs_dir, exist_ok=True)
+    ledger = epoch_log(accepted_dir)
     data_dir = os.path.join(accepted_dir, "data")
     epochs: list[int] = []
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
-        marker = _marker_path(epochs_dir, epoch_id)
-        fp = _batch_fingerprint(batch)
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                committed = fh.read()
-            if committed:
-                prev = json.loads(committed)
-                if prev != fp:
-                    raise RuntimeError(
-                        f"epoch {epoch_id} marker exists but its committed input "
-                        f"fingerprint {prev} != this batch's {fp}: epoch ids have "
-                        "collided across checkpoint generations (fresh checkpoint "
-                        "with retained markers?). Refusing to silently skip new "
-                        "data or overwrite the committed epoch — restore the "
-                        "matching checkpoint or clear the accepted dir."
-                    )
+        fp = fingerprint(batch, "doc_id", "text")
+        if ledger.check(epoch_id, fp):
             return
         epochs.append(epoch_id)
         # foreachBatch hands a CLONED session; the metastore is shared but
@@ -196,8 +162,7 @@ def run_streaming_ingestion_dedup(
             sess, index_table, accepted, "text", "doc_id", epoch_id,
             n_buckets=n_buckets, posting=accepted_posting,
         )
-        with open(marker, "w") as f:
-            f.write(json.dumps(fp))
+        ledger.commit(epoch_id, fp)
 
     reader = spark.readStream.schema(DOC_SCHEMA)
     if max_files_per_trigger is not None:
@@ -215,8 +180,8 @@ def run_streaming_ingestion_dedup(
         spark.catalog.refreshTable(index_table)
         spark.catalog.refreshTable(index_table + "_sizes")
         if compact_after:
-            # committed_epochs can only yield non-negative ids (the marker
-            # regex is \d+), so the reserved compacted partition is never in
+            # committed_epochs can only yield non-negative ids (EpochLog
+            # matches \d+), so the reserved compacted partition is never in
             # this list; compact_dedup_index additionally prunes to epochs
             # whose partitions still exist, making repeat cycles no-ops
             dedup.compact_dedup_index(

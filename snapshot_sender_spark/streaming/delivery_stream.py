@@ -7,7 +7,8 @@ declarative stages run continuously: a file-stream source watches the input
 prefix, each micro-batch runs decrypt→validate→route, and foreachBatch
 delivers with epoch-id idempotent commits (checkpoint + markers give
 exactly-once delivery across restarts — the streaming generalization of the
-reference's restart contract).
+reference's restart contract). The epoch markers ``<status>/_epoch_N.committed``
+are kept by the services' shared ledger, streaming/epochs.py.
 
 Local fixture layout (same as plans/delivery): encrypted objects + a
 metadata sidecar. The metadata side is re-read per batch (it grows with the
@@ -27,6 +28,7 @@ from pyspark.sql import functions as F
 from ..plans import delivery
 from ..sources.listing import ENCRYPTION_META_SCHEMA
 from ..util import local_strings_df
+from .epochs import EpochLog
 
 
 def read_encrypted_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -152,7 +154,9 @@ def run_streaming_delivery(
     key broadcast (``delivery.route_and_decrypt``) → the batch ``deliver()``
     sink (per file: decrypt, gunzip check, atomic rename + marker, fully
     distributed — decrypted bytes never reach the driver).
-    Epoch-id marker makes redelivery of a replayed batch a no-op; the only
+    The epoch's marker (``epochs.EpochLog``, fingerprint = crc of every
+    file's name, iv and cipherText) makes redelivery of a replayed batch a
+    no-op and refuses a different batch under a reused epoch id; the only
     driver-side collects are the metadata listing delta and the distinct-key
     set (both O(files-per-batch), not O(bytes))."""
     os.makedirs(output_dir, exist_ok=True)
@@ -161,46 +165,23 @@ def run_streaming_delivery(
 
     meta_stream = read_encrypted_stream(spark, input_dir)
 
+    ledger = EpochLog(status_dir, "_epoch_{}.committed")
+
     def deliver_batch(meta_df: DataFrame, epoch_id: int) -> None:
-        epoch_marker = os.path.join(status_dir, f"_epoch_{epoch_id}.committed")
         rows = meta_df.collect()  # file-level metadata: tiny
         # order-insensitive batch fingerprint, computed driver-side from the
-        # already-collected metadata (no extra job). Epoch ids restart at 0
-        # under a fresh checkpoint, so a marker retained from a previous
-        # checkpoint generation can collide with a batch of DIFFERENT files —
-        # silently fast-skipping would drop the new arrivals. A mismatch is a
-        # loud, actionable error instead (same contract as the ingestion-
-        # dedup service's fingerprinted markers, which hash CONTENT): each
-        # file's crc covers fileName + iv + cipherText, so a same-name batch
-        # whose objects were re-uploaded with different encryption material
-        # is detected too, not just a renamed one.
+        # already-collected metadata (no extra job), checked against the
+        # epoch's marker. Each file's crc covers fileName + iv + cipherText,
+        # so a same-name batch whose objects were re-uploaded with different
+        # encryption material is detected too, not just a renamed one.
         fp = {"v": 2, "n": len(rows), "x": 0}
-        legacy_fp = {"n": len(rows), "x": 0}  # v1 format: fileName-only XOR
         for r in rows:
             fp["x"] ^= zlib.crc32(
                 b"\x00".join(
                     (r["fileName"].encode(), r["iv"].encode(), r["cipherText"].encode())
                 )
             )
-            legacy_fp["x"] ^= zlib.crc32(r["fileName"].encode())
-        if os.path.exists(epoch_marker):
-            with open(epoch_marker) as fh:
-                committed = fh.read()
-            if committed and committed != "committed":  # legacy empty/plain markers skip
-                prev = json.loads(committed)
-                # a marker written before the fingerprint covered iv/cipherText
-                # has no "v" field — compare it against the v1 form so a
-                # legitimate crash-replay across a code upgrade stays a no-op
-                # instead of a false checkpoint-collision alarm
-                want = fp if prev.get("v") == 2 else legacy_fp
-                if prev != want:
-                    raise RuntimeError(
-                        f"epoch {epoch_id} marker exists but its committed batch "
-                        f"fingerprint {prev} != this batch's {want}: epoch ids have "
-                        "collided across checkpoint generations (fresh checkpoint "
-                        "with retained status dir?). Refusing to silently skip "
-                        "new arrivals — restore the matching checkpoint."
-                    )
+        if ledger.check(epoch_id, fp):
             return
         # the reference's already-processed filter (FinishedFilterProcessor
         # semantics): per-FILE idempotence — a replayed epoch whose marker was
@@ -238,8 +219,7 @@ def run_streaming_delivery(
             )
             # the batch receipt sink: the executors deliver the micro-batch
             delivery.deliver(result, output_dir, status_dir)
-        with open(epoch_marker, "w") as fh:
-            fh.write(json.dumps(fp))
+        ledger.commit(epoch_id, fp)
         epochs.append(epoch_id)
 
     q = (

@@ -26,7 +26,8 @@ Exchange, no sort, no decode on the corpus side. The index itself stays
 hot-band-free by construction: accepted signatures are pairwise more than
 max_hamming apart, so no two index rows ever share a full signature.
 Epoch markers + input fingerprints give the same replay-idempotence and
-collision-detection contract as the text service; ``compact_after`` folds
+collision-detection contract as the text service, through the same
+``_epochs`` markers (streaming/epochs.py); ``compact_after`` folds
 committed epoch partitions into the reserved epoch=-1 partition.
 
 Generalization beyond the reference: the reference never parses payloads
@@ -36,14 +37,14 @@ dedup requirement as a first-class streaming service.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, index_lifecycle, multimodal
-from .dedup_stream import _marker_path, committed_epochs  # shared marker scheme
+from .dedup_stream import committed_epochs, epoch_log  # one marker layout for all three
+from .epochs import fingerprint
 
 MEDIA_SCHEMA = "media_id long, content binary"
 
@@ -55,12 +56,6 @@ __all__ = [
     "committed_epochs",
     "MEDIA_SCHEMA",
 ]
-
-
-def _media_fingerprint(batch: DataFrame) -> dict:
-    """Epoch-collision guard over (media_id, content) — the shared scheme
-    lives in operators/index_lifecycle.py:batch_fingerprint."""
-    return index_lifecycle.batch_fingerprint(batch, "media_id", "content")
 
 
 def run_streaming_media_dedup(
@@ -90,26 +85,13 @@ def run_streaming_media_dedup(
     epochs fast-skip on the marker after verifying the input fingerprint."""
     sig_fn = signature if signature is not None else multimodal.image_ahash
     os.makedirs(accepted_dir, exist_ok=True)
-    epochs_dir = os.path.join(accepted_dir, "_epochs")
-    os.makedirs(epochs_dir, exist_ok=True)
+    ledger = epoch_log(accepted_dir)
     data_dir = os.path.join(accepted_dir, "data")
     epochs: list[int] = []
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
-        marker = _marker_path(epochs_dir, epoch_id)
-        fp = _media_fingerprint(batch)
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                committed = fh.read()
-            if committed:
-                prev = json.loads(committed)
-                if prev != fp:
-                    raise RuntimeError(
-                        f"epoch {epoch_id} marker exists but its committed input "
-                        f"fingerprint {prev} != this batch's {fp}: epoch ids have "
-                        "collided across checkpoint generations. Refusing to "
-                        "silently skip new data or overwrite the committed epoch."
-                    )
+        fp = fingerprint(batch, "media_id", "content")
+        if ledger.check(epoch_id, fp):
             return
         epochs.append(epoch_id)
         sess = batch.sparkSession
@@ -160,8 +142,7 @@ def run_streaming_media_dedup(
         dedup.append_sig_index_epoch(
             sess, index_table, accepted, epoch=epoch_id, n_buckets=n_buckets
         )
-        with open(marker, "w") as f:
-            f.write(json.dumps(fp))
+        ledger.commit(epoch_id, fp)
 
     reader = spark.readStream.schema(MEDIA_SCHEMA)
     if max_files_per_trigger is not None:
@@ -234,26 +215,13 @@ def run_streaming_video_dedup(
                 .select("media_id", F.xxhash64("ahash").alias("h"))
             )
     os.makedirs(accepted_dir, exist_ok=True)
-    epochs_dir = os.path.join(accepted_dir, "_epochs")
-    os.makedirs(epochs_dir, exist_ok=True)
+    ledger = epoch_log(accepted_dir)
     data_dir = os.path.join(accepted_dir, "data")
     epochs: list[int] = []
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
-        marker = _marker_path(epochs_dir, epoch_id)
-        fp = _media_fingerprint(batch)
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                committed = fh.read()
-            if committed:
-                prev = json.loads(committed)
-                if prev != fp:
-                    raise RuntimeError(
-                        f"epoch {epoch_id} marker exists but its committed input "
-                        f"fingerprint {prev} != this batch's {fp}: epoch ids have "
-                        "collided across checkpoint generations. Refusing to "
-                        "silently skip new data or overwrite the committed epoch."
-                    )
+        fp = fingerprint(batch, "media_id", "content")
+        if ledger.check(epoch_id, fp):
             return
         epochs.append(epoch_id)
         sess = batch.sparkSession
@@ -328,8 +296,7 @@ def run_streaming_video_dedup(
             sess, index_table, None, "", "", epoch_id,
             n_buckets=n_buckets, posting=accepted_posting,
         )
-        with open(marker, "w") as f:
-            f.write(json.dumps(fp))
+        ledger.commit(epoch_id, fp)
 
     reader = spark.readStream.schema(MEDIA_SCHEMA)
     if max_files_per_trigger is not None:

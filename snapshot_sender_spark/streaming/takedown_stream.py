@@ -5,7 +5,8 @@ dedup service's state (persisted index + accepted corpus) through the
 round-8 takedown operators, then commits an AUDIT MANIFEST per batch.
 
 Contract mirrors the ingestion services: per-batch markers under
-``accepted_dir/_takedowns`` fast-skip replayed batches after verifying the
+``accepted_dir/_takedowns`` (the shared ledger streaming/epochs.py, which
+writes each one whole) fast-skip replayed batches after verifying the
 request fingerprint (epoch-collision guard), and the underlying removals
 are delete-only and convergent — a crash anywhere re-runs to the same
 state, so the marker is audit + fast-skip, never the only idempotence
@@ -35,14 +36,12 @@ Three kinds, matching the ingestion services:
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from ..operators import index_lifecycle
 from . import dedup_stream, media_dedup_stream
+from .epochs import EpochLog, fingerprint
 
 REQUEST_SCHEMA = "id long"
 
@@ -61,17 +60,13 @@ _KINDS = {
 __all__ = ["run_streaming_takedown", "takedown_manifests", "REQUEST_SCHEMA"]
 
 
+def _ledger(accepted_dir: str) -> EpochLog:
+    return EpochLog(os.path.join(accepted_dir, "_takedowns"), "batch_{}.json")
+
+
 def takedown_manifests(accepted_dir: str) -> dict[int, dict]:
     """Committed takedown audit manifests by batch id."""
-    tdir = os.path.join(accepted_dir, "_takedowns")
-    if not os.path.isdir(tdir):
-        return {}
-    out = {}
-    for name in sorted(os.listdir(tdir)):
-        if name.startswith("batch_") and name.endswith(".json"):
-            with open(os.path.join(tdir, name)) as fh:
-                out[int(name[len("batch_"):-len(".json")])] = json.load(fh)
-    return out
+    return _ledger(accepted_dir).records()
 
 
 def run_streaming_takedown(
@@ -91,50 +86,30 @@ def run_streaming_takedown(
     if kind not in _KINDS:
         raise ValueError(f"kind must be one of {sorted(_KINDS)}, got {kind!r}")
     takedown = _KINDS[kind]
-    tdir = os.path.join(accepted_dir, "_takedowns")
-    os.makedirs(tdir, exist_ok=True)
+    ledger = _ledger(accepted_dir)
     batches: list[int] = []
 
     def process(batch: DataFrame, batch_id: int) -> None:
-        marker = os.path.join(tdir, f"batch_{int(batch_id)}.json")
-        fp = index_lifecycle.batch_fingerprint(batch, "id")
-        if os.path.exists(marker):
-            with open(marker) as fh:
-                committed = json.load(fh)
-            prev = {"n": committed["n"], "x": committed["x"]}
-            if prev != fp:
-                raise RuntimeError(
-                    f"takedown batch {batch_id} manifest exists but its request "
-                    f"fingerprint {prev} != this batch's {fp}: batch ids have "
-                    "collided across checkpoint generations. Refusing to skip "
-                    "new removal requests or double-book the audit trail."
-                )
+        fp = fingerprint(batch, "id")
+        if ledger.check(batch_id, fp):
             return
         batches.append(batch_id)
         sess = batch.sparkSession
         ids = batch.select("id").distinct().localCheckpoint()
         removed = takedown(sess, accepted_dir, index_table, ids)
-        # ATOMIC commit (tmp + rename): a crash mid-write must leave either
-        # no marker (replay re-runs the convergent removals) or a complete
-        # one — a truncated marker would make every replay die in json.load
-        # instead of taking the designed fingerprint-verify path
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "n": fp["n"],
-                    "x": fp["x"],
-                    "kind": kind,
-                    "distinct_ids": ids.count(),
-                    "corpus_rows_removed": int(removed),
-                    # replay-sensitivity marker — see module docstring: a
-                    # crash after the removals but before this write replays
-                    # the batch against cleaned state and records 0 here
-                    "rows_removed_semantics": "as-of-this-run",
-                },
-                fh,
-            )
-        os.replace(tmp, marker)
+        ledger.commit(
+            batch_id,
+            {
+                **fp,
+                "kind": kind,
+                "distinct_ids": ids.count(),
+                "corpus_rows_removed": int(removed),
+                # replay-sensitivity marker — see module docstring: a crash
+                # after the removals but before this commit replays the
+                # batch against cleaned state and records 0 here
+                "rows_removed_semantics": "as-of-this-run",
+            },
+        )
 
     reader = spark.readStream.schema(REQUEST_SCHEMA)
     if max_files_per_trigger is not None:

@@ -35,6 +35,17 @@ def write_once(final_dir: str, write_fn: Callable[[str], None], probe: str | Non
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def write_atomic(path: str, data: bytes, nonce: str) -> None:
+    """Per-attempt tmp file + ``os.replace``: duplicate (speculative) attempts
+    of a partition run concurrently, and a shared tmp path would let one
+    truncate the other's file mid-rename; this way the last writer wins over
+    identical content."""
+    tmp = f"{path}.{nonce}.tmp"
+    with open(tmp, "wb") as fh:
+        fh.write(data)
+    os.replace(tmp, path)
+
+
 def local_strings_df(spark, rows, colnames):
     """Small driver-side string table as a SQL VALUES LocalRelation.
 

@@ -105,3 +105,24 @@ def test_per_run_record_is_never_overwritten(tmp_path, capsys):
     # the canonical pointer follows the latest run
     assert json.loads((tmp_path / "BENCH_DETAIL.json").read_text())["queries_best"] == {"q": 2.0}
     assert json.loads(bench.format_line(t, t, t, 0.1, cpus=4))["cpus"] == 4
+
+
+def test_ref_total_scales_best_by_the_run_probes():
+    """``ref_total_sec`` is the best total in reference-host seconds: a host
+    probing twice as slow as the reference halves it; ``value`` stays raw."""
+    from perfbench import stats
+
+    med = _fake_timings()
+    best = {n: v - 2.0 for n, v in med.items()}
+    slow = 2 * stats.REFERENCE_PROBE_S
+    load = {
+        "start": [0.5], "end": [0.7], "laps": [[0.6]], "lap_steal_pct": [1.5],
+        "probes_before_s": [slow, slow, 9.0], "probes_after_s": [slow, 0.001],
+    }
+    line = bench.format_line(med, best, med, 0.1, load=load, cpus=4)
+    assert len(line) < 1200, len(line)
+    parsed = json.loads(line)
+    assert parsed["value"] == round(sum(best.values()), 3)
+    assert parsed["ref_total_sec"] == round(sum(best.values()) / 2, 3)  # median probe = slow
+    # a run without probes carries no ref_total_sec rather than a made-up one
+    assert "ref_total_sec" not in json.loads(bench.format_line(med, best, med, 0.1, load={}))

@@ -9,25 +9,23 @@ from pyspark.sql import functions as F
 from snapshot_sender_spark.plans import delivery
 from snapshot_sender_spark.sources import fixtures as fx
 from snapshot_sender_spark.streaming import windows as sw
+from snapshot_sender_spark.streaming.epochs import EpochLog, fingerprint
 
 
 def test_foreachbatch_idempotent_sink(spark, sf_dir, tmp_path):
-    """foreachBatch with epoch-id bookkeeping: re-delivering an already-
-    committed epoch is a no-op — the streaming analog of the .finished
-    marker anti-join."""
+    """foreachBatch with epoch-id bookkeeping through the services' ledger
+    (streaming/epochs.EpochLog): re-delivering an already-committed epoch is
+    a no-op — the streaming analog of the .finished marker anti-join."""
     out_dir = str(tmp_path / "epochs")
     os.makedirs(out_dir)
+    ledger = EpochLog(out_dir, "epoch_{}.committed")
 
     def write_epoch(df, epoch_id):
-        marker = os.path.join(out_dir, f"epoch_{epoch_id}.committed")
-        if os.path.exists(marker):  # already committed → skip (exactly-once)
+        fp = fingerprint(df, "event_type")
+        if ledger.check(epoch_id, fp):  # already committed → skip (exactly-once)
             return
         counts = df.groupBy("event_type").count().collect()
-        tmp = marker + ".tmp"
-        with open(tmp, "w") as fh:
-            for r in counts:
-                fh.write(f"{r['event_type']},{r['count']}\n")
-        os.replace(tmp, marker)
+        ledger.commit(epoch_id, {**fp, "counts": {r["event_type"]: r["count"] for r in counts}})
 
     events = sw.read_events_stream(spark, sf_dir)
     q = events.writeStream.foreachBatch(write_epoch).trigger(availableNow=True).start()

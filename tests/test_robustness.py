@@ -143,6 +143,88 @@ def test_sink_matches_reference_on_hostile_payloads(lines, trailing_newline, cas
         assert os.listdir(status_dir) == [row["fileName"] + ".finished"]
 
 
+def _reference_kernel_lines(content, key_b64, iv_b64):
+    """Plain-Python model of the parse kernel on one row: its lines, or None
+    where the kernel must raise naming the file. NULL inputs give no lines."""
+    from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
+
+    if content is None or key_b64 is None or iv_b64 is None:
+        return []
+    key, iv = base64.b64decode(key_b64), base64.b64decode(iv_b64)
+    if len(key) not in (16, 24, 32) or len(iv) != 16:
+        return None
+    payload = Cipher(algorithms.AES(key), modes.CTR(iv)).decryptor().update(content)
+    if not payload:
+        return None
+    try:
+        text = gzip.decompress(payload)
+    except (OSError, EOFError, zlib.error):
+        return None
+    # Spark's trim strips U+0020 only
+    return [ln for ln in text.decode("utf-8", errors="replace").split("\n") if ln.strip(" ")]
+
+
+_KERNEL_CASES = ["valid", "empty_content", "empty_gzip", "blank_gzip", "truncated",
+                 "wrong_key", "wrong_iv", "short_key", "short_iv", "null_content",
+                 "null_key", "null_iv"]
+
+
+@settings(max_examples=200, deadline=None)
+@given(
+    files=st.lists(
+        st.tuples(st.lists(_LINE, max_size=8), st.booleans(),
+                  st.sampled_from(_KERNEL_CASES), st.integers(0, 1 << 20)),
+        min_size=1, max_size=4,
+    ),
+    flush=st.sampled_from([1, 64, crypto._EMIT_GROUP_BYTES]),
+)
+def test_parse_kernel_matches_reference_on_hostile_payloads(files, flush):
+    """``decrypt_explode_lines_kernel`` driven without Spark against a
+    plain-Python reference, one batch of up to four files, with the group
+    flush threshold forced down: the lines match, or the kernel raises a
+    ValueError naming the first file the reference refuses."""
+    from unittest import mock
+
+    rows, want, refused = [], [], None
+    for i, (lines, trailing_newline, case, cut) in enumerate(files):
+        body = b"\n".join(lines) + (b"\n" if trailing_newline else b"")
+        body = {"empty_gzip": b"", "blank_gzip": b" \n\n   \n"}.get(case, body)
+        gz = gzip.compress(body, mtime=0)
+        if case == "truncated":
+            gz = gz[: cut % len(gz)]
+        key = {"wrong_key": bytes(reversed(_KEY)), "short_key": _KEY[:7]}.get(case, _KEY)
+        iv = {"wrong_iv": bytes(reversed(_IV)), "short_iv": _IV[:8]}.get(case, _IV)
+        row = {
+            "fileName": f"f{i}.enc",
+            "topic": "t",
+            "content": b"" if case == "empty_content" else crypto._ctr_transform(gz, _KEY, _IV),
+            "plaintextKey": base64.b64encode(key).decode(),
+            "iv": base64.b64encode(iv).decode(),
+        }
+        null = {"null_content": "content", "null_key": "plaintextKey", "null_iv": "iv"}
+        if case in null:
+            row[null[case]] = None
+        rows.append(row)
+        got = _reference_kernel_lines(row["content"], row["plaintextKey"], row["iv"])
+        if got is None and refused is None:
+            refused = row["fileName"]
+        want += [(row["fileName"], "t", ln) for ln in got or []]
+    schema = pa.schema([("fileName", pa.string()), ("topic", pa.string()),
+                        ("content", pa.binary()), ("plaintextKey", pa.string()),
+                        ("iv", pa.string())])
+    batch = pa.RecordBatch.from_pylist(rows, schema=schema)
+
+    with mock.patch.object(crypto, "_EMIT_GROUP_BYTES", flush):
+        kernel = crypto.decrypt_explode_lines_kernel(iter([batch]))
+        if refused is not None:
+            with pytest.raises(ValueError, match="^" + re.escape(refused + ": ")):
+                list(kernel)
+            return
+        out = pa.Table.from_batches(list(kernel), schema=pa.schema(
+            [("fileName", pa.string()), ("topic", pa.string()), ("line", pa.string())]))
+    assert [tuple(r.values()) for r in out.to_pylist()] == want
+
+
 @settings(max_examples=50, deadline=None)
 @given(data=st.binary(min_size=0, max_size=4096), offset=st.integers(0, 200))
 def test_ctr_seek_property(data, offset):

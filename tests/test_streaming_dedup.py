@@ -193,26 +193,23 @@ def test_streaming_dedup_crash_after_index_append_replay(spark, dirs, monkeypatc
     partition is excluded from the cross-set check, so replay recomputes the
     same accepted set and both writes converge. Guards the round-3 advice
     finding (replay data loss in the append→marker window)."""
-    from snapshot_sender_spark.streaming import dedup_stream as ds
+    from snapshot_sender_spark.streaming.epochs import EpochLog
 
     _docs(
         spark,
         [(1, "unique first document text body"), (2, "another totally different one here")],
     ).write.mode("append").parquet(dirs["input"])
 
-    real_open = open
+    real_commit = EpochLog.commit
     calls = {"n": 0}
 
-    def crashing_marker_open(path, *a, **kw):
-        if "epoch_" in str(path) and str(path).endswith(".committed") and "w" in (
-            a[0] if a else kw.get("mode", "r")
-        ):
-            calls["n"] += 1
-            if calls["n"] == 1:
-                raise RuntimeError("injected crash after index append, before marker")
-        return real_open(path, *a, **kw)
+    def crashing_commit(self, epoch, record):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise RuntimeError("injected crash after index append, before marker")
+        return real_commit(self, epoch, record)
 
-    monkeypatch.setattr(ds, "open", crashing_marker_open, raising=False)
+    monkeypatch.setattr(EpochLog, "commit", crashing_commit)
     with pytest.raises(Exception):
         run_streaming_ingestion_dedup(
             spark, dirs["input"], TABLE, dirs["accepted"], dirs["ckpt"], threshold=0.5

@@ -200,13 +200,10 @@ def test_stale_epoch_marker_same_names_different_content_fails_loudly(spark, tmp
         )
 
 
-def test_legacy_v1_marker_replay_after_upgrade_is_noop(spark, tmp_path):
-    """A marker written by the pre-round-5 code (fileName-only fingerprint,
-    no version field) meeting the upgraded fingerprint on a legitimate
-    crash-replay of the SAME batch must stay a no-op — not a false
-    checkpoint-collision alarm (review finding, round 5)."""
-    import zlib
-
+def test_legacy_v1_marker_fails_loudly(spark, tmp_path):
+    """A marker in the pre-round-5 format (fileName-only fingerprint, no
+    "v" field) meeting a replay fails loudly, naming the collision, instead
+    of being skipped: no code writes that format any more."""
     from snapshot_sender_spark.plans import delivery as dl
 
     f = fx.generate(str(tmp_path / "gen"), n_files=2, records_per_file=2, seed=56)
@@ -218,23 +215,10 @@ def test_legacy_v1_marker_replay_after_upgrade_is_noop(spark, tmp_path):
     ds.run_streaming_delivery(
         spark, input_dir, out_dir, status_dir, str(tmp_path / "ckpt"), dl.key_lookup_local
     )
-    # rewrite the committed epoch marker in the v1 (fileName-only) format
     markers = [p for p in os.listdir(status_dir) if p.startswith("_epoch_")]
     assert markers
-    names = [json.loads(line)["fileName"]
-             for line in open(os.path.join(f.input_dir, "metadata.sidecar.jsonl"))]
-    v1 = {"n": len(names), "x": 0}
-    for nm in names:
-        v1["x"] ^= zlib.crc32(nm.encode())
-    with open(os.path.join(status_dir, markers[0]), "w") as fh:
-        fh.write(json.dumps(v1))
-    # same arrivals, fresh checkpoint (epoch 0 again) → v1 marker matches the
-    # legacy fingerprint → no-op, nothing re-delivered, no exception
-    ds.run_streaming_delivery(
-        spark, input_dir, out_dir, status_dir, str(tmp_path / "ckpt2"), dl.key_lookup_local
-    )
     assert len([p for p in os.listdir(out_dir) if p.endswith(".json.gz")]) == 2
-    # and a v1 marker with DIFFERENT names still fails loudly
+    # a v1 marker with DIFFERENT names, replayed under a fresh checkpoint
     with open(os.path.join(status_dir, markers[0]), "w") as fh:
         fh.write(json.dumps({"n": 1, "x": 12345}))
     import pytest
