@@ -35,10 +35,3 @@ def dot_literal(a: Column, q: list[float]) -> Column:
     constant-folded by Catalyst, broadcast-free."""
     # one array<double> literal — a single py4j call vs one per element
     return dot(a, F.lit([float(x) for x in q]))
-
-
-def cosine_literal(a: Column, q: list[float]) -> Column:
-    import math
-
-    qn = math.sqrt(sum(float(x) * float(x) for x in q))
-    return dot_literal(a, q) / (norm(a) * F.lit(qn))

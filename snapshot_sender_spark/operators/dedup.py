@@ -644,6 +644,18 @@ _drop_stale_table_location = index_lifecycle.drop_stale_table_location
 _fold_epoch_partitions = index_lifecycle.fold_epoch_partitions
 
 
+def refresh_index(spark, table: str) -> bool:
+    """Refresh ``spark``'s cached file listings of an index ``table`` and its
+    ``_sizes`` side table (posting mode only) so appends made through
+    another session are visible. False when the index does not exist yet."""
+    if not spark.catalog.tableExists(table):
+        return False
+    spark.catalog.refreshTable(table)
+    if spark.catalog.tableExists(table + "_sizes"):
+        spark.catalog.refreshTable(table + "_sizes")
+    return True
+
+
 def append_dedup_index_epoch(
     spark,
     table: str,

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators import dedup, index_lifecycle
-from .epochs import EpochLog, fingerprint
+from .epochs import EpochLog, fingerprint, parquet_stream, run_epochs
 
 DOC_SCHEMA = "doc_id long, text string"
 
@@ -73,15 +73,12 @@ def run_streaming_ingestion_dedup(
     every folded epoch has its marker committed (the fold reads the marker
     dir), and no epoch is in flight."""
     os.makedirs(accepted_dir, exist_ok=True)
-    ledger = epoch_log(accepted_dir)
     data_dir = os.path.join(accepted_dir, "data")
-    epochs: list[int] = []
+
+    def step(batch: DataFrame, epoch_id: int):
+        return fingerprint(batch, "doc_id", "text"), lambda: dedup_batch(batch, epoch_id)
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
-        fp = fingerprint(batch, "doc_id", "text")
-        if ledger.check(epoch_id, fp):
-            return
-        epochs.append(epoch_id)
         # foreachBatch hands a CLONED session; the metastore is shared but
         # each session caches table relations (file listings) separately —
         # work through the batch's session and refresh before reading so an
@@ -128,9 +125,7 @@ def run_streaming_ingestion_dedup(
         # the corpus adds a drop-row for an id the anti-join below no longer
         # carries — the accepted set is identical, and the full list is the
         # already-checkpointed one.
-        if sess.catalog.tableExists(index_table):
-            sess.catalog.refreshTable(index_table)
-            sess.catalog.refreshTable(index_table + "_sizes")
+        if dedup.refresh_index(sess, index_table):
             dups = (
                 dedup.incremental_jaccard_against_index(
                     sess, index_table, None, "text", "doc_id", threshold,
@@ -162,31 +157,18 @@ def run_streaming_ingestion_dedup(
             sess, index_table, accepted, "text", "doc_id", epoch_id,
             n_buckets=n_buckets, posting=accepted_posting,
         )
-        ledger.commit(epoch_id, fp)
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    epochs = run_epochs(
+        parquet_stream(spark, DOC_SCHEMA, input_dir, max_files_per_trigger),
+        checkpoint_dir, epoch_log(accepted_dir), step,
     )
-    stream.awaitTermination()
     # make clone-session appends visible to the caller's session
-    if spark.catalog.tableExists(index_table):
-        spark.catalog.refreshTable(index_table)
-        spark.catalog.refreshTable(index_table + "_sizes")
-        if compact_after:
-            # committed_epochs can only yield non-negative ids (EpochLog
-            # matches \d+), so the reserved compacted partition is never in
-            # this list; compact_dedup_index additionally prunes to epochs
-            # whose partitions still exist, making repeat cycles no-ops
-            dedup.compact_dedup_index(
-                spark, index_table, committed_epochs(accepted_dir)
-            )
+    if dedup.refresh_index(spark, index_table) and compact_after:
+        # committed_epochs can only yield non-negative ids (EpochLog
+        # matches \d+), so the reserved compacted partition is never in
+        # this list; compact_dedup_index additionally prunes to epochs
+        # whose partitions still exist, making repeat cycles no-ops
+        dedup.compact_dedup_index(spark, index_table, committed_epochs(accepted_dir))
     return epochs
 
 

@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from ..plans import delivery
 from ..sources.listing import ENCRYPTION_META_SCHEMA
 from ..util import local_strings_df
-from .epochs import EpochLog
+from .epochs import EpochLog, run_epochs
 
 
 def read_encrypted_stream(spark: SparkSession, input_dir: str) -> DataFrame:
@@ -161,13 +161,8 @@ def run_streaming_delivery(
     set (both O(files-per-batch), not O(bytes))."""
     os.makedirs(output_dir, exist_ok=True)
     os.makedirs(status_dir, exist_ok=True)
-    epochs: list[int] = []
 
-    meta_stream = read_encrypted_stream(spark, input_dir)
-
-    ledger = EpochLog(status_dir, "_epoch_{}.committed")
-
-    def deliver_batch(meta_df: DataFrame, epoch_id: int) -> None:
+    def step(meta_df: DataFrame, epoch_id: int):
         rows = meta_df.collect()  # file-level metadata: tiny
         # order-insensitive batch fingerprint, computed driver-side from the
         # already-collected metadata (no extra job), checked against the
@@ -181,8 +176,9 @@ def run_streaming_delivery(
                     (r["fileName"].encode(), r["iv"].encode(), r["cipherText"].encode())
                 )
             )
-        if ledger.check(epoch_id, fp):
-            return
+        return fp, lambda: deliver_batch(rows)
+
+    def deliver_batch(rows) -> None:
         # the reference's already-processed filter (FinishedFilterProcessor
         # semantics): per-FILE idempotence — a replayed epoch whose marker was
         # lost re-delivers nothing that already has a .finished marker, the
@@ -219,14 +215,8 @@ def run_streaming_delivery(
             )
             # the batch receipt sink: the executors deliver the micro-batch
             delivery.deliver(result, output_dir, status_dir)
-        ledger.commit(epoch_id, fp)
-        epochs.append(epoch_id)
 
-    q = (
-        meta_stream.writeStream.foreachBatch(deliver_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return run_epochs(
+        read_encrypted_stream(spark, input_dir), checkpoint_dir,
+        EpochLog(status_dir, "_epoch_{}.committed"), step,
     )
-    q.awaitTermination()
-    return epochs

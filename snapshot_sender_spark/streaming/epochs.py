@@ -1,17 +1,20 @@
 """The replay ledger every foreachBatch service keeps: one JSON marker per
-committed epoch, holding the fingerprint of that epoch's input.
+committed epoch, holding the fingerprint of that epoch's input, and the one
+runner that drives each service's stream through it.
 
-A service calls ``check`` before its work and ``commit`` after it, so a
-replayed epoch is skipped (the marker idempotence of the reference's
-FinishedFilterProcessor.kt:17-27, per epoch instead of per file) and a
-different batch under a reused epoch id fails loudly (see ``fingerprint``).
-``commit`` writes a tmp file and renames it into place, so an empty or
-garbled marker was damaged outside the service: it fails loudly too.
+``run_epochs`` checks an epoch's marker before the service's work and
+commits it after, so a replayed epoch is skipped (the marker idempotence of
+the reference's FinishedFilterProcessor.kt:17-27, per epoch instead of per
+file) and a different batch under a reused epoch id fails loudly (see
+``fingerprint``). ``commit`` writes a tmp file and renames it into place, so
+an empty or garbled marker was damaged outside the service: it fails loudly
+too.
 
 Marker files by service:
-  ``<accepted>/_epochs/epoch_N.committed``   text, image and video dedup
-  ``<status>/_epoch_N.committed``           delivery
-  ``<accepted>/_takedowns/batch_N.json``    takedown (fingerprint + audit)
+  ``<accepted>/_epochs/epoch_N.committed``     text, image and video dedup
+  ``<status>/_epoch_N.committed``              delivery
+  ``<accepted>/_takedowns/batch_N.json``       takedown (fingerprint + audit)
+  ``<rollup_path>/_epochs/epoch_N.committed``  rollup
 """
 
 from __future__ import annotations
@@ -21,12 +24,12 @@ import os
 import re
 import uuid
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..util import write_atomic
 
-__all__ = ["EpochLog", "fingerprint"]
+__all__ = ["EpochLog", "fingerprint", "parquet_stream", "run_epochs"]
 
 
 def fingerprint(batch: DataFrame, *cols: str) -> dict:
@@ -84,16 +87,14 @@ class EpochLog:
         os.makedirs(self.directory, exist_ok=True)
         write_atomic(self.path(epoch), json.dumps(record).encode(), uuid.uuid4().hex)
 
+    def epochs(self) -> list[int]:
+        """Ids of the committed markers, ascending (tmp files ignored)."""
+        names = os.listdir(self.directory) if os.path.isdir(self.directory) else []
+        return sorted(int(m.group(1)) for m in map(self._name.fullmatch, names) if m)
+
     def records(self) -> dict[int, dict]:
-        """Every committed marker's record by epoch id (tmp files ignored)."""
-        if not os.path.isdir(self.directory):
-            return {}
-        out = {}
-        for name in os.listdir(self.directory):
-            m = self._name.fullmatch(name)
-            if m:
-                out[int(m.group(1))] = self._read(os.path.join(self.directory, name))
-        return dict(sorted(out.items()))
+        """Every committed marker's record by epoch id."""
+        return {e: self._read(self.path(e)) for e in self.epochs()}
 
     @staticmethod
     def _read(path: str) -> dict:
@@ -109,3 +110,44 @@ class EpochLog:
                 "it was damaged outside the service; inspect it before a rerun"
             )
         return record
+
+
+def parquet_stream(
+    spark: SparkSession, schema: str, input_dir: str, max_files_per_trigger: int | None
+) -> DataFrame:
+    """The file-stream source of a parquet-fed service: ``schema`` rows from
+    the files landing in ``input_dir``, at most ``max_files_per_trigger``
+    files per micro-batch (None: every available file)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_dir)
+
+
+def run_epochs(stream: DataFrame, checkpoint_dir: str, ledger: EpochLog, step) -> list[int]:
+    """Drive ``stream`` to completion over the input available now
+    (Trigger.AvailableNow), one ``ledger`` entry per micro-batch; returns
+    the epoch ids whose work ran.
+
+    ``step(batch, epoch)`` returns ``(fingerprint, work)``. An epoch whose
+    marker holds that fingerprint is skipped; otherwise ``work()`` runs and
+    the marker commits ``{**fingerprint, **(work() or {})}``. The marker is
+    written only after the work returns, so the work must converge when a
+    crash before the commit replays it."""
+    ran: list[int] = []
+
+    def batch(df: DataFrame, epoch: int) -> None:
+        fp, work = step(df, epoch)
+        if ledger.check(epoch, fp):
+            return
+        ledger.commit(epoch, {**fp, **(work() or {})})
+        ran.append(epoch)
+
+    (
+        stream.writeStream.foreachBatch(batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return ran

@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from ..operators import dedup, index_lifecycle, multimodal
 from .dedup_stream import committed_epochs, epoch_log  # one marker layout for all three
-from .epochs import fingerprint
+from .epochs import fingerprint, parquet_stream, run_epochs
 
 MEDIA_SCHEMA = "media_id long, content binary"
 
@@ -85,15 +85,12 @@ def run_streaming_media_dedup(
     epochs fast-skip on the marker after verifying the input fingerprint."""
     sig_fn = signature if signature is not None else multimodal.image_ahash
     os.makedirs(accepted_dir, exist_ok=True)
-    ledger = epoch_log(accepted_dir)
     data_dir = os.path.join(accepted_dir, "data")
-    epochs: list[int] = []
+
+    def step(batch: DataFrame, epoch_id: int):
+        return fingerprint(batch, "media_id", "content"), lambda: dedup_batch(batch, epoch_id)
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
-        fp = fingerprint(batch, "media_id", "content")
-        if ledger.check(epoch_id, fp):
-            return
-        epochs.append(epoch_id)
         sess = batch.sparkSession
         # (1) ONE decode pass for the epoch: everything downstream works on
         # (id, sig) rows. Checkpointed — the within-batch join, the cross-set
@@ -118,8 +115,7 @@ def run_streaming_media_dedup(
         survivors = dedup.banded_hamming_survivors(sigs, max_hamming=max_hamming)
         # (3) cross-set vs the standing index (absent on the first epoch),
         # current epoch excluded for crash-replay safety
-        if sess.catalog.tableExists(index_table):
-            sess.catalog.refreshTable(index_table)
+        if dedup.refresh_index(sess, index_table):
             dups = (
                 dedup.banded_hamming_pairs_against_index(
                     sess, index_table, survivors, max_hamming=max_hamming,
@@ -132,9 +128,9 @@ def run_streaming_media_dedup(
         else:
             accepted = survivors
         # (4) publish replay-idempotently: overwrite the epoch's corpus dir,
-        # dynamic-partition-overwrite the epoch's index partition, then
-        # commit the marker (fast-skip only — the writes converge on replay
-        # with or without it, exactly as in the text service)
+        # dynamic-partition-overwrite the epoch's index partition; run_epochs
+        # then commits the marker (fast-skip only — the writes converge on
+        # replay with or without it, exactly as in the text service)
         accepted = accepted.localCheckpoint()
         accepted.select(F.col("id").alias("media_id"), "sig").write.mode(
             "overwrite"
@@ -142,25 +138,13 @@ def run_streaming_media_dedup(
         dedup.append_sig_index_epoch(
             sess, index_table, accepted, epoch=epoch_id, n_buckets=n_buckets
         )
-        ledger.commit(epoch_id, fp)
 
-    reader = spark.readStream.schema(MEDIA_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    epochs = run_epochs(
+        parquet_stream(spark, MEDIA_SCHEMA, input_dir, max_files_per_trigger),
+        checkpoint_dir, epoch_log(accepted_dir), step,
     )
-    stream.awaitTermination()
-    if spark.catalog.tableExists(index_table):
-        spark.catalog.refreshTable(index_table)
-        if compact_after:
-            dedup.compact_sig_index(
-                spark, index_table, committed_epochs(accepted_dir)
-            )
+    if dedup.refresh_index(spark, index_table) and compact_after:
+        dedup.compact_sig_index(spark, index_table, committed_epochs(accepted_dir))
     return epochs
 
 
@@ -215,15 +199,12 @@ def run_streaming_video_dedup(
                 .select("media_id", F.xxhash64("ahash").alias("h"))
             )
     os.makedirs(accepted_dir, exist_ok=True)
-    ledger = epoch_log(accepted_dir)
     data_dir = os.path.join(accepted_dir, "data")
-    epochs: list[int] = []
+
+    def step(batch: DataFrame, epoch_id: int):
+        return fingerprint(batch, "media_id", "content"), lambda: dedup_batch(batch, epoch_id)
 
     def dedup_batch(batch: DataFrame, epoch_id: int) -> None:
-        fp = fingerprint(batch, "media_id", "content")
-        if ledger.check(epoch_id, fp):
-            return
-        epochs.append(epoch_id)
         sess = batch.sparkSession
         # (1) ONE decode pass for the epoch
         posting = (
@@ -245,34 +226,17 @@ def run_streaming_video_dedup(
             .fillna(0, subset=["s"])
         )
         # (2) within-batch set-Jaccard: drop the higher id of every pair
-        a = posting.select(F.col("id").alias("id_a"), "h")
-        c = posting.select(F.col("id").alias("id_b"), "h")
-        inter = (
-            a.join(c, "h")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("n_shared"))
-        )
-        sa = sizes.select(F.col("id").alias("id_a"), F.col("s").alias("sa"))
-        sb = sizes.select(F.col("id").alias("id_b"), F.col("s").alias("sb"))
-        jac = F.col("n_shared") / (F.col("sa") + F.col("sb") - F.col("n_shared"))
-        near = (
-            inter.join(sa, "id_a")
-            .join(sb, "id_b")
-            .filter(jac >= threshold)
-            .select(F.col("id_b").alias("id"))
-            .distinct()
-        )
-        survivors = sizes.select("id", "s").join(near, "id", "left_anti")
+        near = dedup.ngram_jaccard_pairs_shuffle(
+            None, "", "", threshold, posting=posting
+        ).select(F.col("id_b").alias("id")).distinct()
+        survivors = sizes.join(near, "id", "left_anti")
         # (3) cross-set vs the standing posting index (absent on the first
         # epoch), current epoch excluded for crash-replay safety. The probe
         # uses the FULL batch posting list (already checkpointed) — a
         # within-batch-dropped id that also matches the corpus only adds a
         # drop-row the anti join below no longer carries, same as the text
         # service.
-        if sess.catalog.tableExists(index_table):
-            sess.catalog.refreshTable(index_table)
-            sess.catalog.refreshTable(index_table + "_sizes")
+        if dedup.refresh_index(sess, index_table):
             dups = (
                 dedup.incremental_jaccard_against_index(
                     sess, index_table, None, "", "", threshold,
@@ -284,7 +248,7 @@ def run_streaming_video_dedup(
             accepted = survivors.join(dups, "id", "left_anti")
         else:
             accepted = survivors
-        # (4) publish replay-idempotently, then commit the marker
+        # (4) publish replay-idempotently; run_epochs then commits the marker
         accepted = accepted.localCheckpoint()
         accepted.select(
             F.col("id").alias("media_id"), F.col("s").cast("int").alias("n_frames")
@@ -296,26 +260,13 @@ def run_streaming_video_dedup(
             sess, index_table, None, "", "", epoch_id,
             n_buckets=n_buckets, posting=accepted_posting,
         )
-        ledger.commit(epoch_id, fp)
 
-    reader = spark.readStream.schema(MEDIA_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(input_dir)
-        .writeStream.foreachBatch(dedup_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    epochs = run_epochs(
+        parquet_stream(spark, MEDIA_SCHEMA, input_dir, max_files_per_trigger),
+        checkpoint_dir, epoch_log(accepted_dir), step,
     )
-    stream.awaitTermination()
-    if spark.catalog.tableExists(index_table):
-        spark.catalog.refreshTable(index_table)
-        spark.catalog.refreshTable(index_table + "_sizes")
-        if compact_after:
-            dedup.compact_dedup_index(
-                spark, index_table, committed_epochs(accepted_dir)
-            )
+    if dedup.refresh_index(spark, index_table) and compact_after:
+        dedup.compact_dedup_index(spark, index_table, committed_epochs(accepted_dir))
     return epochs
 
 

@@ -8,7 +8,15 @@ batch's, untouched keys pass through. Derived metrics (avg) come from the
 partials at read time, so merges stay associative/commutative — the property
 that makes the rollup restartable and backfillable.
 
-Local storage is a parquet rewrite via atomic rename (the dependency-free
+Replay-safe through the services' epoch ledger (streaming/epochs.py):
+epoch N's merged state — the newest committed state plus N's partials — is
+written to its own directory ``<rollup_path>/state_N``, which a replay of N
+overwrites, and becomes the rollup only when N's marker
+``<rollup_path>/_epochs/epoch_N.committed`` commits. Older state
+directories are removed after that commit. A crash at any point leaves the
+last committed state live, so a replayed epoch is merged exactly once.
+
+Local storage is one parquet directory per epoch (the dependency-free
 analog of Delta MERGE INTO); at scale the same foreachBatch body targets a
 Delta/Iceberg table and the MERGE is keyed on the same bucket columns, with
 the table partitioned by bucket date so each batch touches only recent
@@ -19,20 +27,41 @@ from __future__ import annotations
 
 import os
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .epochs import EpochLog, fingerprint, run_epochs
 
 ROLLUP_SCHEMA = (
     "window_start timestamp, event_type string, n long, sum_value_cents long"
 )
 
 
+def _ledger(path: str) -> EpochLog:
+    return EpochLog(os.path.join(path, "_epochs"), "epoch_{}.committed")
+
+
+def _live(path: str) -> int | None:
+    """The newest epoch whose marker is committed: its state is the rollup."""
+    return max(_ledger(path).epochs(), default=None)
+
+
+def _drop_stale_states(path: str) -> None:
+    """Remove every state directory but the live one: older epochs' and any
+    a crash left uncommitted."""
+    live = f"state_{_live(path)}"
+    for name in os.listdir(path) if os.path.isdir(path) else ():
+        if name.startswith("state_") and name != live:
+            shutil.rmtree(os.path.join(path, name))
+
+
 def load_rollup(spark: SparkSession, path: str) -> DataFrame:
-    if os.path.exists(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], ROLLUP_SCHEMA)
+    """The rollup as of its newest committed epoch (empty before the first)."""
+    live = _live(path)
+    if live is None:
+        return spark.createDataFrame([], ROLLUP_SCHEMA)
+    return spark.read.parquet(os.path.join(path, f"state_{live}"))
 
 
 def batch_partials(batch_df: DataFrame, width: str) -> DataFrame:
@@ -48,23 +77,20 @@ def batch_partials(batch_df: DataFrame, width: str) -> DataFrame:
     )
 
 
-def merge_rollup(spark: SparkSession, path: str, partials: DataFrame) -> None:
-    """MERGE partials into the rollup: sum with existing rows per key, keep
-    untouched keys. Atomic swap makes a crashed merge invisible."""
-    merged = (
+def merge_rollup(spark: SparkSession, path: str, epoch: int, partials: DataFrame) -> None:
+    """MERGE partials into the rollup as epoch ``epoch``'s state: sum with
+    the live rows per key, keep untouched keys. The state goes live when
+    the epoch's marker commits; until then the previous one stays live."""
+    _drop_stale_states(path)
+    (
         load_rollup(spark, path)
         .unionByName(partials)
         .groupBy("window_start", "event_type")
         .agg(F.sum("n").alias("n"), F.sum("sum_value_cents").alias("sum_value_cents"))
+        .coalesce(1)  # the rollup is O(buckets × types): small by design
+        .write.mode("overwrite")
+        .parquet(os.path.join(path, f"state_{int(epoch)}"))
     )
-    rows = merged.collect()  # rollup is O(buckets × types): small by design
-    tmp = f"{path}.tmp.{uuid.uuid4().hex[:8]}"
-    spark.createDataFrame(rows, ROLLUP_SCHEMA).coalesce(1).write.mode("overwrite").parquet(tmp)
-    old = f"{path}.old.{uuid.uuid4().hex[:8]}"
-    if os.path.exists(path):
-        os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old, ignore_errors=True)
 
 
 def run_incremental_rollup(
@@ -78,16 +104,13 @@ def run_incremental_rollup(
     average (exact partials → exact derived metric)."""
     spark = stream_df.sparkSession
 
-    def merge_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        merge_rollup(spark, rollup_path, batch_partials(batch_df, width))
+    def step(batch_df: DataFrame, epoch_id: int):
+        return fingerprint(batch_df, "ts", "event_type", "value"), lambda: merge_rollup(
+            spark, rollup_path, epoch_id, batch_partials(batch_df, width)
+        )
 
-    q = (
-        stream_df.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    run_epochs(stream_df, checkpoint_dir, _ledger(rollup_path), step)
+    _drop_stale_states(rollup_path)
     out = load_rollup(spark, rollup_path)
     return out.select(
         "window_start",

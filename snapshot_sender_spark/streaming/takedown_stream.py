@@ -40,21 +40,16 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import dedup
 from . import dedup_stream, media_dedup_stream
-from .epochs import EpochLog, fingerprint
+from .epochs import EpochLog, fingerprint, parquet_stream, run_epochs
 
 REQUEST_SCHEMA = "id long"
 
 _KINDS = {
-    "docs": lambda spark, acc, table, ids: dedup_stream.takedown_accepted_docs(
-        spark, acc, table, ids
-    ),
-    "media": lambda spark, acc, table, ids: media_dedup_stream.takedown_accepted_media(
-        spark, acc, table, ids
-    ),
-    "video": lambda spark, acc, table, ids: media_dedup_stream.takedown_accepted_video(
-        spark, acc, table, ids
-    ),
+    "docs": dedup_stream.takedown_accepted_docs,
+    "media": media_dedup_stream.takedown_accepted_media,
+    "video": media_dedup_stream.takedown_accepted_video,
 }
 
 __all__ = ["run_streaming_takedown", "takedown_manifests", "REQUEST_SCHEMA"]
@@ -86,44 +81,26 @@ def run_streaming_takedown(
     if kind not in _KINDS:
         raise ValueError(f"kind must be one of {sorted(_KINDS)}, got {kind!r}")
     takedown = _KINDS[kind]
-    ledger = _ledger(accepted_dir)
-    batches: list[int] = []
 
-    def process(batch: DataFrame, batch_id: int) -> None:
-        fp = fingerprint(batch, "id")
-        if ledger.check(batch_id, fp):
-            return
-        batches.append(batch_id)
-        sess = batch.sparkSession
+    def step(batch: DataFrame, batch_id: int):
+        return fingerprint(batch, "id"), lambda: remove(batch)
+
+    def remove(batch: DataFrame) -> dict:
         ids = batch.select("id").distinct().localCheckpoint()
-        removed = takedown(sess, accepted_dir, index_table, ids)
-        ledger.commit(
-            batch_id,
-            {
-                **fp,
-                "kind": kind,
-                "distinct_ids": ids.count(),
-                "corpus_rows_removed": int(removed),
-                # replay-sensitivity marker — see module docstring: a crash
-                # after the removals but before this commit replays the
-                # batch against cleaned state and records 0 here
-                "rows_removed_semantics": "as-of-this-run",
-            },
-        )
+        removed = takedown(batch.sparkSession, accepted_dir, index_table, ids)
+        return {
+            "kind": kind,
+            "distinct_ids": ids.count(),
+            "corpus_rows_removed": int(removed),
+            # replay-sensitivity marker — see module docstring: a crash
+            # after the removals but before this commit replays the batch
+            # against cleaned state and records 0 here
+            "rows_removed_semantics": "as-of-this-run",
+        }
 
-    reader = spark.readStream.schema(REQUEST_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    stream = (
-        reader.parquet(requests_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    batches = run_epochs(
+        parquet_stream(spark, REQUEST_SCHEMA, requests_dir, max_files_per_trigger),
+        checkpoint_dir, _ledger(accepted_dir), step,
     )
-    stream.awaitTermination()
-    if spark.catalog.tableExists(index_table):
-        spark.catalog.refreshTable(index_table)
-        if spark.catalog.tableExists(index_table + "_sizes"):
-            spark.catalog.refreshTable(index_table + "_sizes")
+    dedup.refresh_index(spark, index_table)
     return batches

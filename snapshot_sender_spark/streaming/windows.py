@@ -198,14 +198,3 @@ def streaming_dedup_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = s1.union(s2).dropDuplicates(["event_id"])
     out = run_to_memory(deduped, "append")
     return out.groupBy("event_type").agg(F.count("*").alias("n"))
-
-
-def late_data_drop(events: DataFrame, watermark: str = "1 hour", width: str = "6 hours") -> DataFrame:
-    """Watermarked tumbling aggregate in append mode: only windows the
-    watermark has passed are emitted — the late-data drop policy surface."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", width))
-        .agg(F.count("*").alias("n"))
-        .select(F.col("window.start").alias("window_start"), "n")
-    )

@@ -105,32 +105,66 @@ def test_streaming_dedup_exactly_once(spark, sf_dir):
     assert n_stream == n_batch  # doubled input, deduped back to exact counts
 
 
+def _rollup(spark, event_dir, rollup_path, ckpt):
+    from snapshot_sender_spark.streaming import rollup as ru
+
+    schema = spark.read.parquet(event_dir + "/b1").schema
+    out = ru.run_incremental_rollup(_stream(spark, event_dir, schema), rollup_path, ckpt, "1 hour")
+    return {
+        (r["window_start"].isoformat(), r["event_type"]): (r["n"], r["sum_value"])
+        for r in out.collect()
+    }
+
+
 def test_incremental_rollup_multi_batch_and_restart(spark, event_dir, tmp_path):
     """The foreachBatch rollup merges partials across micro-batches, and a
     restart over the same checkpoint does not double-merge (exactly-once per
     epoch via the streaming checkpoint)."""
-    from snapshot_sender_spark.streaming import rollup as ru
-
-    schema = spark.read.parquet(event_dir + "/b1").schema
-    rollup_path = str(tmp_path / "rollup")
-    ckpt = str(tmp_path / "ckpt")
-
-    events = _stream(spark, event_dir, schema)  # 3 files → 3 micro-batches
-    out = {
-        (r["window_start"].isoformat(), r["event_type"]): (r["n"], r["sum_value"])
-        for r in ru.run_incremental_rollup(events, rollup_path, ckpt, "1 hour").collect()
-    }
+    rollup_path, ckpt = str(tmp_path / "rollup"), str(tmp_path / "ckpt")
+    out = _rollup(spark, event_dir, rollup_path, ckpt)  # 3 files → 3 micro-batches
     # events 1,2 (b1) + late 4 (b3) in [00:00), event 3,5 (b1,b2) in [03:00)
     assert out[("2024-01-01T00:00:00", "click")] == (3, 7.0)
     assert out[("2024-01-01T03:00:00", "view")] == (2, 8.0)
 
     # restart over the same checkpoint: no new data → no re-merge
-    events2 = _stream(spark, event_dir, schema)
-    again = {
-        (r["window_start"].isoformat(), r["event_type"]): (r["n"], r["sum_value"])
-        for r in ru.run_incremental_rollup(events2, rollup_path, ckpt, "1 hour").collect()
-    }
-    assert again == out
+    assert _rollup(spark, event_dir, rollup_path, ckpt) == out
+
+
+def test_incremental_rollup_replayed_epoch_merges_once(spark, event_dir, tmp_path):
+    """Spark replays the last epoch when its checkpoint commit is lost; the
+    rollup's epoch marker must make that replay a no-op, not merge the
+    epoch's partials a second time."""
+    rollup_path, ckpt = str(tmp_path / "rollup"), str(tmp_path / "ckpt")
+    first = _rollup(spark, event_dir, rollup_path, ckpt)
+    last = max(int(n) for n in os.listdir(ckpt + "/commits") if n.isdigit())
+    os.remove(f"{ckpt}/commits/{last}")
+    os.remove(f"{ckpt}/commits/.{last}.crc")
+    assert _rollup(spark, event_dir, rollup_path, ckpt) == first
+
+
+def test_incremental_rollup_crash_before_publish_converges(
+    spark, event_dir, tmp_path, monkeypatch
+):
+    """A crash after the last epoch's merged state is written but before it
+    is live (its marker commit): the rerun on the same checkpoint must end
+    with the rollup of an uncrashed run — no earlier epoch dropped, none
+    merged twice."""
+    from snapshot_sender_spark.streaming.epochs import EpochLog
+
+    clean = _rollup(spark, event_dir, str(tmp_path / "clean"), str(tmp_path / "clean_ckpt"))
+    real_commit = EpochLog.commit
+
+    def crashing_commit(self, epoch, record):
+        if epoch == 2:
+            raise RuntimeError("injected crash before the epoch's state is live")
+        return real_commit(self, epoch, record)
+
+    rollup_path, ckpt = str(tmp_path / "rollup"), str(tmp_path / "ckpt")
+    monkeypatch.setattr(EpochLog, "commit", crashing_commit)
+    with pytest.raises(Exception, match="injected crash"):
+        _rollup(spark, event_dir, rollup_path, ckpt)
+    monkeypatch.undo()
+    assert _rollup(spark, event_dir, rollup_path, ckpt) == clean
 
 
 def test_rocksdb_state_store_multi_batch(spark, event_dir):

@@ -7,6 +7,7 @@ import glob
 import os
 import re
 import shutil
+from datetime import datetime
 
 import pytest
 
@@ -16,6 +17,7 @@ from snapshot_sender_spark.streaming import (
     dedup_stream,
     delivery_stream,
     media_dedup_stream,
+    rollup,
     takedown_stream,
 )
 
@@ -81,8 +83,19 @@ def _delivery(spark, root):
     )
 
 
-@pytest.mark.parametrize("service", [_text, _image, _video, _takedown, _delivery],
-                         ids=["text", "image", "video", "takedown", "delivery"])
+def _rollup(spark, root):
+    schema = "ts timestamp, event_type string, value double"
+    _land(spark, root + "/input", [(datetime(2024, 1, 1), "view", 5.0)], schema)
+    return root + "/rollup/_epochs/epoch_0.committed", lambda: (
+        rollup.run_incremental_rollup(
+            spark.readStream.schema(schema).parquet(root + "/input"),
+            root + "/rollup", root + "/ckpt",
+        )
+    )
+
+
+@pytest.mark.parametrize("service", [_text, _image, _video, _takedown, _delivery, _rollup],
+                         ids=["text", "image", "video", "takedown", "delivery", "rollup"])
 def test_empty_marker_stops_the_service_naming_it(spark, tmp_path, service):
     marker, run = service(spark, str(tmp_path))
     os.makedirs(os.path.dirname(marker), exist_ok=True)

@@ -1,10 +1,13 @@
 """Rank declared queries by py4j round trips spent in CONSTRUCTION (r14,
 VERDICT item 6): each py4j command is a synchronous socket round trip
 (~0.1-0.2 ms each on this box), and r13 found 827 of them inside one
-q1 build. This counter monkeypatches the gateway's send_command to count
-trips during ``fn(spark, sf_dir)`` (construction only — no action is run
+q1 build. The count is the benchmark's own (``perfbench.spans.Tracer``:
+``install([])``, then the ``py4j_calls`` each ``operation`` yields) taken
+during ``fn(spark, sf_dir)`` (construction only — no action is run
 afterwards; note some lifecycle queries execute jobs *inside* their builder,
-those trips are intrinsically part of construction). Counting is
+those trips are intrinsically part of construction). Like perfbench's
+counts, it leaves out the object-release commands py4j sends from a
+background thread at times that vary run to run. Counting is
 load-insensitive: valid even on a noisy box.
 
 Usage: python tools/count_py4j.py [sf_dir] [--queries a,b] [--top 40] [--json OUT]
@@ -20,6 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from perfbench.spans import Tracer  # noqa: E402
 from snapshot_sender_spark.queries import all_queries  # noqa: E402
 from snapshot_sender_spark.session import get_spark  # noqa: E402
 
@@ -37,19 +41,8 @@ def main() -> int:
     registry = all_queries()
     names = args.queries.split(",") if args.queries else sorted(registry)
 
-    import py4j.java_gateway as jg
-
-    counter = {"n": 0}
-    # the pinned-thread client (py4j.clientserver.JavaClient) inherits
-    # send_command, so patching the base class counts every command once
-    orig = jg.GatewayClient.send_command
-
-    def counted(self, *a, **kw):
-        counter["n"] += 1
-        return orig(self, *a, **kw)
-
-    jg.GatewayClient.send_command = counted
-
+    tracer = Tracer(spark)
+    tracer.install([])
     out: dict[str, dict] = {}
     try:
         for name in names:
@@ -60,14 +53,14 @@ def main() -> int:
             except Exception as exc:
                 out[name] = {"error": f"{type(exc).__name__}: {exc}"[:160]}
                 continue
-            counter["n"] = 0
-            t0 = time.perf_counter()
-            qd.fn(spark, args.sf_dir)
-            dt = time.perf_counter() - t0
-            out[name] = {"trips": counter["n"], "build_s": round(dt, 4),
+            with tracer.operation(name, name) as counts:
+                t0 = time.perf_counter()
+                qd.fn(spark, args.sf_dir)
+                dt = time.perf_counter() - t0
+            out[name] = {"trips": counts["py4j_calls"], "build_s": round(dt, 4),
                          "category": qd.category}
     finally:
-        jg.GatewayClient.send_command = orig
+        tracer.uninstall()
 
     ranked = sorted(
         ((n, r) for n, r in out.items() if "trips" in r),
