@@ -3,23 +3,34 @@
 Reference physical plan (JobConfiguration.kt:41-64):
     reader → finishedFilter → dataKeyLookup → decrypt → httpWriter(+markers,+counts)
 
-Spark-first re-expression (one declarative DataFrame plan, §3.1 of SURVEY.md):
-    binaryFile ⋈ broadcast(metadata)                      -- source
-      → left_anti(finished markers)                       -- idempotent restart
+Spark-first re-expression (§3.1 of SURVEY.md): the control plane is settled
+on the driver, as the reference settles it before any payload moves; the
+payload plane is one declarative DataFrame plan.
+
+    driver, no Spark job (sources/listing.py):
+      sidecar rows (memoized)                              -- the manifest
+      → drop rows with a .finished marker                  -- idempotent restart,
+                                                              one probe per row
+      → distinct (keyId, cipherText) → key_lookup          -- one DKS call per
+                                                              distinct key, ≡ the
+                                                              reference's memo cache
+                                                              HttpKeyService.kt:48-50
+    plan:
+      binaryFile WHERE _metadata.file_name IN (pending)    -- pruned at listing:
+        ⋈ broadcast(manifest)                                 finished objects are
+                                                              never opened
       → route: bad filename → rejected, blocked topic     -- one CASE column,
                → blocked, else delivered                     one row per file
-      → ⋈ broadcast(distinct-key plaintext lookup)        -- one DKS call per
-                                                             distinct key, ≡ the
-                                                             reference's memo cache
-                                                             HttpKeyService.kt:48-50
+      → ⟕ broadcast(resolved keys)                         -- NULL key → the sink
+                                                              fails naming the file
       → deliver: decrypt, gunzip check, record count,     -- mapInArrow receipt
                  .json.gz + .finished marker per file        sink, run once
       → parse: decrypt → gunzip → explode lines → from_json  -- record-level view
 
-Everything before the sink is JVM-side: the payload crosses into Python once,
-encrypted, and only delivered rows keep their ``content``. The ``decrypted``
-column the record-level views read is never selected by the sink, so Catalyst
-prunes that UDF from the sink's plan.
+Everything after the manifest is JVM-side until the sink: the payload crosses
+into Python once, encrypted, and only delivered rows keep their ``content``.
+The ``decrypted`` column the record-level views read is never selected by the
+sink, so Catalyst prunes that UDF from the sink's plan.
 
 Scale: content bytes never shuffle (all joins broadcast the small side); decrypt
 parallelism = file-partition parallelism (`spark.sql.files.maxPartitionBytes`);
@@ -46,10 +57,16 @@ from pyspark.sql import types as T
 from ..functions import crypto, text
 from ..sources import fixtures as fx
 from ..util import local_strings_df, write_atomic
-from ..sources.listing import (
+# read_encrypted_files, read_encryption_meta and read_finished_markers are not
+# called here: perfbench wraps them as this module's attributes
+from ..sources.listing import (  # noqa: F401
+    META_COLUMNS,
     read_encrypted_files,
     read_encryption_meta,
     read_finished_markers,
+    read_pending_objects,
+    read_sidecar,
+    unfinished,
 )
 
 # Payload record schema (FIXTURES.md §A1; producer shape s3_files.py:40-75)
@@ -149,33 +166,37 @@ def build_decrypted(
     cfg: RunConfig,
     key_lookup: Callable[[list[tuple[str, str]]], list[tuple[str, str, str]]] = key_lookup_local,
 ) -> DeliveryResult:
-    """Declare the plan up to (and including) payload decryption."""
-    # one metadata DataFrame serves both the content join and the key-distinct
-    # source (it was read twice per call — two reader round trips for the
-    # same sidecar)
-    meta = read_encryption_meta(spark, input_dir)
-    files = read_encrypted_files(spark, input_dir, meta=meta)
-
-    # 1. idempotent-restart filter (FinishedFilterProcessor.kt:17-27), on the
-    #    content side and on the key source alike
+    """Declare the plan up to (and including) payload decryption. The
+    manifest is settled on the driver first, so no Spark job runs here: the
+    sidecar rows (a bad one raises a ValueError naming its line), minus
+    those with a ``.finished`` marker (FinishedFilterProcessor.kt:17-27; kept
+    on ``reprocess_files``). A pending row whose object the scan would not
+    return raises a ValueError naming it (``listing.require_listed``)."""
+    rows = read_sidecar(input_dir)
     if not cfg.reprocess_files:
-        finished = F.broadcast(read_finished_markers(spark, status_dir))
-        files = files.join(finished, "fileName", "left_anti")
-        meta = meta.join(finished, "fileName", "left_anti")
-    return route_and_decrypt(spark, files, meta, key_lookup, cfg.blocked_topics)
+        rows = unfinished(rows, status_dir)
+    objects = read_pending_objects(spark, input_dir, [r[0] for r in rows])
+    return route_and_decrypt(spark, objects, rows, key_lookup, cfg.blocked_topics)
 
 
 def route_and_decrypt(
     spark: SparkSession,
-    files: DataFrame,
-    meta: DataFrame,
+    objects: DataFrame,
+    rows: list,
     key_lookup: Callable[[list[tuple[str, str]]], list[tuple[str, str, str]]],
     blocked_topics: str = "",
 ) -> DeliveryResult:
     """Steps 2–6 of the plan, shared by the batch job and each streaming
-    micro-batch: ``files`` holds the encrypted objects joined with their
-    metadata (path, fileName, content, iv, dataKeyEncryptionKeyId,
-    cipherText), ``meta`` the metadata rows of the same files."""
+    micro-batch: ``rows`` is the manifest, one ``META_COLUMNS`` tuple
+    (fileName, iv, dataKeyEncryptionKeyId, cipherText) per file to deliver,
+    and ``objects`` those files' encrypted objects (path, fileName,
+    content)."""
+    # VALUES LocalRelation, not createDataFrame: the pickled-RDD scan the
+    # latter plans re-runs a Python-worker stage on EVERY broadcast build
+    # (util.local_strings_df docstring has the numbers)
+    meta = local_strings_df(spark, rows, META_COLUMNS)
+    files = objects.join(F.broadcast(meta), "fileName")
+
     # 2. database/collection/topic of the enc-stripped name, which is what
     #    the reference parses (DecryptionProcessor.kt:40, HttpWriter.kt:47-49,
     #    121-127); markers keep the original key (S3Utils.kt:25-32)
@@ -199,22 +220,14 @@ def route_and_decrypt(
         "content", F.when(F.col("route") == DELIVERED, F.col("content"))
     )
 
-    # 5. data-key resolution: distinct keys → external lookup → broadcast join.
-    #    distinct() is tiny (a handful of keys per run); collecting it to the
-    #    driver IS the operator — one network call per distinct key. The key
-    #    set comes from the metadata side alone, never touching the content
-    #    scan: this mirrors the reference's processor order (finishedFilter →
-    #    dataKey, JobConfiguration.kt:61-64 — name validation and topic
-    #    blocking happen later, in the writer), and keeps the driver job
-    #    O(metadata), not O(objects).
-    pairs = [
-        (r["dataKeyEncryptionKeyId"], r["cipherText"])
-        for r in meta.select("dataKeyEncryptionKeyId", "cipherText").distinct().collect()
-    ]
+    # 5. data-key resolution: the manifest's distinct key pairs → external
+    #    lookup → broadcast join, one network call per distinct key. The key
+    #    set comes from the manifest alone, never the content scan: this
+    #    mirrors the reference's processor order (finishedFilter → dataKey,
+    #    JobConfiguration.kt:61-64 — name validation and topic blocking
+    #    happen later, in the writer), and costs no Spark job.
+    pairs = list(dict.fromkeys((r[2], r[3]) for r in rows))
     resolved = key_lookup(pairs)
-    # VALUES LocalRelation, not createDataFrame: the pickled-RDD scan the
-    # latter plans re-runs a Python-worker stage on EVERY broadcast build —
-    # one per lap here (util.local_strings_df docstring has the numbers)
     keys_df = local_strings_df(
         spark,
         # `or []`: a custom key_lookup returning None for "no keys" must get

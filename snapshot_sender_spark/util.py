@@ -46,6 +46,30 @@ def write_atomic(path: str, data: bytes, nonce: str) -> None:
     os.replace(tmp, path)
 
 
+def sql_strings(spark, values) -> list[str]:
+    """``values`` (``str | None``) as Spark SQL string literals, for SQL text
+    built on the driver. Backslash-escape of ``\\`` and ``'`` covers Spark's
+    default literal parsing (round-trip pinned by
+    tests/test_delivery.py::test_local_strings_df_roundtrip)."""
+    # the backslash-escape below is only correct under the default parser
+    # mode; with the legacy spark.sql.parser.escapedStringLiterals=true a
+    # value containing a quote would terminate the literal early (SQL-text
+    # injection) — refuse loudly instead.
+    # (parameterized SQL is not an option: positional `?` binding inside a
+    # multi-row VALUES returns TRANSPOSED rows on Spark 4.1 — r13 finding)
+    legacy = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
+    if str(legacy).lower() == "true":
+        raise ValueError(
+            "sql_strings requires spark.sql.parser.escapedStringLiterals=false "
+            "(default): its literal escaping is unsound under the legacy parser mode"
+        )
+    return [
+        "CAST(NULL AS STRING)" if v is None
+        else "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        for v in values
+    ]
+
+
 def local_strings_df(spark, rows, colnames):
     """Small driver-side string table as a SQL VALUES LocalRelation.
 
@@ -57,36 +81,17 @@ def local_strings_df(spark, rows, colnames):
     JVM-side, no Python stage exists. Intended for control-plane tables (a
     handful of rows), not data.
 
-    ``rows`` is a list of tuples of ``str | None``. An EMPTY rows list yields
-    an empty relation with the right column names (string type). Values are
-    embedded as escaped literals — backslash-escape of ``\\`` and ``'`` covers
-    Spark's default literal parsing (round-trip pinned by
-    tests/test_delivery.py::test_local_strings_df_roundtrip).
+    ``rows`` is a list of tuples of ``str | None``, embedded as ``sql_strings``
+    literals. An EMPTY rows list yields an empty relation with the right
+    column names (string type).
     """
-    # the backslash-escape below is only correct under the default parser
-    # mode; with the legacy spark.sql.parser.escapedStringLiterals=true a
-    # value containing a quote would terminate the literal early (SQL-text
-    # injection into the VALUES clause) — refuse loudly instead.
-    # (parameterized SQL is not an option: positional `?` binding inside a
-    # multi-row VALUES returns TRANSPOSED rows on Spark 4.1 — r13 finding)
-    legacy = spark.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-    if str(legacy).lower() == "true":
-        raise ValueError(
-            "local_strings_df requires spark.sql.parser.escapedStringLiterals=false "
-            "(default): its literal escaping is unsound under the legacy parser mode"
-        )
     cols = ", ".join(colnames)
     if not rows:
         # one dummy row, folded away by LIMIT 0 (empty VALUES is a parse error)
         dummy = ", ".join("''" for _ in colnames)
         return spark.sql(f"SELECT * FROM VALUES ({dummy}) AS t({cols}) LIMIT 0")
-
-    def esc(v):
-        if v is None:
-            return "CAST(NULL AS STRING)"
-        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-    values = ", ".join("(" + ", ".join(esc(c) for c in r) + ")" for r in rows)
+    lits, w = sql_strings(spark, [v for r in rows for v in r]), len(colnames)
+    values = ", ".join("(" + ", ".join(lits[i : i + w]) + ")" for i in range(0, len(lits), w))
     return spark.sql(f"SELECT * FROM VALUES {values} AS t({cols})")
 
 

@@ -5,6 +5,7 @@ on locally generated encrypted fixtures."""
 import gzip
 import json
 import os
+import re
 from collections import Counter
 
 import pytest
@@ -618,3 +619,34 @@ def test_listing_memo_revalidates_on_change(spark, tmp_path):
     df2 = listing.read_encrypted_files(spark, f.input_dir)
     assert df2.count() == 1  # fresh listing sees the deletion
     assert m3.count() == 1
+
+
+@pytest.mark.parametrize(
+    "line",
+    [
+        '{"fileName": "x.enc", "iv": ',  # does not parse
+        '{"fileName": "x.enc", "iv": null, "dataKeyEncryptionKeyId": "k", "cipherText": "c"}',
+        '{"fileName": "x.enc", "iv": "aXY=", "dataKeyEncryptionKeyId": "k"}',  # no cipherText
+    ],
+    ids=["unparsable", "null_field", "missing_field"],
+)
+def test_bad_sidecar_row_fails_naming_the_line(spark, tmp_path, line):
+    """A sidecar line that does not parse, or a row with a NULL or missing
+    field, raises a ValueError naming the sidecar and the line, before the
+    key lookup is called."""
+    f = fx.generate(str(tmp_path), n_files=2, records_per_file=3, seed=43)
+    sidecar = os.path.join(f.input_dir, "metadata.sidecar.jsonl")
+    with open(sidecar) as fh:
+        first, *rest = fh.read().splitlines()
+    with open(sidecar, "w") as fh:
+        fh.write("\n".join([first, line, *rest]) + "\n")
+    calls = []
+
+    def key_lookup(pairs):
+        calls.append(pairs)
+        return delivery.key_lookup_local(pairs)
+
+    cfg = delivery.RunConfig(correlation_id="bad-sidecar", topic_name=f.topic)
+    with pytest.raises(ValueError, match=re.escape(f"{sidecar}:2:")):
+        delivery.build_decrypted(spark, f.input_dir, f.status_dir, cfg, key_lookup=key_lookup)
+    assert calls == []

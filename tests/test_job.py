@@ -358,3 +358,80 @@ def test_full_job_final_push_outage_does_not_discard_report(spark, tmp_path):
     )
     assert report.files_delivered == 2
     assert report.counters.get("snapshot_sender_files_sent_success") == 2
+
+
+def test_build_decrypted_starts_no_spark_job(spark, tmp_path):
+    """The delivery manifest (sidecar rows, marker probes, key pairs) is
+    settled on the driver: declaring the plan runs no Spark job, with a
+    pre-marked file in the status dir."""
+    f = fx.generate(str(tmp_path), n_files=3, records_per_file=3, seed=38)
+    with open(os.path.join(f.status_dir, f.files[0] + ".finished"), "w") as fh:
+        fh.write(f"Finished {f.files[0]}")
+    sc = spark.sparkContext
+    group = "build-decrypted-jobs"
+    sc.setJobGroup(group, "build_decrypted")
+    try:
+        result = delivery.build_decrypted(
+            spark, f.input_dir, f.status_dir,
+            delivery.RunConfig(correlation_id="no-jobs", topic_name=f.topic),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert sorted(r["fileName"] for r in result.delivered.select("fileName").collect()) == (
+        f.files[1:]
+    )
+
+
+def test_premarked_object_is_never_opened(spark, tmp_path):
+    """The scan lists only pending objects: with binaryFile's maxLength below
+    the size of a pre-marked object, and above the others, the job still
+    delivers the others (reading that object would fail the job)."""
+    f = fx.generate(str(tmp_path / "a"), n_files=2, records_per_file=3, seed=39)
+    big = fx.generate(
+        str(tmp_path / "b"), topic="db.core.big", n_files=1, records_per_file=400, seed=40
+    )
+    shutil.copy(os.path.join(big.input_dir, big.files[0]), f.input_dir)
+    sidecar = "metadata.sidecar.jsonl"
+    with open(os.path.join(big.input_dir, sidecar)) as src, open(
+        os.path.join(f.input_dir, sidecar), "a"
+    ) as dst:
+        dst.write(src.read())
+    with open(os.path.join(f.status_dir, big.files[0] + ".finished"), "w") as fh:
+        fh.write(f"Finished {big.files[0]}")
+    small = max(os.path.getsize(os.path.join(f.input_dir, n)) for n in f.files)
+    large = os.path.getsize(os.path.join(f.input_dir, big.files[0]))
+    assert small < large
+    conf = "spark.sql.sources.binaryFile.maxLength"
+    spark.conf.set(conf, str((small + large) // 2))
+    try:
+        report = job.run_delivery_job(
+            spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "status_table"),
+            delivery.RunConfig(correlation_id="unopened", topic_name=f.topic),
+        )
+    finally:
+        spark.conf.unset(conf)
+    assert report.files_delivered == 2
+    assert report.records_parsed == 6
+
+
+def test_hidden_object_fails_the_job_naming_it(spark, tmp_path):
+    """A valid name starting with ``_`` is hidden by the binaryFile source.
+    Its manifest row must fail the job, naming it, before anything is
+    delivered — not vanish while the job reports Sent."""
+    f = fx.generate(str(tmp_path), n_files=3, records_per_file=3, seed=41)
+    hidden = "_core.claimant-045-050-000001.txt.gz.enc"
+    os.rename(os.path.join(f.input_dir, f.files[0]), os.path.join(f.input_dir, hidden))
+    sidecar = os.path.join(f.input_dir, "metadata.sidecar.jsonl")
+    with open(sidecar) as fh:
+        text = fh.read().replace(f.files[0], hidden)
+    with open(sidecar, "w") as fh:
+        fh.write(text)
+    with pytest.raises(ValueError, match=re.escape(hidden)):
+        job.run_delivery_job(
+            spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "status_table"),
+            delivery.RunConfig(correlation_id="hidden", topic_name=f.topic),
+        )
+    assert os.listdir(f.output_dir) == []
+    assert os.listdir(f.status_dir) == []

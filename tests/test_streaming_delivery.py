@@ -5,8 +5,11 @@ Structured Streaming service."""
 import gzip
 import json
 import os
+import re
 import shutil
 import time
+
+import pytest
 
 from snapshot_sender_spark.plans import delivery
 from snapshot_sender_spark.sources import fixtures as fx
@@ -279,3 +282,27 @@ def test_signalled_but_deleted_file_does_not_wedge_the_stream(spark, tmp_path):
     outs = [p for p in os.listdir(out_dir) if p.endswith(".json.gz")]
     assert len(outs) == 2  # survivors delivered, epoch committed
     assert any(p.startswith("_epoch_") for p in os.listdir(status_dir))
+
+
+def test_hidden_arrival_fails_the_batch_naming_it(spark, tmp_path):
+    """An arrival whose object the binaryFile source hides (a name starting
+    with ``_``) fails the micro-batch naming it, instead of vanishing from an
+    epoch that commits."""
+    f = fx.generate(str(tmp_path / "gen"), n_files=2, records_per_file=2, seed=54)
+    hidden = "_core.claimant-045-050-000001.txt.gz.enc"
+    os.rename(os.path.join(f.input_dir, f.files[0]), os.path.join(f.input_dir, hidden))
+    sidecar = os.path.join(f.input_dir, "metadata.sidecar.jsonl")
+    with open(sidecar) as fh:
+        text = fh.read().replace(f.files[0], hidden)
+    with open(sidecar, "w") as fh:
+        fh.write(text)
+    input_dir = str(tmp_path / "landing")
+    status_dir = str(tmp_path / "status")
+    os.makedirs(input_dir)
+    _land(f, input_dir, [hidden, f.files[1]])
+    with pytest.raises(Exception, match=re.escape(hidden)):
+        ds.run_streaming_delivery(
+            spark, input_dir, str(tmp_path / "out"), status_dir, str(tmp_path / "ckpt"),
+            delivery.key_lookup_local,
+        )
+    assert not [p for p in os.listdir(status_dir) if p.startswith("_epoch_")]
