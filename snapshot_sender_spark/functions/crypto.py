@@ -1,17 +1,20 @@
-"""Crypto / codec scalar functions.
+"""Crypto / codec functions.
 
 The reference decrypts snapshot payloads with AES/CTR/NoPadding using a
 base64-decoded data key + IV (reference: DecryptionProcessor.kt:27-41), and the
 payloads are gzip-compressed JSON-Lines (reference fixture: resources/aws/
 s3_files.py:28,78-84). Spark's built-in ``aes_decrypt`` supports ECB/GCM/CBC but
-not CTR, so CTR is a vectorized Pandas UDF over Arrow batches (one Python
-crossing per ~10k-row batch, not per row). Gzip likewise.
+not CTR, so one Python function, ``open_payload``, decrypts and gunzips a
+delivered file. The delivery sinks and the record parse call it from their
+``mapInArrow`` batch functions: one Python crossing per Arrow batch, not per
+row.
 
 Scale note: AES-CTR is a seekable stream cipher (counter mode), so a 100 TB
 deployment can decrypt byte ranges of large objects independently by seeking the
-counter — ``aes_ctr_decrypt_at`` exposes that offset-aware form. Whole-file
-decryption here assumes file-granular rows (the reference's own unit of work);
-files are capped per task by ``spark.sql.files.maxPartitionBytes``.
+counter — ``ctr_at_offset`` exposes that offset-aware form and
+``chunked_decrypt`` runs it one task per range. Whole-file decryption here
+assumes file-granular rows (the reference's own unit of work); files are capped
+per task by ``spark.sql.files.maxPartitionBytes``.
 """
 
 from __future__ import annotations
@@ -20,10 +23,9 @@ import base64
 import gzip
 import io
 import zlib
+from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 try:
     from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
@@ -63,91 +65,91 @@ def ctr_at_offset(data: bytes, key: bytes, iv: bytes, byte_offset: int) -> bytes
     return out[intra:]
 
 
-# --- pandas UDFs (Arrow-vectorized) -------------------------------------------
-
-
-@F.pandas_udf(T.BinaryType())
-def aes_ctr_decrypt(content: pd.Series, key_b64: pd.Series, iv_b64: pd.Series) -> pd.Series:
-    """AES-CTR decrypt a binary column (``decrypt_payload`` per row)."""
-    return pd.Series(list(map(decrypt_payload, content, key_b64, iv_b64)))
-
-
-# The payload codecs are marked non-deterministic AFTER definition (they are
-# pure; the flag is an optimizer fence): when a filter references a UDF's
-# column (the `payload IS NOT NULL` guards in plans/delivery.parse_records and
-# corrupt_payloads), Catalyst would push the filter down and evaluate the UDF
-# on both sides, twice per file. Non-determinism forbids the duplication
-# (spark_optimization_guide §4.4). They are used only in Project/Filter.
-
-
-@F.pandas_udf(T.BinaryType())
-def gunzip(content: pd.Series) -> pd.Series:
-    return pd.Series(
-        [None if b is None else gzip.decompress(bytes(b)) for b in content]
-    )
-
-
-@F.pandas_udf(T.BinaryType())
-def gunzip_or_null(content: pd.Series) -> pd.Series:
-    """Tolerant gunzip: undecodable payloads (wrong key, truncation,
-    corruption) become NULL instead of failing the task — the PERMISSIVE /
-    corrupt-record policy at the codec layer, so bad files route to a rejects
-    side-channel rather than poisoning the whole job."""
-    out = []
-    for b in content:
-        if b is None:
-            out.append(None)
-            continue
-        try:
-            out.append(gzip.decompress(bytes(b)))
-        except Exception:
-            out.append(None)
-    return pd.Series(out)
-
-
-aes_ctr_decrypt = aes_ctr_decrypt.asNondeterministic()
-gunzip = gunzip.asNondeterministic()
-
-# decrypt_explode_lines_kernel flushes its decompressed-payload group at this
-# many bytes so no per-array total approaches pa.string()'s 2 GiB int32-offset
-# ceiling (residual: one SINGLE payload inflating past ~1.5 GiB still hits the
-# cast — realistic gzip ratios on ≤32 MB compressed payloads stay far below).
-# Module-level so tests can force the chunked path with a tiny value.
+# The gunzipped text of a payload is handed out in chunks of at most this many
+# bytes, and the parse kernel flushes its line batches at it, so no Arrow array
+# approaches pa.string()'s 2 GiB int32-offset ceiling, however large one payload
+# inflates. Module-level so tests can force the chunked path with a tiny value.
 _EMIT_GROUP_BYTES = 512 * 1024 * 1024
-gunzip_or_null = gunzip_or_null.asNondeterministic()
 
 
-def decrypt_explode_lines_kernel(batches):
+def open_payload(name: str, content, key_b64: str | None, iv_b64: str | None):
+    """Open one delivered file: ``(plaintext, chunks)``, where ``plaintext``
+    is the decrypted, still-gzipped payload (what the sinks deliver,
+    HttpWriter.kt:75) and ``chunks`` iterates its gunzipped text cut at
+    newlines, the newline at each cut dropped. A chunk holds at most
+    ``_EMIT_GROUP_BYTES``, or one line if that line is longer.
+
+    A NULL or empty input, a malformed key or IV, and a payload that does
+    not gunzip each raise a ValueError naming the file: the first
+    two here, the last while ``chunks`` is read."""
+    try:
+        plain = decrypt_payload(content, key_b64, iv_b64)
+    except ValueError as e:  # a malformed key or IV (binascii.Error is one)
+        raise ValueError(f"{name}: payload does not decrypt ({e})") from e
+    if not plain:  # gzip.decompress(b"") == b"": would read as no lines
+        raise ValueError(f"{name}: decrypted payload is empty or NULL (no key, content or IV)")
+    return plain, _text_chunks(name, plain)
+
+
+def tolerant_chunks(name: str, content, key_b64: str | None, iv_b64: str | None):
+    """All of ``open_payload``'s chunks for one file, read whole so that a
+    failure drops every line of it; None if the file does not open."""
+    try:
+        return list(open_payload(name, content, key_b64, iv_b64)[1])
+    except ValueError:
+        return None
+
+
+def _text_chunks(name: str, plain: bytes) -> Iterator[bytes]:
+    limit = _EMIT_GROUP_BYTES
+    buf = b""
+    try:
+        with gzip.GzipFile(fileobj=io.BytesIO(plain)) as gz:
+            while block := gz.read(limit):
+                buf += block
+                while len(buf) > limit:
+                    cut = buf.rfind(b"\n", 0, limit + 1)
+                    if cut < 0:  # a line longer than the limit: cut after it
+                        cut = buf.find(b"\n", limit)
+                    if cut < 0:  # ... once its end is read
+                        break
+                    yield buf[:cut]
+                    buf = buf[cut + 1 :]
+    except (OSError, EOFError, zlib.error) as e:  # wrong key, truncation
+        raise ValueError(f"{name}: decrypted payload is not valid gzip ({e})") from e
+    yield buf
+
+
+def decrypt_explode_lines_kernel(batches, tolerant: bool = False):
     """``mapInArrow`` kernel for the delivery parse path: input batches of
     (fileName, topic, content, plaintextKey, iv), output batches of
-    (fileName, topic, line) — decrypt → gunzip → split lines → drop blank
+    (fileName, topic, line) — ``open_payload`` → split lines → drop blank
     lines, all in one Python crossing with the per-line work in C
     (spark_optimization_guide §4.2: hand whole batches to vectorized native
     kernels instead of building per-row Python objects).
 
-    Semantics are EXACTLY the decrypt UDF + gunzip + JVM explode path
+    Semantics are EXACTLY the JVM split/trim/explode of the payload text
     (pinned by tests/test_delivery.py::test_parse_records_kernel_matches_expr):
 
-    * rows with a NULL content/key/iv produce no lines (the old
-      ``payload IS NOT NULL`` filter);
     * payload text = utf-8 decode with errors='replace' (split-then-decode ==
       decode-then-split for '\\n': 0x0A is never a continuation byte, so a
-      replacement run can never absorb a newline);
+      replacement run can never absorb a newline; the same holds for the
+      newline-bounded chunks);
     * lines = split on '\\n' keeping trailing empties (split(payload,'\\n',-1)),
       then keep only lines where length(trim(line)) > 0 — Spark's ``trim``
       strips U+0020 only, which pc.utf8_trim(line, ' ') reproduces;
-    * a payload that does not decrypt or gunzip, or decrypts to no bytes at
-      all, raises a ValueError naming the file, failing the task (the
-      non-tolerant contract — the tolerant path routes through
-      gunzip_or_null instead).
+    * a file ``open_payload`` cannot open (NULL or empty input, bad key,
+      not gzip) raises its ValueError naming the file, failing the task; with
+      ``tolerant`` the file is skipped whole instead.
+
+    Output batches hold at most ``_EMIT_GROUP_BYTES`` of payload text, or one
+    line if a line is longer, so one huge payload emits several batches.
 
     Why not zero-copy offsets over the decompressed buffer: an Arrow string
     array's single offsets vector makes consecutive strings adjacent in the
     values buffer, and dropping the '\\n' separator bytes breaks adjacency —
     so the C-level ``split_pattern`` (one re-pack of the payload bytes) is the
-    floor. The win over the old path is removing: per-payload Python ``str``
-    construction, the pandas Series hop, the Arrow re-encode of 1 MB cells,
-    and the JVM regex split + Generate explode of megabyte strings.
+    floor.
     """
     import pyarrow as pa
     import pyarrow.compute as pc
@@ -162,7 +164,7 @@ def decrypt_explode_lines_kernel(batches):
             str_arr = bin_arr.cast(pa.large_utf8())
         except pa.ArrowInvalid:
             # invalid utf-8 somewhere: fall back to Python decode with the
-            # errors='replace' policy of the old fused UDF (rare path)
+            # errors='replace' policy (rare path)
             str_arr = pa.array(
                 [t.decode("utf-8", errors="replace") for t in texts],
                 type=pa.large_utf8(),
@@ -179,60 +181,30 @@ def decrypt_explode_lines_kernel(batches):
             names=["fileName", "topic", "line"],
         )
 
+    def chunks(*scalars):
+        # cryptography's rust binding accepts only `bytes` (a memoryview
+        # over the Arrow buffer is rejected) — one copy per payload, noise
+        # next to the AES work itself
+        cells = [s.as_py() for s in scalars]
+        if tolerant:
+            return tolerant_chunks(*cells) or []
+        return open_payload(*cells)[1]
+
     for batch in batches:
-        n = batch.num_rows
         fn, tp, content, key, iv = (batch.column(i) for i in range(5))
         texts: list = []
         rows: list = []
         pending = 0
-        for i in range(n):
-            # cryptography's rust binding accepts only `bytes` (a memoryview
-            # over the Arrow buffer is rejected) — one copy per payload, noise
-            # next to the AES work itself
-            try:
-                plain = decrypt_payload(content[i].as_py(), key[i].as_py(), iv[i].as_py())
-                if plain is None:
-                    continue
-                if not plain:  # gzip.decompress(b"") == b"": would read as no lines
-                    raise EOFError("empty payload")
-                t = gzip.decompress(plain)
-            except ValueError as e:  # a malformed key or IV (binascii.Error is one)
-                raise ValueError(f"{fn[i].as_py()}: payload does not decrypt ({e})") from e
-            except (OSError, EOFError, zlib.error) as e:  # wrong key, truncation
-                raise ValueError(
-                    f"{fn[i].as_py()}: decrypted payload is not valid gzip ({e})"
-                ) from e
-            texts.append(t)
-            rows.append(i)
-            pending += len(t)
-            # flush before the group's decompressed bytes approach the int32
-            # offset ceiling of pa.string(): the final `.cast(pa.string())`
-            # raises ArrowInvalid past 2 GiB of line bytes per array, a cliff
-            # the pre-kernel pandas path did not have. (Line bytes ≤ payload
-            # bytes, so capping the payload group caps every downstream
-            # array.) Also bounds peak worker memory — at the default 32 MB
-            # Arrow batch of compressed payloads a high gzip ratio could
-            # otherwise pin multiple GiB of plaintext at once.
-            if pending >= _EMIT_GROUP_BYTES:
-                yield from emit(fn, tp, texts, rows)
-                texts, rows, pending = [], [], 0
+        for i in range(batch.num_rows):
+            for chunk in chunks(fn[i], content[i], key[i], iv[i]):
+                if pending and pending + len(chunk) > _EMIT_GROUP_BYTES:
+                    yield from emit(fn, tp, texts, rows)
+                    texts, rows, pending = [], [], 0
+                texts.append(chunk)
+                rows.append(i)
+                pending += len(chunk)
         if texts:
             yield from emit(fn, tp, texts, rows)
-
-
-@F.pandas_udf(T.BinaryType())
-def gzip_bytes(content: pd.Series) -> pd.Series:
-    out = []
-    for b in content:
-        if b is None:
-            out.append(None)
-            continue
-        buf = io.BytesIO()
-        # fixed mtime for deterministic output (golden-file comparisons)
-        with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0) as gz:
-            gz.write(bytes(b))
-        out.append(buf.getvalue())
-    return pd.Series(out)
 
 
 def empty_gzip() -> bytes:
@@ -274,8 +246,8 @@ def chunked_decrypt(
     the entire object in memory; SURVEY §7 risk 2): CTR is a seekable stream
     cipher, so each task range-reads its [offset, offset+chunk) slice and
     applies the keystream at its counter offset (``ctr_at_offset``). No task
-    ever holds more than ``chunk_bytes``; a 50 GB object becomes
-    ceil(size/chunk) independent tasks.
+    ever holds more than one chunk of ``chunk_bytes``; a 50 GB object
+    becomes ceil(size/chunk) independent tasks.
 
     Returns a DataFrame (chunk_idx, offset, plaintext) ordered by chunk_idx =
     byte order; downstream consumers stream-concatenate (the payload is a
@@ -295,19 +267,16 @@ def chunked_decrypt(
     ).repartition(min(n_chunks, spark.sparkContext.defaultParallelism))
 
     def decrypt_ranges(batches):
-        for pdf in batches:
-            outs = []
-            for idx, off, ln in zip(pdf["chunk_idx"], pdf["offset"], pdf["length"]):
-                cipher = range_reader(int(off), int(ln))
-                outs.append(
-                    {
-                        "chunk_idx": int(idx),
-                        "offset": int(off),
-                        "plaintext": ctr_at_offset(cipher, key, iv, int(off)),
-                    }
-                )
-            yield pd.DataFrame(outs, columns=["chunk_idx", "offset", "plaintext"])
+        import pyarrow as pa
 
-    return ranges.mapInPandas(
+        for batch in batches:
+            for idx, off, ln in zip(*(batch.column(i).to_pylist() for i in range(3))):
+                plain = ctr_at_offset(range_reader(off, ln), key, iv, off)
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array([idx]), pa.array([off]), pa.array([plain], pa.binary())],
+                    names=["chunk_idx", "offset", "plaintext"],
+                )
+
+    return ranges.mapInArrow(
         decrypt_ranges, schema="chunk_idx long, offset long, plaintext binary"
     )

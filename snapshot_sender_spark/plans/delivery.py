@@ -23,14 +23,15 @@ payload plane is one declarative DataFrame plan.
                → blocked, else delivered                     one row per file
       → ⟕ broadcast(resolved keys)                         -- NULL key → the sink
                                                               fails naming the file
-      → deliver: decrypt, gunzip check, record count,     -- mapInArrow receipt
-                 .json.gz + .finished marker per file        sink, run once
-      → parse: decrypt → gunzip → explode lines → from_json  -- record-level view
+      → deliver: open (decrypt, gunzip check), record     -- mapInArrow receipt
+                 count, .json.gz + .finished marker per file  sink, run once
+      → parse: open → split lines → from_json              -- record-level view
 
-Everything after the manifest is JVM-side until the sink: the payload crosses
-into Python once, encrypted, and only delivered rows keep their ``content``.
-The ``decrypted`` column the record-level views read is never selected by the
-sink, so Catalyst prunes that UDF from the sink's plan.
+Everything after the manifest is JVM-side until a Python crossing: the payload
+crosses into Python once, encrypted, and only delivered rows keep their
+``content``. Both crossings open a file with one function,
+``crypto.open_payload`` (DecryptionProcessor.kt:26-41), so the sink, the strict
+parse and the tolerant parse refuse the same files with the same messages.
 
 Scale: content bytes never shuffle (all joins broadcast the small side); decrypt
 parallelism = file-partition parallelism (`spark.sql.files.maxPartitionBytes`);
@@ -40,11 +41,8 @@ chunk retry, JobConfiguration.kt:46-50).
 
 from __future__ import annotations
 
-import gzip
-import io
 import os
 import uuid
-import zlib
 from collections.abc import Callable
 from dataclasses import dataclass
 from functools import partial
@@ -139,7 +137,7 @@ class DeliveryResult:
     routed: DataFrame  # one row per file; ``route`` is one of the three views
 
     @property
-    def delivered(self) -> DataFrame:  # one decrypted row per file to deliver
+    def delivered(self) -> DataFrame:  # one row per file to deliver, still encrypted
         return self.routed.filter(F.col("route") == DELIVERED)
 
     @property
@@ -190,7 +188,9 @@ def route_and_decrypt(
     micro-batch: ``rows`` is the manifest, one ``META_COLUMNS`` tuple
     (fileName, iv, dataKeyEncryptionKeyId, cipherText) per file to deliver,
     and ``objects`` those files' encrypted objects (path, fileName,
-    content)."""
+    content). Nothing is decrypted here: a routed row carries its
+    ``content``, ``plaintextKey`` and ``iv`` to the Python crossing that
+    opens it (``crypto.open_payload``)."""
     # VALUES LocalRelation, not createDataFrame: the pickled-RDD scan the
     # latter plans re-runs a Python-worker stage on EVERY broadcast build
     # (util.local_strings_df docstring has the numbers)
@@ -240,11 +240,9 @@ def route_and_decrypt(
     # the job) instead of dropping it silently
     routed = routed.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"], "left")
 
-    # 6. rename (HttpWriter.kt:58) + the lazy decrypt (DecryptionProcessor.kt:26-41)
-    decrypted = crypto.aes_ctr_decrypt(F.col("content"), F.col("plaintextKey"), F.col("iv"))
+    # 6. rename (HttpWriter.kt:58)
     return DeliveryResult(
         routed.withColumn("outputFileName", text.rename_output(F.col("decryptedFileName")))
-        .withColumn("decrypted", decrypted)
     )
 
 
@@ -255,35 +253,23 @@ RECEIPT_SCHEMA = (
 )
 
 
-def _count_records(file_name: str, payload: bytes | None) -> int:
-    """Records in one decrypted payload: the gunzipped lines that keep text
-    after trimming spaces — what ``parse_records(...).count()`` counts. A
-    NULL, empty or non-gzip payload raises an error naming the file."""
-    if not payload:
-        raise ValueError(f"{file_name}: decrypted payload is empty or NULL (no key, content or IV)")
-    try:
-        with gzip.GzipFile(fileobj=io.BytesIO(payload)) as gz:
-            return sum(1 for line in gz if line.strip(b" \n"))
-    except (OSError, EOFError, zlib.error) as e:
-        raise ValueError(f"{file_name}: decrypted payload is not valid gzip ({e})") from e
-
-
 def checked_files(batch):
     """(row, payload, records) per row of one ``SINK_COLUMNS`` batch, with
-    payload None off the delivered route. A delivered file that is NULL or
-    does not decrypt and gunzip raises a ValueError naming it."""
+    payload None off the delivered route. ``payload`` is the decrypted, still
+    gzipped file and ``records`` its lines that keep text after trimming
+    spaces — what ``parse_records(...).count()`` counts. A delivered file
+    that ``crypto.open_payload`` cannot open raises its ValueError naming
+    it."""
     rows = batch.select(_ROW_COLUMNS).to_pylist()
     content, key, iv = (batch.column(c) for c in ("content", "plaintextKey", "iv"))
     for i, row in enumerate(rows):
         if row["route"] != DELIVERED:
             yield row, None, 0
             continue
-        name = row["fileName"]
-        try:
-            payload = crypto.decrypt_payload(content[i].as_py(), key[i].as_py(), iv[i].as_py())
-        except ValueError as e:  # a malformed key or IV (binascii.Error is one)
-            raise ValueError(f"{name}: payload does not decrypt ({e})") from e
-        yield row, payload, _count_records(name, payload)
+        payload, chunks = crypto.open_payload(
+            row["fileName"], content[i].as_py(), key[i].as_py(), iv[i].as_py()
+        )
+        yield row, payload, sum(1 for c in chunks for line in c.split(b"\n") if line.strip(b" "))
 
 
 def mark_finished(status_dir: str, file_name: str, nonce: str) -> None:
@@ -333,60 +319,43 @@ def deliver(result: DeliveryResult, output_dir: str, status_dir: str) -> DataFra
     )
 
 
+def _unopenable(batches):
+    """``corrupt_payloads``' mapInArrow function: the (path, fileName, topic)
+    of each row whose file the tolerant parse skips."""
+    for batch in batches:
+        cells = [batch.column(c) for c in ("fileName", "content", "plaintextKey", "iv")]
+        bad = [
+            crypto.tolerant_chunks(*(c[i].as_py() for c in cells)) is None
+            for i in range(batch.num_rows)
+        ]
+        yield batch.select(["path", "fileName", "topic"]).filter(pa.array(bad, pa.bool_()))
+
+
 def corrupt_payloads(decrypted: DataFrame) -> DataFrame:
-    """Files whose decrypted bytes are not valid gzip (wrong key, truncation)
-    — the rejects side-channel for the tolerant parse path."""
-    return (
-        decrypted.withColumn("payload", crypto.gunzip_or_null(F.col("decrypted")))
-        .filter(F.col("payload").isNull() & F.col("decrypted").isNotNull())
-        .select("path", "fileName", "topic")
-    )
+    """Files that ``crypto.open_payload`` cannot open (NULL or empty input,
+    bad key or IV, not gzip: a wrong key, truncation) — the rejects
+    side-channel for the tolerant parse path, which skips exactly these."""
+    return decrypted.select(
+        "path", "fileName", "topic", "content", "plaintextKey", "iv"
+    ).mapInArrow(_unopenable, "path string, fileName string, topic string")
 
 
 def parse_records(decrypted: DataFrame, tolerant: bool = False) -> DataFrame:
-    """Record-level view: gunzip → split lines → explode → from_json.
+    """Record-level view: open → split lines → drop blank lines → from_json.
 
     The reference never parses the payload (it forwards opaque bytes,
     HttpWriter.kt:75); this is the generalized engine surface the payload shape
-    implies (SURVEY.md §1.2). ``tolerant=True`` drops undecodable payloads
-    (see ``corrupt_payloads`` for the reject stream) and leaves malformed JSON
-    lines as a NULL ``record`` with the raw line preserved — the PERMISSIVE /
+    implies (SURVEY.md §1.2). One ``mapInArrow`` crossing opens each file
+    with ``crypto.open_payload`` and splits its lines in pyarrow C kernels
+    (``crypto.decrypt_explode_lines_kernel``, guide §4.2). A file that does
+    not open fails the job naming it; ``tolerant=True`` skips it instead
+    (``corrupt_payloads`` lists those files). Malformed JSON lines are a NULL
+    ``record`` with the raw line preserved — the PERMISSIVE /
     _corrupt_record policy."""
-    if not tolerant:
-        # fused kernel path (r13): decrypt → gunzip → line-split → blank-drop
-        # in ONE mapInArrow crossing with the per-line work in pyarrow C
-        # kernels (guide §4.2). Replaces the pandas-UDF payload + JVM regex
-        # split + Generate explode of megabyte strings: plan is
-        # Project → MapInArrow instead of ArrowEvalPython → Filter → Generate.
-        # Result equality with the expression path is pinned by
-        # tests/test_delivery.py::test_parse_records_kernel_matches_expr.
-        lines = decrypted.select(
-            "fileName", "topic", "content", "plaintextKey", "iv"
-        ).mapInArrow(
-            crypto.decrypt_explode_lines_kernel,
-            "fileName string, topic string, line string",
-        )
-    else:
-        payload = crypto.gunzip_or_null(F.col("decrypted")).cast("string")
-        lines = (
-            decrypted.select(
-                "fileName",
-                "topic",
-                payload.alias("payload"),
-            )
-            .filter(F.col("payload").isNotNull())
-            .select(
-                "fileName",
-                "topic",
-                # one F.expr round trip instead of the Column/lambda chain
-                # (~0.1 s of py4j per build); analyzed-plan-identical to
-                # explode(filter(split(payload,'\n'), x -> len(trim(x))>0))
-                F.expr(
-                    "explode(filter(split(payload, '\\n', -1), "
-                    "x_1 -> length(trim(x_1)) > 0))"
-                ).alias("line"),
-            )
-        )
+    lines = decrypted.select("fileName", "topic", "content", "plaintextKey", "iv").mapInArrow(
+        partial(crypto.decrypt_explode_lines_kernel, tolerant=tolerant),
+        "fileName string, topic string, line string",
+    )
     return lines.select(
         "fileName",
         "topic",

@@ -108,13 +108,21 @@ def _parse_sidecar(path: str) -> list[tuple[str, str, str, str]]:
                 raise ValueError(f"{path}:{n}: sidecar line does not parse ({e})") from e
             if not isinstance(obj, dict):
                 raise ValueError(f"{path}:{n}: sidecar line is not a JSON object")
-            bad = [c for c in META_COLUMNS if not isinstance(obj.get(c), str)]
-            if bad:
-                raise ValueError(
-                    f"{path}:{n}: sidecar row has a NULL, missing or non-string {', '.join(bad)}"
-                )
-            rows.append(tuple(obj[c] for c in META_COLUMNS))
+            rows.append(meta_row(obj, f"{path}:{n}"))
     return rows
+
+
+def meta_row(obj: dict, where: str) -> tuple[str, str, str, str]:
+    """One metadata row (a sidecar line, or a stream arrival) as its
+    ``META_COLUMNS`` tuple. A NULL, missing or non-string field raises a
+    ValueError naming ``where`` and the row's fileName."""
+    bad = [c for c in META_COLUMNS if not isinstance(obj.get(c), str)]
+    if bad:
+        raise ValueError(
+            f"{where}: metadata row {obj.get('fileName')!r} has a NULL, missing or "
+            f"non-string {', '.join(bad)}"
+        )
+    return tuple(obj[c] for c in META_COLUMNS)
 
 
 def read_sidecar(input_dir: str) -> list[tuple[str, str, str, str]]:

@@ -26,7 +26,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans import delivery
-from ..sources.listing import ENCRYPTION_META_SCHEMA, listed_names, require_listed, unfinished
+from ..sources.listing import (
+    ENCRYPTION_META_SCHEMA,
+    listed_names,
+    meta_row,
+    require_listed,
+    unfinished,
+)
 from .epochs import EpochLog, run_epochs
 
 
@@ -168,19 +174,18 @@ def run_streaming_delivery(
     os.makedirs(status_dir, exist_ok=True)
 
     def step(meta_df: DataFrame, epoch_id: int):
-        rows = meta_df.collect()  # file-level metadata: tiny
+        # file-level metadata: tiny. A row with a NULL field raises naming it
+        # and the arrivals dir, as a bad sidecar row does in the batch job.
+        arrivals = os.path.join(input_dir, "meta_stream")
+        rows = [meta_row(r.asDict(), arrivals) for r in meta_df.collect()]
         # order-insensitive batch fingerprint, computed driver-side from the
         # already-collected metadata (no extra job), checked against the
         # epoch's marker. Each file's crc covers fileName + iv + cipherText,
         # so a same-name batch whose objects were re-uploaded with different
         # encryption material is detected too, not just a renamed one.
         fp = {"v": 2, "n": len(rows), "x": 0}
-        for r in rows:
-            fp["x"] ^= zlib.crc32(
-                b"\x00".join(
-                    (r["fileName"].encode(), r["iv"].encode(), r["cipherText"].encode())
-                )
-            )
+        for name, iv, _, cipher_text in rows:
+            fp["x"] ^= zlib.crc32(b"\x00".join((name.encode(), iv.encode(), cipher_text.encode())))
         return fp, lambda: deliver_batch(rows)
 
     def deliver_batch(rows) -> None:

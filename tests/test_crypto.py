@@ -2,15 +2,13 @@ import base64
 import gzip
 import os
 
-from pyspark.sql import functions as F
+import pytest
 
+from snapshot_sender_spark.functions import crypto
 from snapshot_sender_spark.functions.crypto import (
     _ctr_transform,
-    aes_ctr_decrypt,
     ctr_at_offset,
     empty_gzip,
-    gunzip,
-    gzip_bytes,
 )
 
 
@@ -37,25 +35,43 @@ def test_ctr_counter_wraparound():
     assert _ctr_transform(_ctr_transform(data, key, iv), key, iv) == data
 
 
-def test_spark_udfs_roundtrip(spark):
+def test_parse_records_roundtrip(spark):
+    """An AES-CTR encrypted gzip payload decrypts and gunzips back to its
+    lines through Spark (``parse_records``' one mapInArrow crossing)."""
+    from snapshot_sender_spark.plans import delivery
+
     key = os.urandom(32)
     iv = os.urandom(16)
     payload = b'{"a": 1}\n{"a": 2}\n'
     enc = _ctr_transform(gzip.compress(payload), key, iv)
     df = spark.createDataFrame(
-        [(enc, base64.b64encode(key).decode(), base64.b64encode(iv).decode())],
-        "content binary, key string, iv string",
+        [("f.enc", "t", enc, base64.b64encode(key).decode(), base64.b64encode(iv).decode())],
+        "fileName string, topic string, content binary, plaintextKey string, iv string",
     )
-    out = df.select(
-        gunzip(aes_ctr_decrypt(F.col("content"), F.col("key"), F.col("iv"))).alias("p")
-    ).collect()
-    assert bytes(out[0]["p"]) == payload
+    out = delivery.parse_records(df).collect()
+    assert [r["line"] for r in out] == ['{"a": 1}', '{"a": 2}']
+    assert {r["fileName"] for r in out} == {"f.enc"}
 
 
-def test_gzip_udf_roundtrip(spark):
-    df = spark.createDataFrame([(b"abc" * 100,)], "content binary")
-    out = df.select(gunzip(gzip_bytes(F.col("content"))).alias("p")).collect()
-    assert bytes(out[0]["p"]) == b"abc" * 100
+def test_open_payload_roundtrip():
+    """``open_payload`` returns the decrypted gzip bytes unchanged and their
+    text in chunks that rejoin, at the newlines cut, to the original."""
+    key, iv = os.urandom(32), os.urandom(16)
+    text = b"abc" * 100 + b"\n" + b"def\n" * 50
+    plain = gzip.compress(text)
+    enc = _ctr_transform(plain, key, iv)
+    k64, iv64 = base64.b64encode(key).decode(), base64.b64encode(iv).decode()
+    got, chunks = crypto.open_payload("f.enc", enc, k64, iv64)
+    assert got == plain
+    assert b"\n".join(chunks) == text
+
+    with pytest.raises(ValueError, match="^f.enc: decrypted payload is empty or NULL"):
+        crypto.open_payload("f.enc", enc, None, iv64)
+    with pytest.raises(ValueError, match="^f.enc: payload does not decrypt"):
+        crypto.open_payload("f.enc", enc, "not base64!", iv64)
+    _, chunks = crypto.open_payload("f.enc", enc, base64.b64encode(os.urandom(32)).decode(), iv64)
+    with pytest.raises(ValueError, match="^f.enc: decrypted payload is not valid gzip"):
+        list(chunks)
 
 
 def test_empty_gzip_is_valid_and_empty():

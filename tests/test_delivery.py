@@ -383,20 +383,29 @@ def test_parse_records_kernel_matches_expr(spark, fixture):
     """parse_records' fused path is a single mapInArrow kernel (r13:
     decrypt → gunzip → split → blank-drop in one crossing); pin EXACT result
     equality (sorted row multiset, record compared as canonical JSON) against
-    the decrypt UDF + gunzip UDF + JVM explode expression path, so any drift
-    in split/trim/null semantics fails loudly."""
+    the JVM split/trim/explode expression path over the payload strings, each
+    decrypted and gunzipped on the driver, so any drift in split/trim
+    semantics fails loudly."""
+    import gzip as gz
+
+    from snapshot_sender_spark.functions import crypto
+
     cfg = delivery.RunConfig(correlation_id="p", topic_name=fixture.topic,
                              reprocess_files=True)
     dec = delivery.build_decrypted(
         spark, fixture.input_dir, fixture.status_dir, cfg
     ).delivered
-    from snapshot_sender_spark.functions import crypto
-
-    payload = crypto.gunzip(F.col("decrypted")).cast("string")
+    payloads = spark.createDataFrame(
+        [
+            (r["fileName"], r["topic"],
+             gz.decompress(crypto.decrypt_payload(r["content"], r["plaintextKey"], r["iv"]))
+             .decode("utf-8", errors="replace"))
+            for r in dec.select("fileName", "topic", "content", "plaintextKey", "iv").collect()
+        ],
+        "fileName string, topic string, payload string",
+    )
     reference = (
-        dec.select("fileName", "topic", payload.alias("payload"))
-        .filter(F.col("payload").isNotNull())
-        .select(
+        payloads.select(
             "fileName",
             "topic",
             F.explode(
@@ -436,9 +445,9 @@ def test_parse_records_kernel_matches_expr(spark, fixture):
 
 def test_parse_records_kernel_blank_and_null_semantics(spark, tmp_path):
     """Direct kernel-semantics pin for the edge rows the fixture may not
-    exercise: NULL inputs drop, all-space lines drop, tab/\\r lines survive
-    (Spark trim strips U+0020 only), trailing-newline empties drop, and
-    invalid utf-8 follows the errors='replace' policy."""
+    exercise: all-space lines drop, tab/\\r lines survive (Spark trim strips
+    U+0020 only), trailing-newline empties drop, invalid utf-8 follows the
+    errors='replace' policy, and a NULL input raises naming its file."""
     import base64 as b64
     import gzip as gz
     import pyarrow as pa
@@ -463,10 +472,11 @@ def test_parse_records_kernel_blank_and_null_semantics(spark, tmp_path):
         ],
         names=["fileName", "topic", "content", "plaintextKey", "iv"],
     )
-    out = list(crypto.decrypt_explode_lines_kernel(iter([batch])))
+    with pytest.raises(ValueError, match="^f2: decrypted payload is empty or NULL"):
+        list(crypto.decrypt_explode_lines_kernel(iter([batch])))
+    out = list(crypto.decrypt_explode_lines_kernel(iter([batch.slice(0, 1)])))
     lines = [v.as_py() for b in out for v in b.column(2)]
-    files = {v.as_py() for b in out for v in b.column(0)}
-    assert files == {"f1"}  # the NULL-content row produced nothing
+    assert {v.as_py() for b in out for v in b.column(0)} == {"f1"}
     assert lines == ["a", "\tx", "\rb", "bad��line"]
 
     # the delivery sink's receipt counts the same lines as records
@@ -482,12 +492,21 @@ def test_parse_records_kernel_blank_and_null_semantics(spark, tmp_path):
     assert receipt["records"] == len(lines)
 
 
+def _assert_batch_line_bytes_bounded(batches, threshold):
+    """No batch holds more line bytes than max(threshold, longest line)."""
+    sizes = [[len(v.as_py().encode()) for v in b.column(2)] for b in batches]
+    bound = max([threshold] + [n for batch in sizes for n in batch])
+    assert all(sum(batch) <= bound for batch in sizes), (bound, sizes)
+
+
 def test_parse_records_kernel_group_flush_identical(monkeypatch):
     """The 2 GiB-cliff guard (r14): when the decompressed-payload group hits
     _EMIT_GROUP_BYTES the kernel flushes mid-batch. Force the chunked path
     with a tiny threshold and pin that the concatenated output is row-for-row
     identical to the single-group output (including an invalid-utf8 payload
-    landing in a flushed group, exercising the replace-decode fallback)."""
+    landing in a flushed group, exercising the replace-decode fallback), and
+    that no batch holds more line bytes than the threshold or its longest
+    line."""
     import base64 as b64
     import gzip as gz
     import pyarrow as pa
@@ -501,12 +520,12 @@ def test_parse_records_kernel_group_flush_identical(monkeypatch):
     def enc(payload: bytes) -> bytes:
         return crypto._ctr_transform(gz.compress(payload), key, iv)
 
-    payloads = [b"a1\na2\n", None, b"b1\n \nb2", b"c-bad\xff\xfe\nc2\n\n", b"d1"]
+    payloads = [b"a1\na2\n", b"b1\n \nb2", b"c-bad\xff\xfe\nc2\n\n", b"d1"]
     batch = pa.RecordBatch.from_arrays(
         [
             pa.array([f"f{i}" for i in range(len(payloads))]),
             pa.array(["t"] * len(payloads)),
-            pa.array([enc(p) if p is not None else None for p in payloads], type=pa.binary()),
+            pa.array([enc(p) for p in payloads], type=pa.binary()),
             pa.array([kb] * len(payloads)),
             pa.array([ivb] * len(payloads)),
         ],
@@ -521,13 +540,47 @@ def test_parse_records_kernel_group_flush_identical(monkeypatch):
         ]
 
     want = rows(crypto.decrypt_explode_lines_kernel(iter([batch])))
-    monkeypatch.setattr(crypto, "_EMIT_GROUP_BYTES", 1)  # flush after every payload
+    monkeypatch.setattr(crypto, "_EMIT_GROUP_BYTES", 1)  # flush after every line
     chunked = list(crypto.decrypt_explode_lines_kernel(iter([batch])))
-    assert len(chunked) == 4  # one flushed group per non-null payload
+    _assert_batch_line_bytes_bounded(chunked, 1)
     assert rows(chunked) == want
     for b in chunked:  # schema (incl. plain string, not large_string) intact
         assert b.schema.names == ["fileName", "topic", "line"]
         assert b.schema.types == [pa.string(), pa.string(), pa.string()]
+
+
+def test_parse_kernel_splits_one_large_payload(monkeypatch):
+    """One payload inflating to several times _EMIT_GROUP_BYTES (one of its
+    lines longer than that) emits several batches, none holding more line
+    bytes than the threshold or its longest line, with the same lines as a
+    plain split of the text."""
+    import base64 as b64
+    import gzip as gz
+    import random
+
+    import pyarrow as pa
+
+    from snapshot_sender_spark.functions import crypto
+
+    rng = random.Random(5)
+    lines = [("x" * rng.randrange(0, 300)).encode() for _ in range(400)]
+    lines[123] = b"y" * 3000  # longer than the threshold below
+    text = b"\n".join(lines) + b"\n"
+    threshold = 2048
+    assert len(text) > 10 * threshold
+    key, iv = b"0" * 16, b"1" * 16
+    batch = pa.RecordBatch.from_arrays(
+        [pa.array(["big.enc"]), pa.array(["t"]),
+         pa.array([crypto._ctr_transform(gz.compress(text), key, iv)], type=pa.binary()),
+         pa.array([b64.b64encode(key).decode()]), pa.array([b64.b64encode(iv).decode()])],
+        names=["fileName", "topic", "content", "plaintextKey", "iv"],
+    )
+    monkeypatch.setattr(crypto, "_EMIT_GROUP_BYTES", threshold)
+    out = list(crypto.decrypt_explode_lines_kernel(iter([batch])))
+    assert len(out) > 1
+    _assert_batch_line_bytes_bounded(out, threshold)
+    got = [v.as_py() for b in out for v in b.column(2)]
+    assert got == [ln.decode() for ln in text.split(b"\n") if ln.strip(b" ")]
 
 
 def test_parse_records_names_the_file_it_fails_on(spark, tmp_path):

@@ -3,6 +3,7 @@
 
 import base64
 import gzip
+import json
 import os
 import re
 import tempfile
@@ -41,6 +42,37 @@ def test_corrupt_payload_routed_not_fatal(spark, tmp_path):
     # strict mode would raise on the same input
     with pytest.raises(Exception):
         delivery.parse_records(result.delivered, tolerant=False).count()
+
+
+def test_unresolved_key_fails_strict_parse_and_is_corrupt_when_tolerant(spark, tmp_path):
+    """A file whose data key the lookup does not resolve has a NULL key: the
+    strict parse fails naming it, as the delivery sink does, while the
+    tolerant parse skips it, keeps the others, and corrupt_payloads lists
+    exactly that file."""
+    f = fx.generate(str(tmp_path), n_files=3, records_per_file=5, seed=17)
+    victim = f.files[1]
+    sidecar = os.path.join(f.input_dir, "metadata.sidecar.jsonl")
+    with open(sidecar) as fh:
+        rows = [json.loads(line) for line in fh]
+    for row in rows:
+        if row["fileName"] == victim:
+            row["dataKeyEncryptionKeyId"] = "unresolved"
+    with open(sidecar, "w") as fh:
+        fh.writelines(json.dumps(row) + "\n" for row in rows)
+
+    def key_lookup(pairs):
+        return delivery.key_lookup_local([p for p in pairs if p[0] != "unresolved"])
+
+    cfg = delivery.RunConfig(correlation_id="nk", topic_name=f.topic)
+    result = delivery.build_decrypted(spark, f.input_dir, f.status_dir, cfg, key_lookup=key_lookup)
+    with pytest.raises(Exception, match="ValueError: " + re.escape(victim)):
+        delivery.parse_records(result.delivered).count()
+    assert [r["fileName"] for r in delivery.corrupt_payloads(result.delivered).collect()] == [
+        victim
+    ]
+    good = delivery.parse_records(result.delivered, tolerant=True)
+    assert sorted({r["fileName"] for r in good.collect()}) == sorted(set(f.files) - {victim})
+    assert good.count() == 2 * 5
 
 
 # ---- property-based (hypothesis) --------------------------------------------
@@ -145,11 +177,12 @@ def test_sink_matches_reference_on_hostile_payloads(lines, trailing_newline, cas
 
 def _reference_kernel_lines(content, key_b64, iv_b64):
     """Plain-Python model of the parse kernel on one row: its lines, or None
-    where the kernel must raise naming the file. NULL inputs give no lines."""
+    where the kernel must raise naming the file. NULL inputs are refused, as
+    the sink refuses them."""
     from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
     if content is None or key_b64 is None or iv_b64 is None:
-        return []
+        return None
     key, iv = base64.b64decode(key_b64), base64.b64decode(iv_b64)
     if len(key) not in (16, 24, 32) or len(iv) != 16:
         return None

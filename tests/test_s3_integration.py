@@ -199,14 +199,13 @@ def test_listing_joins_content_end_to_end(spark, s3_stub, tmp_path):
     )
     decrypted = (
         files_df.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"])
-        .withColumn(
-            "payload", crypto.gunzip(crypto.aes_ctr_decrypt("content", "plaintextKey", "iv"))
-        )
-        .select("fileName", "payload")
+        .select("fileName", "content", "plaintextKey", "iv")
         .collect()
     )
+    assert len(decrypted) == 4
     for row in decrypted:
-        lines = bytes(row["payload"]).decode().strip().split("\n")
+        _, chunks = crypto.open_payload(*row)
+        lines = b"\n".join(chunks).decode().strip().split("\n")
         assert len(lines) == 3  # records_per_file round-trips
 
 

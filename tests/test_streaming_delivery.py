@@ -306,3 +306,30 @@ def test_hidden_arrival_fails_the_batch_naming_it(spark, tmp_path):
             delivery.key_lookup_local,
         )
     assert not [p for p in os.listdir(status_dir) if p.startswith("_epoch_")]
+
+
+def test_null_arrival_field_fails_naming_the_row(spark, tmp_path):
+    """An arrival row with a NULL field fails the micro-batch with a
+    ValueError naming the row's file and the arrivals dir, before anything is
+    delivered or the epoch commits."""
+    f = fx.generate(str(tmp_path / "gen"), n_files=2, records_per_file=2, seed=56)
+    input_dir = str(tmp_path / "landing")
+    out_dir = str(tmp_path / "out")
+    status_dir = str(tmp_path / "status")
+    os.makedirs(input_dir)
+    _land(f, input_dir, f.files)
+    meta_dir = os.path.join(input_dir, "meta_stream")
+    [arrival] = os.listdir(meta_dir)
+    with open(os.path.join(meta_dir, arrival)) as fh:
+        rows = [json.loads(line) for line in fh]
+    rows[1]["iv"] = None
+    with open(os.path.join(meta_dir, arrival), "w") as fh:
+        fh.writelines(json.dumps(r) + "\n" for r in rows)
+    named = re.escape(f"{meta_dir}: metadata row '{rows[1]['fileName']}'")
+    with pytest.raises(Exception, match=named):
+        ds.run_streaming_delivery(
+            spark, input_dir, out_dir, status_dir, str(tmp_path / "ckpt"),
+            delivery.key_lookup_local,
+        )
+    assert not os.path.exists(out_dir) or not os.listdir(out_dir)
+    assert not [p for p in os.listdir(status_dir) if p.startswith("_epoch_")]
