@@ -33,6 +33,10 @@ machine is shared with other tenants and rounds 3/4 were judged through a
 * ``queries_raw`` (detail file) — all 5 warm lap times per query, so a
   regression can be attributed (uniform drift = machine, single-lap outlier =
   noise, all-laps step on one query = plan change).
+* ``codegen_classes_compiled`` (detail file) — the generated classes the
+  cold lap and each warm lap compiled (``session.compiled_classes``). A warm
+  lap should compile none: any count there is Janino recompiling, and the
+  JIT re-warming, plans the session already ran.
 * ``load`` (detail file) — /proc/loadavg samples: before/after the whole
   bench and at the start of each warm lap. First-run constants vanish at real
   data scale, so the warm numbers predict 100-TB throughput; the cold column
@@ -78,7 +82,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from perfbench import stats  # noqa: E402
 from snapshot_sender_spark.queries import all_queries  # noqa: E402
-from snapshot_sender_spark.session import get_spark  # noqa: E402
+from snapshot_sender_spark.session import compiled_classes, get_spark  # noqa: E402
 
 HEADLINE = [
     "q1_pricing_summary",
@@ -231,16 +235,19 @@ def main():
 
     cold = {}
     raw: dict[str, list[float]] = {name: [] for name in HEADLINE}
+    compiles = {"cold": 0, "warm": []}  # see ``codegen_classes_compiled`` above
 
     # COLD lap FIRST, exactly as rounds 1-5 ran it: first execution of each
     # query — plan compile + codegen JIT + Python-worker boot included (this
     # lap doubles as the warmup). Keeping it first keeps the cold column
     # comparable across rounds.
+    c0 = compiled_classes(spark)
     with stats.stopwatch({}) as lap:
         for name in HEADLINE:
             t0 = time.perf_counter()
             registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
             cold[name] = round(time.perf_counter() - t0, 3)
+    compiles["cold"] = compiled_classes(spark) - c0
     load_samples["cold_steal_pct"] = round(100 * lap["steal"], 2)
 
     # The reference's own integration workload (100 files × 1,000 records,
@@ -296,11 +303,13 @@ def main():
     for lap_idx in range(WARM_LAPS):
         load_samples["laps"].append(loadavg())
         off = (lap_idx * 7) % len(HEADLINE)
+        c0 = compiled_classes(spark)
         with stats.stopwatch({}) as lap:
             for name in HEADLINE[off:] + HEADLINE[:off]:
                 t0 = time.perf_counter()
                 registry[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 raw[name].append(round(time.perf_counter() - t0, 3))
+        compiles["warm"].append(compiled_classes(spark) - c0)
         load_samples["lap_steal_pct"].append(round(100 * lap["steal"], 2))
 
     load_samples["probes_after_s"] = stats.host_probes(cpus, HOST_PROBES)
@@ -318,6 +327,7 @@ def main():
             "queries_median": medians,
             "queries_raw": raw,
             "queries_cold": cold,
+            "codegen_classes_compiled": compiles,
             "load": load_samples,
             "ref_total_sec": ref_total_sec(sum(best.values()), load_samples),
             "warm_laps": WARM_LAPS,

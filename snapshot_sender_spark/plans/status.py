@@ -25,13 +25,16 @@ from __future__ import annotations
 
 import contextlib
 import fcntl
-import gzip
 import json
 import os
+import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+
+from ..functions.crypto import empty_gzip
+from ..util import write_atomic
 
 STATUS_SCHEMA = (
     "CorrelationId string, CollectionName string, CollectionStatus string, "
@@ -154,13 +157,7 @@ def write_success_indicator(output_dir: str, topic: str) -> str:
         database, collection = parts[0], ".".join(parts[1:])
     name = f"_{database}_{collection}_successful.gz"
     path = os.path.join(output_dir, name)
-    import io
-
-    buf = io.BytesIO()
-    with gzip.GzipFile(fileobj=buf, mode="wb", mtime=0):
-        pass
-    with open(path, "wb") as fh:
-        fh.write(buf.getvalue())
+    write_atomic(path, empty_gzip(), uuid.uuid4().hex)
     return path
 
 

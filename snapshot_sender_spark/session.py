@@ -70,9 +70,28 @@ def get_spark(
         # 0.42s → 0.22s (min-of-4, local[32]).
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.files.openCostInBytes", "4m")
+        # Generated-class cache sized to the declared query surface (static
+        # conf; the Spark default is 100 entries). One pass over the 18
+        # bench.HEADLINE queries compiles ~184 classes at sf0.001 and sf0.1,
+        # so at 100 it evicts itself in a cycle: every warm pass recompiled
+        # 154-157 classes with Janino, each restarting in the JVM
+        # interpreter. At 8192 a warm pass compiles 0, and a steady sf0.1
+        # pass fell from 7.1-8.0 s to 5.3-5.7 s (4 cores). All 358 declared
+        # queries in one session compile 4,047 classes (Metaspace 265 MB at
+        # sf0.01); the 2x headroom is there because Guava's segmented LRU
+        # evicts before its nominal size. Pinned by tests/test_session.py.
+        .config("spark.sql.codegen.cache.maxEntries", "8192")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def compiled_classes(spark: SparkSession) -> int:
+    """Generated classes compiled in this JVM so far: Spark's ``CodegenMetrics``
+    records one compile time per codegen cache miss, so the difference over a
+    pass counts the classes that pass compiled rather than reused."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

@@ -146,7 +146,12 @@ def run_to_memory(
                 spark.conf.set(nodata_key, prev_nodata)
             else:
                 spark.conf.unset(nodata_key)
-    return spark.table(name)
+    # The analyzed plan holds the memory sink itself, not the view name, so
+    # the result outlives its view; dropping it keeps the session catalog
+    # from gaining one result table per call.
+    result = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return result
 
 
 def tumbling_counts(events: DataFrame, width: str = "6 hours") -> DataFrame:

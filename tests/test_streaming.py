@@ -468,3 +468,17 @@ def test_foreach_row_sink(spark, event_dir, tmp_path):
         for line in f.read_text().splitlines()
     )
     assert delivered == [1, 2, 3, 4, 5]
+
+
+def test_run_to_memory_leaves_no_view(spark, sf_dir):
+    """Each call used to leave its ``stream_<uuid>`` memory-sink view in the
+    session catalog for the life of the session. The returned frame reads
+    the sink itself, so it must outlive the dropped view."""
+    from snapshot_sender_spark.queries import all_queries
+
+    build = all_queries()["stream_tumbling_counts"].fn
+    before = sorted(t.name for t in spark.catalog.listTables())
+    results = [build(spark, sf_dir) for _ in range(3)]
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    rows = [sorted(df.collect()) for df in results]
+    assert rows[0] and rows[0] == rows[1] == rows[2]
