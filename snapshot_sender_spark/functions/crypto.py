@@ -13,8 +13,11 @@ Scale note: AES-CTR is a seekable stream cipher (counter mode), so a 100 TB
 deployment can decrypt byte ranges of large objects independently by seeking the
 counter — ``ctr_at_offset`` exposes that offset-aware form and
 ``chunked_decrypt`` runs it one task per range. Whole-file decryption here
-assumes file-granular rows (the reference's own unit of work); files are capped
-per task by ``spark.sql.files.maxPartitionBytes``.
+assumes file-granular rows (the reference's own unit of work). A task opens
+every file of one binaryFile scan partition, and the scan packs files
+largest first, next-fit, charging each its size plus
+``spark.sql.files.openCostInBytes`` (4 MB): small files share a few tasks,
+and the largest files can all land in the first one.
 """
 
 from __future__ import annotations

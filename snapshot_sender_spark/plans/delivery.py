@@ -15,16 +15,18 @@ payload plane is one declarative DataFrame plan.
                                                               distinct key, ≡ the
                                                               reference's memo cache
                                                               HttpKeyService.kt:48-50
+      → (fileName, iv, plaintextKey) per row               -- NULL key: the sink
+                                                              fails naming the file
     plan:
       binaryFile WHERE _metadata.file_name IN (pending)    -- pruned at listing:
         ⋈ broadcast(manifest)                                 finished objects are
                                                               never opened
       → route: bad filename → rejected, blocked topic     -- one CASE column,
                → blocked, else delivered                     one row per file
-      → ⟕ broadcast(resolved keys)                         -- NULL key → the sink
-                                                              fails naming the file
       → deliver: open (decrypt, gunzip check), record     -- mapInArrow receipt
-                 count, .json.gz + .finished marker per file  sink, run once
+                 count, .json.gz + .finished marker per file  sink, run once by the
+                                                              toArrow that returns
+                                                              its receipts
       → parse: open → split lines → from_json              -- record-level view
 
 Everything after the manifest is JVM-side until a Python crossing: the payload
@@ -33,10 +35,10 @@ crosses into Python once, encrypted, and only delivered rows keep their
 ``crypto.open_payload`` (DecryptionProcessor.kt:26-41), so the sink, the strict
 parse and the tolerant parse refuse the same files with the same messages.
 
-Scale: content bytes never shuffle (all joins broadcast the small side); decrypt
-parallelism = file-partition parallelism (`spark.sql.files.maxPartitionBytes`);
-markers make the sink idempotent under task retry (at-least-once ≡ reference
-chunk retry, JobConfiguration.kt:46-50).
+Scale: content bytes never shuffle (the one join broadcasts the manifest); a
+sink task opens every file of one binaryFile scan partition (crypto.py says
+how they pack); markers make the sink idempotent under task retry
+(at-least-once ≡ reference chunk retry, JobConfiguration.kt:46-50).
 """
 
 from __future__ import annotations
@@ -58,7 +60,6 @@ from ..util import local_strings_df, write_atomic
 # read_encrypted_files, read_encryption_meta and read_finished_markers are not
 # called here: perfbench wraps them as this module's attributes
 from ..sources.listing import (  # noqa: F401
-    META_COLUMNS,
     read_encrypted_files,
     read_encryption_meta,
     read_finished_markers,
@@ -184,17 +185,28 @@ def route_and_decrypt(
     key_lookup: Callable[[list[tuple[str, str]]], list[tuple[str, str, str]]],
     blocked_topics: str = "",
 ) -> DeliveryResult:
-    """Steps 2–6 of the plan, shared by the batch job and each streaming
-    micro-batch: ``rows`` is the manifest, one ``META_COLUMNS`` tuple
+    """The plan after the manifest, shared by the batch job and each
+    streaming micro-batch: ``rows`` is the manifest, one ``META_COLUMNS`` tuple
     (fileName, iv, dataKeyEncryptionKeyId, cipherText) per file to deliver,
     and ``objects`` those files' encrypted objects (path, fileName,
     content). Nothing is decrypted here: a routed row carries its
     ``content``, ``plaintextKey`` and ``iv`` to the Python crossing that
     opens it (``crypto.open_payload``)."""
-    # VALUES LocalRelation, not createDataFrame: the pickled-RDD scan the
-    # latter plans re-runs a Python-worker stage on EVERY broadcast build
-    # (util.local_strings_df docstring has the numbers)
-    meta = local_strings_df(spark, rows, META_COLUMNS)
+    # data-key resolution: one external call per distinct key pair of the
+    # manifest, never of the content scan: the reference's processor order
+    # (finishedFilter → dataKey, JobConfiguration.kt:61-64 — name validation
+    # and topic blocking happen later, in the writer). `or []`: a custom
+    # key_lookup may return None for "no keys". A file whose key did not
+    # resolve carries a NULL plaintextKey, and the sink fails the job naming
+    # it instead of dropping it silently. VALUES LocalRelation, not
+    # createDataFrame, whose pickled-RDD scan re-runs a Python-worker stage
+    # on every broadcast build (util.local_strings_df has the numbers).
+    pairs = list(dict.fromkeys((r[2], r[3]) for r in rows))
+    keys = {(kid, ct): key for kid, ct, key in key_lookup(pairs) or []}
+    meta = local_strings_df(
+        spark, [(r[0], r[1], keys.get((r[2], r[3]))) for r in rows],
+        ["fileName", "iv", "plaintextKey"],
+    )
     files = objects.join(F.broadcast(meta), "fileName")
 
     # 2. database/collection/topic of the enc-stripped name, which is what
@@ -220,27 +232,7 @@ def route_and_decrypt(
         "content", F.when(F.col("route") == DELIVERED, F.col("content"))
     )
 
-    # 5. data-key resolution: the manifest's distinct key pairs → external
-    #    lookup → broadcast join, one network call per distinct key. The key
-    #    set comes from the manifest alone, never the content scan: this
-    #    mirrors the reference's processor order (finishedFilter → dataKey,
-    #    JobConfiguration.kt:61-64 — name validation and topic blocking
-    #    happen later, in the writer), and costs no Spark job.
-    pairs = list(dict.fromkeys((r[2], r[3]) for r in rows))
-    resolved = key_lookup(pairs)
-    keys_df = local_strings_df(
-        spark,
-        # `or []`: a custom key_lookup returning None for "no keys" must get
-        # the empty-relation path, as the pre-r13 code tolerated
-        [tuple(r) for r in (resolved or [])],
-        ["dataKeyEncryptionKeyId", "cipherText", "plaintextKey"],
-    )
-    # left join: a file whose key the lookup did not resolve keeps a NULL
-    # plaintextKey, and the sink fails the job naming it (a DKS failure fails
-    # the job) instead of dropping it silently
-    routed = routed.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"], "left")
-
-    # 6. rename (HttpWriter.kt:58)
+    # 5. rename (HttpWriter.kt:58)
     return DeliveryResult(
         routed.withColumn("outputFileName", text.rename_output(F.col("decryptedFileName")))
     )
@@ -296,27 +288,40 @@ def deliver_batches(output_dir: str, status_dir: str, batches):
         )
 
 
-def deliver(result: DeliveryResult, output_dir: str, status_dir: str) -> DataFrame:
-    """Materialize the sink and return one receipt per routed file. Per
-    delivered file: decrypt, check that the bytes gunzip and count their
-    records, then write the still-gzipped bytes to
-    ``output_dir/<name .txt.gz→.json.gz>`` and a ``<original>.finished``
-    marker (HttpWriter.kt:58,95-96; S3StatusFileWriter.kt:19-52). A NULL or
-    non-gzip payload fails the job with the file's name before that file's
-    output or marker exists, so a rerun tries it again. Rejected and blocked
-    rows write nothing.
+def deliver(result: DeliveryResult, output_dir: str, status_dir: str) -> pa.Table:
+    """Run the sink and return its receipts, a pyarrow Table with
+    ``RECEIPT_SCHEMA``, one row per routed file. Per delivered file: decrypt,
+    check that the bytes gunzip and count their records, then write the
+    still-gzipped bytes to ``output_dir/<name .txt.gz→.json.gz>`` and a
+    ``<original>.finished`` marker (HttpWriter.kt:58,95-96;
+    S3StatusFileWriter.kt:19-52). A NULL or non-gzip payload fails the job
+    with the file's name before that file's output or marker exists, so a
+    rerun tries it again. Rejected and blocked rows write nothing.
 
-    One ``mapInArrow`` pass, run exactly once (eager ``localCheckpoint``).
-    The job *derives* its counts from the receipts instead of incrementing
-    counters (DynamoDBExportStatusService.kt:38-44). At-least-once,
-    idempotent by marker anti-join on restart."""
+    One ``mapInArrow`` pass, run once by the ``toArrow`` that brings the
+    receipts to the driver. The job *derives* its counts from them
+    (``tally``) instead of incrementing counters
+    (DynamoDBExportStatusService.kt:38-44)."""
     os.makedirs(output_dir, exist_ok=True)
     os.makedirs(status_dir, exist_ok=True)
     return (
         result.routed.select(SINK_COLUMNS)
         .mapInArrow(partial(deliver_batches, output_dir, status_dir), RECEIPT_SCHEMA)
-        .localCheckpoint(eager=True)
+        .toArrow()
     )
+
+
+def tally(receipts: pa.Table) -> dict:
+    """One sink run's counts from its receipts: files per route, and the
+    delivered files' ``records``, ``bytes`` and distinct ``topics``."""
+    rows = receipts.to_pylist()
+    delivered = [r for r in rows if r["route"] == DELIVERED]
+    return {
+        **{k: sum(r["route"] == k for r in rows) for k in (DELIVERED, REJECTED, BLOCKED)},
+        "records": sum(r["records"] for r in delivered),
+        "bytes": sum(r["payload_bytes"] for r in delivered),
+        "topics": len({r["topic"] for r in delivered}),
+    }
 
 
 def _unopenable(batches):

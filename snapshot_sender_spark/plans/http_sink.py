@@ -14,9 +14,10 @@ Semantics preserved:
   * a .finished marker after success (HttpWriter.kt:95-96) makes restarts
     idempotent via the upstream anti-join.
 
-Scale: one POST per file from whichever task holds the file's row; no driver
-involvement, no collect. Connection reuse per partition (one opener per task,
-≡ the reference's pooled client, SecureHttpClientProvider.kt).
+Scale: one POST per file from whichever task holds the file's row; only the
+receipts, one small row per posted file, come back to the driver. Connection
+reuse per partition (one opener per task, ≡ the reference's pooled client,
+SecureHttpClientProvider.kt).
 """
 
 from __future__ import annotations
@@ -107,7 +108,7 @@ def http_deliver(
     max_retries: int = 5,
     backoff_s: float = 0.1,
     tls: dict | None = None,
-) -> DataFrame:
+) -> pa.Table:
     """POST each delivered file's payload with routing headers; at-least-once
     with idempotent markers. ``decrypted`` is a routed delivery frame such as
     ``DeliveryResult.delivered``; rows off the ``delivered`` route are not
@@ -116,10 +117,10 @@ def http_deliver(
     with ×2 exponential backoff (HttpKeyService.kt:37-40's policy applied to
     delivery).
 
-    Returns one receipt per posted file, materialized exactly once (eager
-    ``localCheckpoint``): a side-effecting transformation must not re-run on
-    every downstream action (count-then-write, AQE stage retry, speculation),
-    or every materialization would re-POST the partition."""
+    Returns the receipts on the driver, a pyarrow Table with
+    ``RECEIPT_SCHEMA``, one row per posted file: the one action that runs
+    the POSTs (``toArrow``) also brings them back, so no later action can
+    re-POST a partition, as it could on a DataFrame of receipts."""
 
     def post_batches(batches):
         ctx = _ssl_context(tls)
@@ -167,10 +168,8 @@ def http_deliver(
                 )
             yield pa.RecordBatch.from_pylist(out, schema=RECEIPT_SCHEMA)
 
-    # Eager, replicated local checkpoint: runs the POSTs exactly once, now;
-    # every later count/collect/write on the result reuses the stored rows.
     return (
         decrypted.select(SINK_COLUMNS)
         .mapInArrow(post_batches, from_arrow_schema(RECEIPT_SCHEMA))
-        .localCheckpoint(eager=True)
+        .toArrow()
     )

@@ -18,7 +18,6 @@ import logging
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
-from pyspark.sql import functions as F
 
 from . import delivery as dlv
 from . import metrics as mx
@@ -72,7 +71,7 @@ def run_delivery_job(
     # families the job emits. NOTE a deliberate divergence from the
     # reference here: its Counter.inc() fires per chunk mid-run, so its
     # scheduled pushes show real progress, whereas our counters are
-    # aggregated from the sink's receipts after it completes — so OUR
+    # counted from the sink's receipts after it completes — so OUR
     # scheduled pushes carry zeros for the whole run BY CONSTRUCTION, and
     # only push_final() carries the real totals. The zero-seeding still
     # matters: an empty dict would make every scheduled push an
@@ -113,22 +112,11 @@ def _run_delivery_job_body(
     files_exported, key_lookup, counters_box, lifecycle,
 ) -> JobReport:
     result = dlv.build_decrypted(spark, input_dir, status_dir, cfg, key_lookup=key_lookup)
-    receipts = dlv.deliver(result, output_dir, status_dir)
-    # every count comes from the one sink pass's receipts; size(collect_set)
-    # of the few topics plans one Spark job fewer than count_distinct
+    counts = dlv.tally(dlv.deliver(result, output_dir, status_dir))
     files_f, bytes_f, topics_f = mx.DELIVERY_COUNTER_FAMILIES
-    route = F.col("route")
-    totals = receipts.agg(
-        F.count_if(route == dlv.DELIVERED).alias(files_f),
-        F.coalesce(F.sum("payload_bytes"), F.lit(0)).alias(bytes_f),
-        F.size(F.collect_set(F.when(route == dlv.DELIVERED, F.col("topic")))).alias(topics_f),
-        F.coalesce(F.sum("records"), F.lit(0)).alias("records"),
-        F.count_if(route == dlv.REJECTED).alias("rejected"),
-        F.count_if(route == dlv.BLOCKED).alias("blocked"),
-    ).first()
-    counters = {name: totals[name] for name in mx.DELIVERY_COUNTER_FAMILIES}
+    counters = {files_f: counts[dlv.DELIVERED], bytes_f: counts["bytes"], topics_f: counts["topics"]}
     n_delivered, n_records, n_rejected, n_blocked = (
-        totals[c] for c in (files_f, "records", "rejected", "blocked")
+        counts[c] for c in (dlv.DELIVERED, "records", dlv.REJECTED, dlv.BLOCKED)
     )
 
     if files_exported is None:

@@ -161,15 +161,16 @@ def run_streaming_delivery(
     input (Trigger.AvailableNow). Returns the list of processed epoch ids.
 
     foreachBatch body = the batch pipeline stages on the batch's file set:
-    metadata rows → content join (read per batch) → grammar/topic routing →
-    key broadcast (``delivery.route_and_decrypt``) → the batch ``deliver()``
-    sink (per file: decrypt, gunzip check, atomic rename + marker, fully
-    distributed — decrypted bytes never reach the driver).
+    metadata rows → key lookup and content join (read per batch) →
+    grammar/topic routing (``delivery.route_and_decrypt``) → the batch
+    ``deliver()`` sink (per file: decrypt, gunzip check, atomic rename +
+    marker, fully distributed — decrypted bytes never reach the driver).
     The epoch's marker (``epochs.EpochLog``, fingerprint = crc of every
     file's name, iv and cipherText) makes redelivery of a replayed batch a
-    no-op and refuses a different batch under a reused epoch id; the only
-    driver-side collect is the metadata listing delta (O(files-per-batch),
-    not O(bytes)); the key set comes from those rows."""
+    no-op, refuses a different batch under a reused epoch id, and records
+    the files delivered and rejected and the records delivered. The
+    driver-side collects are the metadata rows and the batch's receipts,
+    O(files-per-batch), not O(bytes)."""
     os.makedirs(output_dir, exist_ok=True)
     os.makedirs(status_dir, exist_ok=True)
 
@@ -188,7 +189,7 @@ def run_streaming_delivery(
             fp["x"] ^= zlib.crc32(b"\x00".join((name.encode(), iv.encode(), cipher_text.encode())))
         return fp, lambda: deliver_batch(rows)
 
-    def deliver_batch(rows) -> None:
+    def deliver_batch(rows) -> dict:
         # the reference's already-processed filter (FinishedFilterProcessor
         # semantics), the batch job's marker probe: per-FILE idempotence — a
         # replayed epoch whose marker was lost re-delivers nothing that
@@ -196,6 +197,7 @@ def run_streaming_delivery(
         # scan of the whole marker dir, which would grow
         # O(everything-ever-delivered) per batch.
         rows = unfinished(rows, status_dir)  # Rows in META_COLUMNS order
+        counts = dict.fromkeys(("delivered", "records", "rejected"), 0)
         if rows:
             # explicit path list: this batch's bytes and ONLY this batch's
             # bytes are read — O(batch) I/O regardless of how large the
@@ -205,7 +207,9 @@ def run_streaming_delivery(
             # objects and manifest; the stream blocks no topics
             result = delivery.route_and_decrypt(spark, objects, rows, key_lookup)
             # the batch receipt sink: the executors deliver the micro-batch
-            delivery.deliver(result, output_dir, status_dir)
+            tally = delivery.tally(delivery.deliver(result, output_dir, status_dir))
+            counts = {k: tally[k] for k in counts}
+        return counts
 
     return run_epochs(
         read_encrypted_stream(spark, input_dir), checkpoint_dir,

@@ -32,8 +32,8 @@ def fixture(tmp_path_factory):
 def run(spark, fixture):
     cfg = delivery.RunConfig(correlation_id="123", topic_name=fixture.topic)
     result = delivery.build_decrypted(spark, fixture.input_dir, fixture.status_dir, cfg)
-    manifest = delivery.deliver(result, fixture.output_dir, fixture.status_dir)
-    return cfg, result, manifest.collect()
+    receipts = delivery.deliver(result, fixture.output_dir, fixture.status_dir)
+    return cfg, result, receipts.to_pylist()
 
 
 def test_marker_per_input(fixture, run):
@@ -356,21 +356,21 @@ def test_collection_status_truth_table():
 
 def test_deliver_plan_has_one_python_node(spark, tmp_path, monkeypatch):
     """The sink is the payload's only Python crossing: the plan deliver
-    checkpoints has exactly one Python node, MapInArrow, with no decrypt UDF
-    (ArrowEvalPython) ahead of it and no pandas sink."""
+    runs through toArrow has exactly one Python node, MapInArrow, with no
+    decrypt UDF (ArrowEvalPython) ahead of it and no pandas sink."""
     import re
 
     from pyspark.sql.classic.dataframe import DataFrame
 
     f = fx.generate(str(tmp_path), n_files=2, records_per_file=3, seed=44)
     plans = []
-    checkpoint = DataFrame.localCheckpoint
+    to_arrow = DataFrame.toArrow
 
     def capture(self, *args, **kwargs):
         plans.append(self._jdf.queryExecution().executedPlan().toString())
-        return checkpoint(self, *args, **kwargs)
+        return to_arrow(self, *args, **kwargs)
 
-    monkeypatch.setattr(DataFrame, "localCheckpoint", capture)
+    monkeypatch.setattr(DataFrame, "toArrow", capture)
     cfg = delivery.RunConfig(correlation_id="plan", topic_name=f.topic)
     result = delivery.build_decrypted(spark, f.input_dir, f.status_dir, cfg)
     delivery.deliver(result, f.output_dir, f.status_dir)
@@ -486,9 +486,9 @@ def test_parse_records_kernel_blank_and_null_semantics(spark, tmp_path):
         "fileName string, outputFileName string, topic string, database string, "
         "collection string, route string, content binary, plaintextKey string, iv string",
     )
-    receipt = delivery.deliver(
+    [receipt] = delivery.deliver(
         delivery.DeliveryResult(routed), str(tmp_path / "out"), str(tmp_path / "status")
-    ).first()
+    ).to_pylist()
     assert receipt["records"] == len(lines)
 
 

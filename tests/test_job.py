@@ -121,7 +121,7 @@ def test_unresolved_data_key_fails_job_naming_a_file(spark, tmp_path):
 def test_job_counts_every_route_from_the_receipts(spark, tmp_path, monkeypatch):
     """One job over 3 deliverable files, 1 invalid name, 1 blocked topic and
     1 pre-marked file reports exact counts, and takes all of them from the
-    one receipts aggregation: no DataFrame.count action runs."""
+    sink's receipts on the driver: no DataFrame.count action runs."""
     from pyspark.sql.classic.dataframe import DataFrame
 
     f = fx.generate(str(tmp_path / "a"), n_files=4, records_per_file=5, seed=51)
@@ -166,6 +166,37 @@ def test_job_counts_every_route_from_the_receipts(spark, tmp_path, monkeypatch):
     assert sorted(p for p in os.listdir(f.output_dir) if p.endswith(".json.gz")) == sorted(
         n.replace(".txt.gz.enc", ".json.gz") for n in deliverable
     )
+
+
+def test_delivery_job_runs_two_spark_jobs(spark, tmp_path):
+    """A delivery job runs 2 Spark jobs: the broadcast of the manifest, which
+    carries each file's resolved key, and the sink, whose action returns the
+    receipts the counts come from. Pinned on a fixture with a pre-marked file
+    and a rejected name."""
+    f = fx.generate(str(tmp_path), n_files=3, records_per_file=3, seed=53)
+    sidecar = os.path.join(f.input_dir, "metadata.sidecar.jsonl")
+    with open(sidecar) as fh:
+        invalid_meta = {**json.loads(fh.readline()), "fileName": "not-a-valid-name.enc"}
+    shutil.copy(
+        os.path.join(f.input_dir, f.files[0]), os.path.join(f.input_dir, "not-a-valid-name.enc")
+    )
+    with open(sidecar, "a") as fh:
+        fh.write(json.dumps(invalid_meta) + "\n")
+    with open(os.path.join(f.status_dir, f.files[0] + ".finished"), "w") as fh:
+        fh.write(f"Finished {f.files[0]}")
+    sc = spark.sparkContext
+    group = "delivery-job-jobs"
+    sc.setJobGroup(group, "run_delivery_job")
+    try:
+        report = job.run_delivery_job(
+            spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "status_table"),
+            delivery.RunConfig(correlation_id="two-jobs", topic_name=f.topic),
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
+    assert (report.files_delivered, report.rejected, report.records_parsed) == (2, 1, 6)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
 
 
 def test_status_phase_starts_no_spark_job(spark, tmp_path, monkeypatch):

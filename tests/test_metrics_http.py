@@ -110,7 +110,7 @@ def test_http_sink_delivers_with_headers(spark, tmp_path, receiver):
         export_date="2026-08-13",
         snapshot_type="drift_testing_incremental",
         status_dir=f.status_dir,
-    ).collect()
+    ).to_pylist()
     assert len(_Receiver.store) == 3
     assert all(r["status_code"] == 200 and r["attempts"] == 1 for r in receipts)
     sample = _Receiver.store[0]
@@ -200,14 +200,14 @@ def test_http_sink_retries_then_succeeds(spark, tmp_path, receiver):
     result = delivery.build_decrypted(spark, f.input_dir, f.status_dir, cfg)
     receipts = http_sink.http_deliver(
         result.delivered, url, correlation_id="r", export_date="d", backoff_s=0.01
-    ).collect()
+    ).to_pylist()
     assert len(_Receiver.store) == 1
     assert receipts[0]["attempts"] == 3  # two 503s, success on third
 
 
 def test_http_sink_materializes_once(spark, tmp_path, receiver):
-    # Re-running downstream actions must not re-POST: the receipts are
-    # checkpointed inside http_deliver, so count+collect+count = 1 send/file.
+    # Reading the receipts again must not re-POST: http_deliver returns them
+    # as a driver-side Table, so count+collect+count = 1 send/file.
     srv, url = receiver
     f = fx.generate(str(tmp_path), n_files=2, records_per_file=4, seed=21)
     cfg = delivery.RunConfig(correlation_id="once", topic_name=f.topic)
@@ -215,9 +215,9 @@ def test_http_sink_materializes_once(spark, tmp_path, receiver):
     receipts = http_sink.http_deliver(
         result.delivered, url, correlation_id="once", export_date="d"
     )
-    assert receipts.count() == 2
-    assert len(receipts.collect()) == 2
-    assert receipts.count() == 2
+    assert receipts.num_rows == 2
+    assert len(receipts.to_pylist()) == 2
+    assert receipts.num_rows == 2
     assert len(_Receiver.store) == 2  # not 6
 
 
@@ -230,7 +230,7 @@ def test_http_sink_202_is_not_success(spark, tmp_path, receiver):
     result = delivery.build_decrypted(spark, f.input_dir, f.status_dir, cfg)
     receipts = http_sink.http_deliver(
         result.delivered, url, correlation_id="s202", export_date="d", backoff_s=0.01
-    ).collect()
+    ).to_pylist()
     assert receipts[0]["attempts"] == 2  # 202 retried, 200 accepted
     assert receipts[0]["status_code"] == 200
 
@@ -245,7 +245,7 @@ def test_http_sink_exhausts_retries(spark, tmp_path, receiver):
         http_sink.http_deliver(
             result.delivered, url, correlation_id="x", export_date="d",
             max_retries=2, backoff_s=0.01,
-        ).count()
+        )
 
 
 def _make_self_signed(tmp_path):
@@ -321,7 +321,7 @@ def test_http_sink_tls(spark, tmp_path):
             correlation_id="tls",
             export_date="d",
             tls={"cafile": certfile, "check_hostname": False},
-        ).collect()
+        ).to_pylist()
         assert len(receipts) == 2 and all(r["status_code"] == 200 for r in receipts)
         assert len(_Receiver.store) == 2
     finally:

@@ -233,6 +233,41 @@ def test_legacy_v1_marker_fails_loudly(spark, tmp_path):
         )
 
 
+def test_epoch_marker_records_what_the_epoch_delivered(spark, tmp_path):
+    """Each delivery epoch's marker records, next to its fingerprint, the
+    files it delivered and rejected and the records it delivered, counted
+    from the batch's receipts; an epoch with nothing pending records zeros."""
+    f = fx.generate(str(tmp_path / "gen"), n_files=2, records_per_file=3, seed=57)
+    input_dir = str(tmp_path / "landing")
+    status_dir = str(tmp_path / "status")
+    os.makedirs(input_dir)
+    _land(f, input_dir, f.files)
+    ran = ds.run_streaming_delivery(
+        spark, input_dir, str(tmp_path / "out"), status_dir, str(tmp_path / "ckpt"),
+        delivery.key_lookup_local,
+    )
+    assert ran == [0]
+    marker = os.path.join(status_dir, "_epoch_0.committed")
+    with open(marker) as fh:
+        record = json.load(fh)
+    assert record["n"] == 2
+    assert {k: record[k] for k in ("delivered", "records", "rejected")} == {
+        "delivered": 2, "records": 6, "rejected": 0,
+    }
+    # the same batch replayed under a fresh checkpoint, its marker lost:
+    # both files are finished, so the epoch has nothing pending
+    os.remove(marker)
+    ds.run_streaming_delivery(
+        spark, input_dir, str(tmp_path / "out"), status_dir, str(tmp_path / "ckpt2"),
+        delivery.key_lookup_local,
+    )
+    with open(marker) as fh:
+        record = json.load(fh)
+    assert {k: record[k] for k in ("delivered", "records", "rejected")} == {
+        "delivered": 0, "records": 0, "rejected": 0,
+    }
+
+
 def test_replayed_epoch_with_lost_marker_skips_finished_files(spark, tmp_path):
     """Per-FILE idempotence under epoch replay: if the epoch marker is lost
     but outputs + .finished markers survive, the replayed batch re-delivers
