@@ -14,10 +14,9 @@ deployment can decrypt byte ranges of large objects independently by seeking the
 counter — ``ctr_at_offset`` exposes that offset-aware form and
 ``chunked_decrypt`` runs it one task per range. Whole-file decryption here
 assumes file-granular rows (the reference's own unit of work). A task opens
-every file of one binaryFile scan partition, and the scan packs files
-largest first, next-fit, charging each its size plus
-``spark.sql.files.openCostInBytes`` (4 MB): small files share a few tasks,
-and the largest files can all land in the first one.
+the files of one bin, one at a time; the driver packs the bins by file
+length, largest first into the least-loaded bin (``delivery.pack``), so the
+large files spread over the tasks.
 """
 
 from __future__ import annotations

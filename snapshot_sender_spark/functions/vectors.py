@@ -29,9 +29,3 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
-
-def dot_literal(a: Column, q: list[float]) -> Column:
-    """Dot product against a query vector baked in as a literal array —
-    constant-folded by Catalyst, broadcast-free."""
-    # one array<double> literal — a single py4j call vs one per element
-    return dot(a, F.lit([float(x) for x in q]))

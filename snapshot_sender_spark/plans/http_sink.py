@@ -1,6 +1,7 @@
 """Per-file HTTP delivery sink — the reference's NiFi POST path
 (HttpWriter.kt:39-119, headers NiFiUtility.kt:12-25) as a second writer of
-the delivery sink: its input columns, per-file check and marker writer.
+the delivery sink (``delivery.sink``): its bins, per-file reader, per-file
+check and marker writer; only the write step is a POST.
 
 Semantics preserved:
   * 12 routing headers per POST, including filename (renamed .txt.gz→.json.gz),
@@ -14,9 +15,9 @@ Semantics preserved:
   * a .finished marker after success (HttpWriter.kt:95-96) makes restarts
     idempotent via the upstream anti-join.
 
-Scale: one POST per file from whichever task holds the file's row; only the
-receipts, one small row per posted file, come back to the driver. Connection
-reuse per partition (one opener per task, ≡ the reference's pooled client,
+Scale: one POST per file from the task whose bin holds it; only the
+receipts, one small row per posted file, come back to the driver. One TLS
+context per task (≡ the reference's pooled client,
 SecureHttpClientProvider.kt).
 """
 
@@ -31,7 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..functions.text import normalize_snapshot_type
-from .delivery import SINK_COLUMNS, checked_files, mark_finished
+from .delivery import checked_files, mark_finished, sink
 
 
 def nifi_headers(
@@ -112,8 +113,9 @@ def http_deliver(
     """POST each delivered file's payload with routing headers; at-least-once
     with idempotent markers. ``decrypted`` is a routed delivery frame such as
     ``DeliveryResult.delivered``; rows off the ``delivered`` route are not
-    posted. Each file is decrypted and gzip-checked before its POST, and a bad
-    one raises naming the file. Retries per file: ``max_retries`` attempts
+    posted. The files run through ``delivery.sink``'s per-file tasks: each
+    is read, decrypted and gzip-checked before its POST, and a bad one raises
+    naming the file. Retries per file: ``max_retries`` attempts
     with ×2 exponential backoff (HttpKeyService.kt:37-40's policy applied to
     delivery).
 
@@ -168,8 +170,5 @@ def http_deliver(
                 )
             yield pa.RecordBatch.from_pylist(out, schema=RECEIPT_SCHEMA)
 
-    return (
-        decrypted.select(SINK_COLUMNS)
-        .mapInArrow(post_batches, from_arrow_schema(RECEIPT_SCHEMA))
-        .toArrow()
-    )
+    _, receipts = sink(decrypted, post_batches, from_arrow_schema(RECEIPT_SCHEMA))
+    return RECEIPT_SCHEMA.empty_table() if receipts is None else receipts.cast(RECEIPT_SCHEMA)

@@ -367,9 +367,9 @@ def source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     category="source",
 )
 def source_binaryfile_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The ``binaryFile`` source — the delivery pipeline's ingestion format
-    (one row per object: path, length, content; S3DirectoryReader.kt:31-98
-    equivalent): five known files scanned, identity checked via basename and
+    """The ``binaryFile`` source — Spark's object scan (one row per object:
+    path, length, content; the shape of S3DirectoryReader.kt:31-98's
+    objects): five known files scanned, identity checked via basename and
     byte length (ASCII text → bytes == n_chars)."""
     import os as _os
 

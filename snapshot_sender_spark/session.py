@@ -64,10 +64,8 @@ def get_spark(
         # measurement: the previous local tuning (1 MB splits / 64 KB open
         # cost) gave NO parallelism on the single-row-group testdata parquet
         # (a task only reads row groups whose midpoint lands in its split →
-        # 1 real + ~30 empty tasks per scan) and it fragmented the binaryFile
-        # source into under-packed splits; at the defaults a lineitem
-        # scan-agg dropped 0.34s → 0.17s and the delivery binaryFile scan
-        # 0.42s → 0.22s (min-of-4, local[32]).
+        # 1 real + ~30 empty tasks per scan); at the defaults a lineitem
+        # scan-agg dropped 0.34s → 0.17s (min-of-4, local[32]).
         .config("spark.sql.files.maxPartitionBytes", "128m")
         .config("spark.sql.files.openCostInBytes", "4m")
         # Generated-class cache sized to the declared query surface (static

@@ -13,8 +13,8 @@ Local layout (stands in for the S3 prefix + user metadata):
         {fileName, iv, dataKeyEncryptionKeyId, cipherText}
     <root>/status/...                                   .finished markers (delivery writes)
 
-At 100 TB this layout maps 1:1 onto S3: the objects come from
-``spark.read.format("binaryFile")`` and the metadata rows from a driver-side
+At 100 TB this layout maps 1:1 onto S3: the objects are read one GET each
+by the sink's tasks and the metadata rows come from a driver-side
 paginated listing (see listing.py).
 """
 

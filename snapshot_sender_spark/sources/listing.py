@@ -1,39 +1,37 @@
-"""Snapshot-file source: binary objects + per-object encryption metadata.
+"""Snapshot-file source: encrypted objects + per-object encryption metadata.
 
 The reference settles what to send on the driver before any payload moves:
 a paginated S3 ListObjectsV2 + per-object GET that reads the encryption
 triple (iv, dataKeyEncryptionKeyId, cipherText) from S3 *user metadata*
 (S3DirectoryReader.kt:31-98), then one existence probe per key for a
-``.finished`` marker (FinishedFilterProcessor.kt:17-27). Spark's
-``binaryFile`` source gives us the bytes but not user metadata, so the source
-here is a driver-side manifest plus a scan pruned to it:
+``.finished`` marker (FinishedFilterProcessor.kt:17-27), then one GET per
+object (S3Utils.kt:34-42). The source here does the same:
 
     sidecar rows (driver, memoized)  →  unfinished: one marker probe per row
-      → binaryFile scan WHERE _metadata.file_name IN (pending)  ⋈  manifest
+      → stat_objects: one stat per pending row (path, length)
+      → read_object: one read per pending object, inside the sink's tasks
 
 Locally the manifest comes from the fixture's ``metadata.sidecar.jsonl``
 sidecar; against S3 it would come from a driver-side boto3 paginated listing
 (one LIST per 1000 keys — the reference does exactly one listing per run too,
 S3DirectoryReader.kt:51-80). The manifest is O(number of files) and tiny next
-to the content, so settling it starts no Spark job, and its join with the
-content is a broadcast hash join — no shuffle of the multi-TB content side.
-Spark applies the ``_metadata.file_name`` filter when it lists the files
-(``DataFilters: [file_name IN …]`` in the plan), so a finished object is never
-opened.
+to the content, so settling it starts no Spark job, and a finished object is
+never opened. ``read_object`` is the only code that reads a delivered
+object's bytes.
 """
 
 from __future__ import annotations
 
 import json
 import os
-from urllib.parse import unquote
+import stat
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..util import local_strings_df, sql_strings
+from ..util import local_strings_df
 
 SIDECAR = "metadata.sidecar.jsonl"
 ENCRYPTION_META_SCHEMA = T.StructType(
@@ -45,24 +43,15 @@ ENCRYPTION_META_SCHEMA = T.StructType(
     ]
 )
 META_COLUMNS = ENCRYPTION_META_SCHEMA.fieldNames()
-# (path, fileName, length, content): the EncryptedStream analog
-# (DomainClasses.kt:10-32) before its metadata join
+# (path, fileName, length, content) of read_encrypted_files' scan
 _OBJECT_COLUMNS = ("path", "element_at(split(path, '/'), -1) AS fileName", "length", "content")
 
-# Memos (r13, guide §1.2 driver-side constants): parsing the sidecar and
-# especially building the binaryFile reader, which lists the directory
-# (InMemoryFileIndex), cost ~0.1-0.2 s per build_decrypted call over
-# *identical* inputs. Unlike the read-only testdata tables
-# (tables._LOAD_CACHE), a delivery input dir CAN change between calls
-# (fixtures regenerate, tests append objects), so a hit additionally requires
-# a filesystem FINGERPRINT match: the (name, mtime_ns, size) set of the
-# matching files, captured by a driver-side scandir that costs ~0.2 ms per
-# 100 objects. A changed/deleted/added file changes the fingerprint and
-# forces a fresh read. The reader is a logical plan handle — no data is
-# cached; every execution rescans the files.
+# Memos: the sidecar is parsed once per content, not once per
+# build_decrypted call. A delivery input dir CAN change between calls
+# (fixtures regenerate, tests append rows), so a hit additionally requires
+# the sidecar's (mtime_ns, size) fingerprint to match.
 _META_CACHE: dict[str, tuple] = {}
 _META_DF_CACHE: dict[str, tuple] = {}
-_FILES_CACHE: dict[str, tuple] = {}
 
 
 def _memo(cache: dict, key: str, entry: tuple) -> None:
@@ -71,29 +60,12 @@ def _memo(cache: dict, key: str, entry: tuple) -> None:
     cache[key] = entry
 
 
-def _dir_fingerprint(paths: list[str]) -> tuple:
-    out = []
-    for p in paths:
-        try:
-            st = os.stat(p)
-            out.append((p, st.st_mtime_ns, st.st_size))
-        except OSError:
-            out.append((p, None, None))
-    return tuple(out)
-
-
-def _enc_listing(input_dir: str) -> list[str]:
-    """Top-level ``*.enc`` files plus any subdirectories (the binaryFile
-    source can descend into partition-style subdirs; a subdir's mtime changes
-    whenever an entry is added/removed inside it, so including the dirs keeps
-    the fingerprint sensitive to nested changes)."""
+def _fingerprint(path: str) -> tuple | None:
     try:
-        with os.scandir(input_dir) as it:
-            return sorted(
-                e.path for e in it if e.name.endswith(".enc") or e.is_dir()
-            )
+        st = os.stat(path)
     except OSError:
-        return []
+        return None
+    return st.st_mtime_ns, st.st_size
 
 
 def _parse_sidecar(path: str) -> list[tuple[str, str, str, str]]:
@@ -132,7 +104,7 @@ def read_sidecar(input_dir: str) -> list[tuple[str, str, str, str]]:
     mutate it). A line that does not parse, or a row with a NULL, missing or
     non-string field, raises a ValueError naming the sidecar and the line."""
     sidecar = os.path.join(input_dir, SIDECAR)
-    fp = _dir_fingerprint([sidecar])
+    fp = _fingerprint(sidecar)
     cached = _META_CACHE.get(input_dir)
     if cached is not None and cached[0] == fp:
         return cached[1]
@@ -172,61 +144,52 @@ def read_encryption_meta(spark: SparkSession, input_dir: str) -> DataFrame:
     return df
 
 
-def listed_names(objects: DataFrame) -> frozenset[str]:
-    """The names of the files a file-source DataFrame's index lists, read
-    from the driver's file index in one py4j string (no Spark job)."""
-    # py4j passes no Java array to an Object[] or varargs parameter, and
-    # iterating one costs a round trip per element: wrap it, join it JVM-side
-    wrap = objects.sparkSession._jvm.scala.collection.immutable.ArraySeq.unsafeWrapArray
-    uris = wrap(objects._jdf.inputFiles()).mkString("\n")
-    return frozenset(unquote(u.rsplit("/", 1)[-1]) for u in uris.split("\n") if u)
-
-
-def require_listed(names, listed: frozenset[str], where: str) -> None:
-    """Fail, naming them, on manifest ``names`` the scan would not return: an
-    absent object, one outside the ``*.enc`` glob, or one the binaryFile
-    source hides because its name starts with ``_`` or ``.``. Without this
-    the content join drops them silently."""
-    missing = sorted(set(names) - listed)
-    if missing:
-        shown = ", ".join(missing[:20]) + (f" and {len(missing) - 20} more" if len(missing) > 20 else "")
+def stat_objects(input_dir: str, names) -> list[tuple[str, int]]:
+    """(path, length) of each manifest object ``names`` in ``input_dir``: one
+    ``os.stat`` per name, the driver's one listing of the pending objects
+    (S3DirectoryReader.kt:59-65). A name that is absent, not ``*.enc``, or
+    hidden (it starts with ``_`` or ``.``) raises a ValueError naming it,
+    so no manifest row can vanish from the job."""
+    found, bad = [], []
+    for name in names:
+        path = os.path.join(input_dir, name)
+        if name.startswith(("_", ".")) or not name.endswith(".enc") or os.sep in name:
+            bad.append(name)
+            continue
+        try:
+            st = os.stat(path)
+        except (FileNotFoundError, NotADirectoryError):
+            bad.append(name)
+            continue
+        if not stat.S_ISREG(st.st_mode):
+            bad.append(name)
+            continue
+        found.append((path, st.st_size))
+    if bad:
+        bad.sort()
+        shown = ", ".join(bad[:20]) + (f" and {len(bad) - 20} more" if len(bad) > 20 else "")
         raise ValueError(
-            f"{where}: {len(missing)} object(s) of the manifest are not returned by the scan "
+            f"{input_dir}: {len(bad)} object(s) of the manifest cannot be read "
             f"(absent, not *.enc, or hidden: a name starting with '_' or '.'): {shown}"
         )
+    return found
 
 
-def _directory_reader(spark: SparkSession, input_dir: str) -> tuple[DataFrame, frozenset[str]]:
-    """The memoized binaryFile reader over ``input_dir``'s ``*.enc`` objects,
-    and the names its listing holds."""
-    fp = _dir_fingerprint(_enc_listing(input_dir))
-    cached = _FILES_CACHE.get(input_dir)
-    if cached is not None and cached[0] is spark and cached[1] == fp:
-        return cached[2], cached[3]
-    reader = spark.read.format("binaryFile").option("pathGlobFilter", "*.enc").load(input_dir)
-    listed = listed_names(reader)
-    _memo(_FILES_CACHE, input_dir, (spark, fp, reader, listed))
-    return reader, listed
-
-
-def read_pending_objects(spark: SparkSession, input_dir: str, names: list[str]) -> DataFrame:
-    """(path, fileName, length, content) of the objects named ``names``: the
-    memoized directory reader filtered on ``_metadata.file_name``, one IN
-    expression that Spark applies while listing, so no other object is
-    opened. A name the listing lacks raises (``require_listed``)."""
-    reader, listed = _directory_reader(spark, input_dir)
-    require_listed(names, listed, input_dir)
-    cond = "false"
-    if names:
-        cond = f"_metadata.file_name IN ({', '.join(sql_strings(spark, sorted(set(names))))})"
-    return reader.filter(cond).selectExpr(*_OBJECT_COLUMNS)
+def read_object(path: str) -> bytes:
+    """One object's bytes, read whole: the reference's one GET per object
+    (S3Utils.kt:34-42). Every sink and parse task reads a delivered file
+    through this, one file at a time."""
+    with open(path, "rb") as fh:
+        return fh.read()
 
 
 def read_encrypted_files(spark: SparkSession, input_dir: str) -> DataFrame:
     """One row per encrypted object of ``input_dir`` that has a sidecar row:
     (fileName, path, length, content, iv, dataKeyEncryptionKeyId,
-    cipherText), every object scanned, finished or not."""
-    reader, _ = _directory_reader(spark, input_dir)
+    cipherText), every object scanned by a binaryFile reader, finished or
+    not. The delivery job does not call it; perfbench's
+    ``sources.listing.scan_s`` times it."""
+    reader = spark.read.format("binaryFile").option("pathGlobFilter", "*.enc").load(input_dir)
     meta = read_encryption_meta(spark, input_dir)
     return reader.selectExpr(*_OBJECT_COLUMNS).join(F.broadcast(meta), "fileName", "inner")
 

@@ -1,18 +1,16 @@
-"""S3 snapshot source: paginated listing + per-object encryption user-metadata,
-joined with the distributed binaryFile content scan.
+"""S3 snapshot source: paginated listing + per-object encryption user-metadata.
 
-Mirrors the reference's reader exactly (S3DirectoryReader.kt:31-98):
-  * one paginated ListObjectsV2 pass per run (:59-65 — the reference memoizes
-    the listing; here the driver does one listing and broadcasts it),
+Mirrors the reference's reader (S3DirectoryReader.kt:31-98):
+  * one paginated ListObjectsV2 pass per run (:59-65),
   * per-object HEAD for user metadata `iv`, `dataKeyEncryptionKeyId`,
     `cipherText` (:82-98); missing keys → the object is routed to a rejects
     list (the reference throws DataKeyDecryptionException),
-  * content itself is NOT fetched driver-side: the metadata DataFrame joins
-    against `spark.read.format("binaryFile").load("s3a://...")` so object
-    bytes stream straight into executor tasks.
+  * content itself is NOT fetched driver-side: the rows are the manifest
+    that ``delivery.route_and_decrypt`` routes, and each object's bytes are
+    read once, by the sink task that delivers it (``listing.read_object``).
 
 At 100 TB: listing ~100k objects is a driver-side metadata operation (MBs);
-content I/O is fully distributed via the s3a connector. HEAD calls are the
+content I/O is fully distributed over the sink's tasks. HEAD calls are the
 listing's per-object cost — issued from a thread pool, bounded by
 ``max_workers`` (≡ the reference's 50-connection pool, AWSConfiguration.kt:53).
 """
@@ -20,11 +18,6 @@ listing's per-object cost — issued from a thread pool, bounded by
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
-from .listing import ENCRYPTION_META_SCHEMA
 
 METADATA_KEYS = ("iv", "datakeyencryptionkeyid", "ciphertext")  # S3 lowercases user metadata
 
@@ -71,37 +64,3 @@ def list_objects_with_metadata(
             else:
                 rejected.append(key)
     return rows, rejected
-
-
-def read_encrypted_files_s3(
-    spark: SparkSession,
-    bucket: str,
-    prefix: str,
-    s3_client=None,
-    max_workers: int = 16,
-    objects_path: str | None = None,
-) -> tuple[DataFrame, list[str]]:
-    """EncryptedStream DataFrame from S3: binaryFile scan of the prefix joined
-    with the broadcast metadata listing. Returns (files_df, rejected_keys).
-
-    ``objects_path`` overrides the content-scan URI (default
-    ``s3a://bucket/prefix``) — lets integration tests join a real HTTP-stub
-    listing against a local object directory when no s3a connector jars are
-    on the classpath; production leaves it None."""
-    if s3_client is None:
-        import boto3
-
-        s3_client = boto3.client("s3")
-    rows, rejected = list_objects_with_metadata(s3_client, bucket, prefix, max_workers)
-    meta = spark.createDataFrame(rows or [], ENCRYPTION_META_SCHEMA)
-    objects = (
-        spark.read.format("binaryFile")
-        .load(objects_path or f"s3a://{bucket}/{prefix}")
-        .select(
-            F.col("path"),
-            F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"),
-            F.col("length"),
-            F.col("content"),
-        )
-    )
-    return objects.join(F.broadcast(meta), "fileName", "inner"), rejected

@@ -10,9 +10,11 @@ exactly-once delivery across restarts — the streaming generalization of the
 reference's restart contract). The epoch markers ``<status>/_epoch_N.committed``
 are kept by the services' shared ledger, streaming/epochs.py.
 
-Local fixture layout (same as plans/delivery): encrypted objects + a
-metadata sidecar. The metadata side is re-read per batch (it grows with the
-prefix); at scale it is the driver-side listing delta.
+Local fixture layout (same as plans/delivery): encrypted objects, whose
+metadata rows arrive as files under ``meta_stream/``; at scale those are the
+driver-side listing delta. Each micro-batch opens exactly its own objects,
+by path, in the batch job's sink tasks (``deliver_batch``), so per-batch I/O
+is O(batch) however large the prefix has grown.
 """
 
 from __future__ import annotations
@@ -23,26 +25,18 @@ import time
 import zlib
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..plans import delivery
-from ..sources.listing import (
-    ENCRYPTION_META_SCHEMA,
-    listed_names,
-    meta_row,
-    require_listed,
-    unfinished,
-)
+from ..sources.listing import ENCRYPTION_META_SCHEMA, meta_row, unfinished
 from .epochs import EpochLog, run_epochs
 
 
 def read_encrypted_stream(spark: SparkSession, input_dir: str) -> DataFrame:
-    """File-stream source over the encrypted prefix; binaryFile isn't a
-    streaming source, so the stream carries (path, fileName) from the text
-    listing of object names via the parquet-less 'binaryFile'... workaround:
-    stream the metadata sidecar (one row per landed object) and join content
-    per batch in foreachBatch. The sidecar IS the arrival signal — exactly the
-    listing delta a scale deployment streams from S3 inventory/SQS events."""
+    """The arrival signal: a file-stream source over the metadata rows under
+    ``meta_stream/`` (one ``META_COLUMNS`` row per landed object); each
+    micro-batch's objects are read by path in foreachBatch. It is exactly
+    the listing delta a scale deployment streams from S3 inventory/SQS
+    events."""
     return (
         spark.readStream.schema(ENCRYPTION_META_SCHEMA)
         .json(os.path.join(input_dir, "meta_stream"))
@@ -90,63 +84,34 @@ def poll_arrivals(
     return [r["fileName"] for r in new]
 
 
-def read_batch_objects(spark: SparkSession, input_dir: str, names) -> DataFrame:
-    """Read EXACTLY one micro-batch's encrypted objects as (path, fileName,
-    content).
+def deliver_batch(
+    spark: SparkSession, input_dir: str, output_dir: str, status_dir: str, rows, key_lookup
+) -> dict:
+    """Deliver one micro-batch's manifest ``rows`` (``META_COLUMNS`` tuples)
+    through the batch job's route and sink; returns the files delivered and
+    rejected and the records delivered.
 
-    The batch's file names are already known driver-side (the tiny metadata
-    rows ARE the arrival signal), so the binaryFile source is given the
-    explicit per-file path list — per-batch I/O is O(batch), never O(corpus).
-    The batch job instead filters its memoized directory reader on
-    ``_metadata.file_name`` (``listing.read_pending_objects``), which Spark
-    applies while listing. That suits one listing per run, not this stream:
-    its prefix grows with every arrival, so each micro-batch would re-list
-    every object ever landed — quadratic total listing over a continuous
-    service's lifetime. The reference reads each object exactly once
-    (S3DirectoryReader.kt:59-65: paginated listing, one GET per listed key);
-    the explicit path list is the streaming equivalent of that contract.
-    Its cost: up to 32 paths
-    (``spark.sql.sources.parallelPartitionDiscovery.threshold``) are resolved
-    on the driver; beyond that Spark resolves them with a parallel listing
-    job of one task per path. Measured warm on 4 cores: 32 paths 0.13-0.18 s
-    and no Spark job, 40 paths 0.48-0.73 s and one 40-task job.
-
-    Signalled-but-absent files (deleted between the arrival signal and this
-    replayed batch — ops TTL/cleanup) are probed out driver-side first
-    (O(batch) existence probes ≡ one HEAD per batch file at S3 scale): an
-    explicit `load` of a missing path raises, which would wedge the replaying
-    epoch in a crash loop; the survivors still deliver, matching the old
-    prefix-scan behavior. Deletion races are closed in two layers: a file
-    vanishing between the probe and load-time path RESOLUTION still raises
-    at `load` (verified: ignoreMissingFiles does NOT cover that sub-window),
-    so the probe+load is retried with a re-probed list; one vanishing after
-    resolution but before the executor's read is skipped by
-    ``ignoreMissingFiles`` (the sub-window that option does cover). A present
-    file the source hides (a name starting with ``_`` or ``.``) raises a
-    ValueError naming it (``listing.require_listed``)."""
-    from pyspark.errors import AnalysisException
-
-    last_err: Exception | None = None
-    for _ in range(3):
-        paths = [
-            p
-            for p in (os.path.join(input_dir, name) for name in sorted(names))
-            if os.path.exists(p)
-        ]
-        if not paths:
-            return spark.createDataFrame([], "fileName string, content binary")
-        try:
-            objects = spark.read.format("binaryFile").option("ignoreMissingFiles", "true").load(paths)
-        except AnalysisException as e:  # a probed path vanished pre-resolution
-            last_err = e
-            continue
-        require_listed([os.path.basename(p) for p in paths], listed_names(objects), input_dir)
-        return objects.select(
-            F.col("path"),
-            F.element_at(F.split(F.col("path"), "/"), -1).alias("fileName"),
-            F.col("content"),
-        )
-    raise last_err
+    Rows with a ``.finished`` marker are dropped first (one probe per row,
+    the batch job's restart filter, FinishedFilterProcessor.kt:17-27), so a
+    replayed epoch whose marker was lost re-delivers nothing. So are rows
+    whose object is gone (deleted between the arrival signal and this
+    replayed batch — ops TTL/cleanup): the survivors deliver and the epoch
+    commits, where a missing object would otherwise fail every replay and
+    wedge the stream. A present object the batch job cannot read (hidden,
+    not ``*.enc``) raises a ValueError naming it (``listing.stat_objects``).
+    An object deleted after that check but before its task opens it fails
+    the epoch, naming the file; the replay then drops it as gone. The
+    stream blocks no topics."""
+    rows = [
+        r for r in unfinished(rows, status_dir)
+        if os.path.exists(os.path.join(input_dir, r[0]))
+    ]
+    counts = dict.fromkeys(("delivered", "records", "rejected"), 0)
+    if rows:
+        result = delivery.route_and_decrypt(spark, input_dir, rows, key_lookup)
+        tally = delivery.tally(delivery.deliver(result, output_dir, status_dir))
+        counts = {k: tally[k] for k in counts}
+    return counts
 
 
 def run_streaming_delivery(
@@ -160,11 +125,11 @@ def run_streaming_delivery(
     """Drive the continuous delivery to completion over currently-available
     input (Trigger.AvailableNow). Returns the list of processed epoch ids.
 
-    foreachBatch body = the batch pipeline stages on the batch's file set:
-    metadata rows → key lookup and content join (read per batch) →
-    grammar/topic routing (``delivery.route_and_decrypt``) → the batch
-    ``deliver()`` sink (per file: decrypt, gunzip check, atomic rename +
-    marker, fully distributed — decrypted bytes never reach the driver).
+    foreachBatch body = the batch pipeline stages on the batch's file set
+    (``deliver_batch``): metadata rows → key lookup and grammar/topic
+    routing (``delivery.route_and_decrypt``) → the batch ``deliver()`` sink
+    (per file: read by path, decrypt, gunzip check, atomic rename + marker,
+    fully distributed — decrypted bytes never reach the driver).
     The epoch's marker (``epochs.EpochLog``, fingerprint = crc of every
     file's name, iv and cipherText) makes redelivery of a replayed batch a
     no-op, refuses a different batch under a reused epoch id, and records
@@ -187,29 +152,9 @@ def run_streaming_delivery(
         fp = {"v": 2, "n": len(rows), "x": 0}
         for name, iv, _, cipher_text in rows:
             fp["x"] ^= zlib.crc32(b"\x00".join((name.encode(), iv.encode(), cipher_text.encode())))
-        return fp, lambda: deliver_batch(rows)
-
-    def deliver_batch(rows) -> dict:
-        # the reference's already-processed filter (FinishedFilterProcessor
-        # semantics), the batch job's marker probe: per-FILE idempotence — a
-        # replayed epoch whose marker was lost re-delivers nothing that
-        # already has a .finished marker. One probe per batch file, NOT a
-        # scan of the whole marker dir, which would grow
-        # O(everything-ever-delivered) per batch.
-        rows = unfinished(rows, status_dir)  # Rows in META_COLUMNS order
-        counts = dict.fromkeys(("delivered", "records", "rejected"), 0)
-        if rows:
-            # explicit path list: this batch's bytes and ONLY this batch's
-            # bytes are read — O(batch) I/O regardless of how large the
-            # standing prefix has grown (see read_batch_objects)
-            objects = read_batch_objects(spark, input_dir, {r[0] for r in rows})
-            # the batch plan's routing and key lookup, on this batch's
-            # objects and manifest; the stream blocks no topics
-            result = delivery.route_and_decrypt(spark, objects, rows, key_lookup)
-            # the batch receipt sink: the executors deliver the micro-batch
-            tally = delivery.tally(delivery.deliver(result, output_dir, status_dir))
-            counts = {k: tally[k] for k in counts}
-        return counts
+        return fp, lambda: deliver_batch(
+            spark, input_dir, output_dir, status_dir, rows, key_lookup
+        )
 
     return run_epochs(
         read_encrypted_stream(spark, input_dir), checkpoint_dir,

@@ -1,8 +1,8 @@
 """Subprocess harness for the speculative-execution idempotence test.
 
-Runs the delivery receipt sink in its OWN SparkSession with
-``spark.speculation=true`` (a core conf — it cannot be enabled on the shared
-test session) and one induced straggler task. NOTE: Spark's TaskSchedulerImpl
+Runs the delivery receipt sink's writer (``deliver_batches``) in its OWN
+SparkSession with ``spark.speculation=true`` (a core conf — it cannot be
+enabled on the shared test session) and one induced straggler task. NOTE: Spark's TaskSchedulerImpl
 only starts the speculation thread on cluster backends, so local mode never
 actually launches a duplicate attempt (empirically confirmed: a 6 s straggler
 against a ms-median with multiplier 1.0 / quantile 0.1 produced none); this
@@ -87,7 +87,12 @@ def main() -> None:
         return b
 
     slow = df.withColumn("content", slow_identity("content", "fileName"))
-    delivery.deliver(delivery.DeliveryResult(slow), out_dir, status_dir)
+    os.makedirs(out_dir, exist_ok=True)
+    os.makedirs(status_dir, exist_ok=True)
+    slow.mapInArrow(
+        lambda batches: delivery.deliver_batches(out_dir, status_dir, batches),
+        delivery.RECEIPT_SCHEMA,
+    ).toArrow()
 
     outs = sorted(os.listdir(out_dir))
     markers = sorted(p for p in os.listdir(status_dir) if p.endswith(".finished"))

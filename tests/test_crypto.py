@@ -35,18 +35,22 @@ def test_ctr_counter_wraparound():
     assert _ctr_transform(_ctr_transform(data, key, iv), key, iv) == data
 
 
-def test_parse_records_roundtrip(spark):
-    """An AES-CTR encrypted gzip payload decrypts and gunzips back to its
-    lines through Spark (``parse_records``' one mapInArrow crossing)."""
+def test_parse_records_roundtrip(spark, tmp_path):
+    """An AES-CTR encrypted gzip payload, read from its path, decrypts and
+    gunzips back to its lines through Spark (``parse_records``' one
+    mapInArrow crossing)."""
     from snapshot_sender_spark.plans import delivery
 
     key = os.urandom(32)
     iv = os.urandom(16)
     payload = b'{"a": 1}\n{"a": 2}\n'
     enc = _ctr_transform(gzip.compress(payload), key, iv)
+    path = tmp_path / "f.enc"
+    path.write_bytes(enc)
     df = spark.createDataFrame(
-        [("f.enc", "t", enc, base64.b64encode(key).decode(), base64.b64encode(iv).decode())],
-        "fileName string, topic string, content binary, plaintextKey string, iv string",
+        [("f.enc", "t", str(path), len(enc),
+          base64.b64encode(key).decode(), base64.b64encode(iv).decode())],
+        "fileName string, topic string, path string, length long, plaintextKey string, iv string",
     )
     out = delivery.parse_records(df).collect()
     assert [r["line"] for r in out] == ['{"a": 1}', '{"a": 2}']

@@ -379,6 +379,22 @@ def test_deliver_plan_has_one_python_node(spark, tmp_path, monkeypatch):
     assert [n for n in nodes if re.search("Python|Pandas|Arrow", n)] == ["MapInArrow"]
 
 
+def test_pack_balances_bins_by_length():
+    """The sink's bins are packed by length, largest first into the
+    least-loaded bin: on delivery_mixed's shape (8 large files among 50
+    small ones, 4 bins) each bin gets 2 large files, and the largest bin's
+    load stays within 1.5x the median bin's."""
+    large = [400_000 + 1_500 * i for i in range(8)]
+    small = [600 + 7 * i for i in range(50)]
+    lengths = small[:25] + large + small[25:]
+    bins = delivery.pack(lengths, 4)
+    assert sorted(i for b in bins for i in b) == list(range(len(lengths)))
+    big = set(range(25, 33))
+    assert [len(big & set(b)) for b in bins] == [2, 2, 2, 2]
+    loads = sorted(sum(lengths[i] for i in b) for b in bins)
+    assert loads[-1] <= 1.5 * (loads[1] + loads[2]) / 2
+
+
 def test_parse_records_kernel_matches_expr(spark, fixture):
     """parse_records' fused path is a single mapInArrow kernel (r13:
     decrypt → gunzip → split → blank-drop in one crossing); pin EXACT result
@@ -398,9 +414,10 @@ def test_parse_records_kernel_matches_expr(spark, fixture):
     payloads = spark.createDataFrame(
         [
             (r["fileName"], r["topic"],
-             gz.decompress(crypto.decrypt_payload(r["content"], r["plaintextKey"], r["iv"]))
-             .decode("utf-8", errors="replace"))
-            for r in dec.select("fileName", "topic", "content", "plaintextKey", "iv").collect()
+             gz.decompress(crypto.decrypt_payload(
+                 open(r["path"], "rb").read(), r["plaintextKey"], r["iv"]
+             )).decode("utf-8", errors="replace"))
+            for r in dec.select("fileName", "topic", "path", "plaintextKey", "iv").collect()
         ],
         "fileName string, topic string, payload string",
     )
@@ -480,11 +497,14 @@ def test_parse_records_kernel_blank_and_null_semantics(spark, tmp_path):
     assert lines == ["a", "\tx", "\rb", "bad��line"]
 
     # the delivery sink's receipt counts the same lines as records
+    path = tmp_path / "f1.txt.gz.enc"
+    path.write_bytes(enc(body))
     routed = spark.createDataFrame(
         [("f1.txt.gz.enc", "f1.json.gz", "t", "db", "coll", "delivered",
-          bytearray(enc(body)), kb, ivb)],
+          str(path), path.stat().st_size, kb, ivb)],
         "fileName string, outputFileName string, topic string, database string, "
-        "collection string, route string, content binary, plaintextKey string, iv string",
+        "collection string, route string, path string, length long, plaintextKey string, "
+        "iv string",
     )
     [receipt] = delivery.deliver(
         delivery.DeliveryResult(routed), str(tmp_path / "out"), str(tmp_path / "status")
@@ -637,10 +657,10 @@ def test_local_strings_df_roundtrip(spark):
 
 
 def test_listing_memo_revalidates_on_change(spark, tmp_path):
-    """The reader-handle memos (sources/listing.py, r13) must hit only while
-    the input files are byte-identical on disk: same dir unchanged -> same
-    plan handle (no reader rebuild); any mutation -> fresh reader whose scan
-    sees the new bytes."""
+    """The sidecar memos (sources/listing.py) must hit only while the
+    sidecar is byte-identical on disk: unchanged -> same plan handle; any
+    mutation -> a fresh one. ``read_encrypted_files``' scan sees the
+    deletion."""
     from snapshot_sender_spark.sources import listing
 
     root = str(tmp_path / "memo_fixture")

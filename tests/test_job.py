@@ -168,10 +168,10 @@ def test_job_counts_every_route_from_the_receipts(spark, tmp_path, monkeypatch):
     )
 
 
-def test_delivery_job_runs_two_spark_jobs(spark, tmp_path):
-    """A delivery job runs 2 Spark jobs: the broadcast of the manifest, which
-    carries each file's resolved key, and the sink, whose action returns the
-    receipts the counts come from. Pinned on a fixture with a pre-marked file
+def test_delivery_job_runs_one_spark_job(spark, tmp_path):
+    """A delivery job runs 1 Spark job: the sink, whose action returns the
+    receipts the counts come from. The manifest, each file's resolved key and
+    its route stay on the driver. Pinned on a fixture with a pre-marked file
     and a rejected name."""
     f = fx.generate(str(tmp_path), n_files=3, records_per_file=3, seed=53)
     sidecar = os.path.join(f.input_dir, "metadata.sidecar.jsonl")
@@ -190,13 +190,13 @@ def test_delivery_job_runs_two_spark_jobs(spark, tmp_path):
     try:
         report = job.run_delivery_job(
             spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "status_table"),
-            delivery.RunConfig(correlation_id="two-jobs", topic_name=f.topic),
+            delivery.RunConfig(correlation_id="one-job", topic_name=f.topic),
         )
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
     assert (report.files_delivered, report.rejected, report.records_parsed) == (2, 1, 6)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_status_phase_starts_no_spark_job(spark, tmp_path, monkeypatch):
@@ -416,14 +416,14 @@ def test_build_decrypted_starts_no_spark_job(spark, tmp_path):
 
 
 def test_premarked_object_is_never_opened(spark, tmp_path):
-    """The scan lists only pending objects: with binaryFile's maxLength below
-    the size of a pre-marked object, and above the others, the job still
-    delivers the others (reading that object would fail the job)."""
+    """Only pending objects are opened: a pre-marked object whose file is
+    gone from disk, while its sidecar row and its marker stay, does not
+    stop the job from delivering the others (opening it would fail the
+    job)."""
     f = fx.generate(str(tmp_path / "a"), n_files=2, records_per_file=3, seed=39)
     big = fx.generate(
         str(tmp_path / "b"), topic="db.core.big", n_files=1, records_per_file=400, seed=40
     )
-    shutil.copy(os.path.join(big.input_dir, big.files[0]), f.input_dir)
     sidecar = "metadata.sidecar.jsonl"
     with open(os.path.join(big.input_dir, sidecar)) as src, open(
         os.path.join(f.input_dir, sidecar), "a"
@@ -432,25 +432,21 @@ def test_premarked_object_is_never_opened(spark, tmp_path):
     with open(os.path.join(f.status_dir, big.files[0] + ".finished"), "w") as fh:
         fh.write(f"Finished {big.files[0]}")
     small = max(os.path.getsize(os.path.join(f.input_dir, n)) for n in f.files)
-    large = os.path.getsize(os.path.join(f.input_dir, big.files[0]))
+    large = os.path.getsize(os.path.join(big.input_dir, big.files[0]))
     assert small < large
-    conf = "spark.sql.sources.binaryFile.maxLength"
-    spark.conf.set(conf, str((small + large) // 2))
-    try:
-        report = job.run_delivery_job(
-            spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "status_table"),
-            delivery.RunConfig(correlation_id="unopened", topic_name=f.topic),
-        )
-    finally:
-        spark.conf.unset(conf)
+    assert not os.path.exists(os.path.join(f.input_dir, big.files[0]))
+    report = job.run_delivery_job(
+        spark, f.input_dir, f.status_dir, f.output_dir, str(tmp_path / "status_table"),
+        delivery.RunConfig(correlation_id="unopened", topic_name=f.topic),
+    )
     assert report.files_delivered == 2
     assert report.records_parsed == 6
 
 
 def test_hidden_object_fails_the_job_naming_it(spark, tmp_path):
-    """A valid name starting with ``_`` is hidden by the binaryFile source.
-    Its manifest row must fail the job, naming it, before anything is
-    delivered — not vanish while the job reports Sent."""
+    """A valid name starting with ``_`` is a hidden object. Its manifest row
+    must fail the job, naming it, before anything is delivered — not vanish
+    while the job reports Sent."""
     f = fx.generate(str(tmp_path), n_files=3, records_per_file=3, seed=41)
     hidden = "_core.claimant-045-050-000001.txt.gz.enc"
     os.rename(os.path.join(f.input_dir, f.files[0]), os.path.join(f.input_dir, hidden))

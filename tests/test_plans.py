@@ -90,18 +90,29 @@ def test_no_python_udf_in_relational_hot_path(spark, sf_dir):
         assert "ArrowEvalPython" not in plan, name
 
 
-def test_delivery_content_never_shuffles(spark, tmp_path):
-    """The delivery plan's joins must all broadcast the small side — the
-    multi-TB binary content column never crosses an exchange."""
+def test_delivery_content_never_shuffles(spark, tmp_path, monkeypatch):
+    """The multi-TB content never crosses an exchange: the plan the sink
+    runs through toArrow has no exchange and no shuffle join."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
     from snapshot_sender_spark.plans import delivery
     from snapshot_sender_spark.sources import fixtures as fx
 
     f = fx.generate(str(tmp_path), n_files=3, records_per_file=5, seed=5)
+    plans = []
+    to_arrow = DataFrame.toArrow
+
+    def capture(self, *args, **kwargs):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return to_arrow(self, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "toArrow", capture)
     cfg = delivery.RunConfig(correlation_id="p", topic_name=f.topic)
     result = delivery.build_decrypted(spark, f.input_dir, f.status_dir, cfg)
-    plan = result.delivered._jdf.queryExecution().executedPlan().toString()
+    delivery.deliver(result, f.output_dir, f.status_dir)
+    [plan] = plans
     assert "SortMergeJoin" not in plan
-    assert "ShuffleExchange" not in plan.replace("BroadcastExchange", "")
+    assert "Exchange" not in plan
 
 
 def test_curation_plans(spark, sf_dir):
@@ -438,10 +449,10 @@ def test_streaming_delivery_no_driver_content_collect():
             assert "decrypted" not in line and "content" not in line, line
     # the distributed sink is actually in the path
     assert "delivery.deliver(" in src
-    # per-batch binaryFile reads take an explicit path list, never the whole
-    # prefix (a derived-fileName filter can't push down to the source — the
-    # round-3 judge's O(corpus)-per-batch finding)
-    assert "read_batch_objects(" in src
+    # per-batch reads go through the batch job's shared route and sink, which
+    # open the batch's own objects by path, never a scan of the whole prefix
+    # (O(corpus) I/O per batch)
+    assert "delivery.route_and_decrypt(" in src
     assert ".load(input_dir)" not in src
 
 

@@ -404,7 +404,8 @@ def test_repetition_removal_matches_python_model(spark, docs):
 def test_duplicate_attempts_race_is_idempotent(spark, tmp_path):
     """Speculative execution's hazard, driven deterministically: every file is
     delivered by TWO tasks running concurrently (each copy in its own
-    partition, all tasks aligned by a sleep so writes overlap). The sink's
+    partition, all tasks aligned by a sleep so writes overlap), each running
+    the sink's writer (``deliver_batches``). Its
     per-attempt tmp + atomic-replace contract must leave exactly one output
     per file with intact bytes, exactly one marker, and zero tmp leftovers —
     the same guarantee a speculative duplicate attempt relies on."""
@@ -446,7 +447,12 @@ def test_duplicate_attempts_race_is_idempotent(spark, tmp_path):
         return b
 
     raced = dup.withColumn("content", aligned("content")).drop("copy")
-    delivery.deliver(delivery.DeliveryResult(raced), out_dir, status_dir)
+    os.makedirs(out_dir)
+    os.makedirs(status_dir)
+    raced.mapInArrow(
+        lambda batches: delivery.deliver_batches(out_dir, status_dir, batches),
+        delivery.RECEIPT_SCHEMA,
+    ).toArrow()
     outs = sorted(os.listdir(out_dir))
     assert outs == sorted(f[1] for f in files[::2])  # one output per file, no tmp junk
     for i in range(8):

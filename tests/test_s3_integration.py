@@ -3,9 +3,9 @@ speaks actual wire protocol — signed requests, ListObjectsV2 XML with
 continuation-token pagination, HEAD user-metadata headers — instead of the
 botocore Stubber's canned dicts. Covers the reference's integration tier
 (S3DirectoryReaderTest.kt:217-274 pagination/truncation;
-SnapshotSenderIntegrationTest.kt:39-102 listing⋈content end-to-end, with the
-content scan pointed at a local directory because no s3a connector jars ship
-in this environment — the join plan is identical either way)."""
+SnapshotSenderIntegrationTest.kt:39-102 listing → content end-to-end, with
+the objects read from a local directory because no s3a connector jars ship
+in this environment)."""
 
 import os
 import threading
@@ -16,10 +16,7 @@ import boto3
 import pytest
 from botocore.config import Config
 
-from snapshot_sender_spark.sources.s3 import (
-    list_objects_with_metadata,
-    read_encrypted_files_s3,
-)
+from snapshot_sender_spark.sources.s3 import list_objects_with_metadata
 
 PAGE_SIZE = 2  # force multi-page listings even for small fixtures
 
@@ -150,14 +147,13 @@ def test_http_stub_empty_prefix(s3_stub):
 
 
 def test_listing_joins_content_end_to_end(spark, s3_stub, tmp_path):
-    """The full source: paginated stub listing + HEAD metadata broadcast-joined
-    against the distributed binaryFile content scan, then AES-CTR decrypted —
-    the reference's SnapshotSenderIntegrationTest shape. Objects whose
-    metadata is missing never reach the scan output."""
-    from pyspark.sql import functions as F
-
-    from snapshot_sender_spark.functions import crypto
+    """The full source: paginated stub listing + HEAD metadata rows routed
+    through the delivery path, whose tasks read each object by path, then
+    AES-CTR decrypted — the reference's SnapshotSenderIntegrationTest
+    shape. Objects whose metadata is missing never reach the sink."""
+    from snapshot_sender_spark.plans import delivery
     from snapshot_sender_spark.sources import fixtures as fx
+    from snapshot_sender_spark.sources.listing import meta_row
 
     f = fx.generate(str(tmp_path / "gen"), n_files=5, records_per_file=3, seed=77)
     client, objects = s3_stub
@@ -177,36 +173,17 @@ def test_listing_joins_content_end_to_end(spark, s3_stub, tmp_path):
                 objects, f"exports/{name}", body=body,
                 iv=m["iv"], key_id=m["dataKeyEncryptionKeyId"], cipher=m["cipherText"],
             )
-    files_df, rejected = read_encrypted_files_s3(
-        spark, "bucket", "exports/", s3_client=client,
-        objects_path=os.path.join(str(f.input_dir), "*.enc"),
+    rows, rejected = list_objects_with_metadata(client, "bucket", "exports/")
+    result = delivery.route_and_decrypt(
+        spark, f.input_dir, [meta_row(r, "exports/") for r in rows], delivery.key_lookup_local
     )
-    joined = files_df.collect()
-    assert len(joined) == 4  # 5 objects − 1 metadata-less reject
+    assert result.delivered.count() == 4  # 5 objects − 1 metadata-less reject
     assert len(rejected) == 1
-    # decrypt proves iv/cipherText survived the HTTP hop intact
-    from snapshot_sender_spark.plans.delivery import key_lookup_local
-
-    keys = {
-        (kid, ct): pk
-        for kid, ct, pk in key_lookup_local(
-            [(r["dataKeyEncryptionKeyId"], r["cipherText"]) for r in joined]
-        )
-    }
-    keys_df = spark.createDataFrame(
-        [(k[0], k[1], v) for k, v in keys.items()],
-        "dataKeyEncryptionKeyId string, cipherText string, plaintextKey string",
-    )
-    decrypted = (
-        files_df.join(F.broadcast(keys_df), ["dataKeyEncryptionKeyId", "cipherText"])
-        .select("fileName", "content", "plaintextKey", "iv")
-        .collect()
-    )
-    assert len(decrypted) == 4
-    for row in decrypted:
-        _, chunks = crypto.open_payload(*row)
-        lines = b"\n".join(chunks).decode().strip().split("\n")
-        assert len(lines) == 3  # records_per_file round-trips
+    # the parse proves iv/cipherText survived the HTTP hop intact
+    records = delivery.parse_records(result.delivered)
+    lines = {r["fileName"]: r["count"] for r in records.groupBy("fileName").count().collect()}
+    assert len(lines) == 4
+    assert set(lines.values()) == {3}  # records_per_file round-trips
 
 
 def test_streaming_delivery_from_stub_listing(spark, s3_stub, tmp_path):

@@ -13,6 +13,7 @@ import pytest
 
 from snapshot_sender_spark.plans import delivery
 from snapshot_sender_spark.sources import fixtures as fx
+from snapshot_sender_spark.sources import listing
 from snapshot_sender_spark.streaming import delivery_stream as ds
 
 
@@ -74,26 +75,46 @@ def test_streaming_delivery_across_restarts(spark, tmp_path):
         assert len(lines) == 4
 
 
-def test_batch_object_read_is_scoped_to_the_batch(spark, tmp_path):
-    """read_batch_objects must read ONLY the named files — per-batch I/O is
+def _record_sink_rows(monkeypatch, opened):
+    """Wrap the shared sink's per-file tasks so each call appends the set of
+    file names it opens to ``opened``."""
+    real = delivery.file_tasks
+
+    def recording(spark, rows, *args):
+        opened.append({r["fileName"] for r in rows})
+        return real(spark, rows, *args)
+
+    monkeypatch.setattr(delivery, "file_tasks", recording)
+
+
+def test_batch_object_read_is_scoped_to_the_batch(spark, tmp_path, monkeypatch):
+    """A micro-batch must open ONLY its own files — per-batch I/O is
     O(batch), not O(prefix). With 5 objects landed and a 2-file batch, the
-    DataFrame's input files are exactly those 2 paths (the old
-    load(prefix) + derived-column isin shape scanned all 5: the filter can't
-    push down to the binaryFile source). Guards the round-3 judge finding."""
+    rows the shared sink receives are exactly those 2 files (the old
+    load(prefix) + derived-column isin shape scanned all 5)."""
     f = fx.generate(str(tmp_path / "gen"), n_files=5, records_per_file=2, seed=52)
     input_dir = str(tmp_path / "landing")
     os.makedirs(input_dir)
     _land(f, input_dir, f.files)  # all 5 on disk
     batch = f.files[:2]
-    df = ds.read_batch_objects(spark, input_dir, batch)
-    scanned = {p.rsplit("/", 1)[-1] for p in df.inputFiles()}
-    assert scanned == set(batch)
-    assert df.count() == 2
+    rows = [
+        listing.meta_row(json.loads(line), "sidecar")
+        for line in open(os.path.join(f.input_dir, "metadata.sidecar.jsonl"))
+        if json.loads(line)["fileName"] in batch
+    ]
+    opened = []
+    _record_sink_rows(monkeypatch, opened)
+    counts = ds.deliver_batch(
+        spark, input_dir, str(tmp_path / "out"), str(tmp_path / "status"), rows,
+        delivery.key_lookup_local,
+    )
+    assert opened == [set(batch)]
+    assert counts["delivered"] == 2
 
 
 def test_second_micro_batch_reads_only_its_own_files(spark, tmp_path, monkeypatch):
-    """End-to-end: across two waves, each micro-batch's binaryFile scan covers
-    exactly that wave's arrivals — wave 2's scan never re-reads wave 1's
+    """End-to-end: across two waves, the files each micro-batch's sink opens
+    are exactly that wave's arrivals — wave 2 never re-reads wave 1's
     objects even though they still sit under the prefix."""
     f = fx.generate(str(tmp_path / "gen"), n_files=5, records_per_file=2, seed=53)
     input_dir = str(tmp_path / "landing")
@@ -103,14 +124,7 @@ def test_second_micro_batch_reads_only_its_own_files(spark, tmp_path, monkeypatc
     os.makedirs(input_dir)
 
     scans = []
-    real = ds.read_batch_objects
-
-    def recording(sp, d, names):
-        df = real(sp, d, names)
-        scans.append({p.rsplit("/", 1)[-1] for p in df.inputFiles()})
-        return df
-
-    monkeypatch.setattr(ds, "read_batch_objects", recording)
+    _record_sink_rows(monkeypatch, scans)
     from snapshot_sender_spark.plans import delivery as dl
 
     _land(f, input_dir, f.files[:2])
@@ -126,6 +140,29 @@ def test_second_micro_batch_reads_only_its_own_files(spark, tmp_path, monkeypatc
     # wave-2 batches are disjoint from wave 1's files: no re-read, ever
     wave2 = [s for s in scans if s & set(f.files[2:])]
     assert wave2 and all(not (s & set(f.files[:2])) for s in wave2)
+
+
+def test_micro_batch_of_40_files_runs_one_spark_job(spark, tmp_path):
+    """A 40-file micro-batch is delivered by one Spark job, the sink's: the
+    batch's objects are opened by path in its tasks, with no listing job
+    and no broadcast of the manifest."""
+    f = fx.generate(str(tmp_path / "gen"), n_files=40, records_per_file=2, seed=58)
+    rows = [
+        listing.meta_row(json.loads(line), "sidecar")
+        for line in open(os.path.join(f.input_dir, "metadata.sidecar.jsonl"))
+    ]
+    sc = spark.sparkContext
+    group = "micro-batch-jobs"
+    sc.setJobGroup(group, "deliver_batch")
+    try:
+        counts = ds.deliver_batch(
+            spark, f.input_dir, f.output_dir, f.status_dir, rows, delivery.key_lookup_local
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # the tracker is fed asynchronously
+    assert counts == {"delivered": 40, "records": 80, "rejected": 0}
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_stale_epoch_marker_with_different_arrivals_fails_loudly(spark, tmp_path):
@@ -320,9 +357,9 @@ def test_signalled_but_deleted_file_does_not_wedge_the_stream(spark, tmp_path):
 
 
 def test_hidden_arrival_fails_the_batch_naming_it(spark, tmp_path):
-    """An arrival whose object the binaryFile source hides (a name starting
-    with ``_``) fails the micro-batch naming it, instead of vanishing from an
-    epoch that commits."""
+    """An arrival whose object is hidden (a name starting with ``_``) fails
+    the micro-batch naming it, instead of vanishing from an epoch that
+    commits."""
     f = fx.generate(str(tmp_path / "gen"), n_files=2, records_per_file=2, seed=54)
     hidden = "_core.claimant-045-050-000001.txt.gz.enc"
     os.rename(os.path.join(f.input_dir, f.files[0]), os.path.join(f.input_dir, hidden))

@@ -8,9 +8,9 @@ Usage:
 
 ``delivery``: generates (once, cached under /tmp) an encrypted fixture of
 n_files x records_per_file, lands every file + one arrival sidecar, then runs
-the full streaming delivery service (arrival signal -> scoped binaryFile
-reads -> key broadcast -> AES-CTR decrypt -> receipt sink + markers
-+ epoch commit) over fresh output/status/checkpoint dirs per lap: one cold
+the full streaming delivery service (arrival signal -> key lookup and
+routing -> per-file reads by path -> AES-CTR decrypt -> receipt sink +
+markers + epoch commit) over fresh output/status/checkpoint dirs per lap: one cold
 lap, then ``warm_laps`` (default 2) more; prints cold + min-warm seconds.
 
 ``dedup``: steady-state shape — the tier's documents table is split 90/10 by
